@@ -18,8 +18,6 @@ and the sum is cast back to float32
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 
 from .smallfloat import LENGTH_TABLE
@@ -60,30 +58,3 @@ def score_term(freqs: np.ndarray, norm_bytes: np.ndarray, weight: np.float32,
     inv = cache[np.asarray(norm_bytes).astype(np.int64) & 0xFF]
     one = F32(1.0)
     return (weight - weight / (one + freqs * inv)).astype(np.float32)
-
-
-def max_score_for_block(freqs: np.ndarray, norm_bytes: np.ndarray,
-                        weight: np.float32, cache: np.ndarray) -> np.float32:
-    """Upper bound of score over a block's (freq, norm) impact pairs —
-    the MaxScoreCache role (solr-8.4.0/.../search/MaxScoreCache.java:61-68),
-    precomputable at index time because (k1, b) are fixed."""
-    if len(freqs) == 0:
-        return F32(0.0)
-    return F32(score_term(np.asarray(freqs), np.asarray(norm_bytes), weight, cache).max())
-
-
-@dataclass(frozen=True)
-class BM25Params:
-    k1: float = DEFAULT_K1
-    b: float = DEFAULT_B
-
-
-def sum_clause_scores(per_clause: list[np.ndarray]) -> np.ndarray:
-    """Sum aligned per-clause float32 score vectors in float64, cast to
-    float32 (DisjunctionSumScorer/ConjunctionScorer semantics)."""
-    if not per_clause:
-        return np.zeros(0, dtype=np.float32)
-    acc = np.zeros(len(per_clause[0]), dtype=np.float64)
-    for s in per_clause:
-        acc += s.astype(np.float64)
-    return acc.astype(np.float32)

@@ -14,20 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def facet_counts(matches: DataFrame, docmap: DataFrame, field: str,
-                 top_n: int | None = None,
-                 broadcast_matches: bool = True) -> DataFrame:
-    """Counts per `field` value over a match set (segment, docid rows).
-    Ordered (cnt desc, value asc) — the facet top-values contract."""
-    m = matches.select("segment", "docid")
-    if broadcast_matches:
-        m = F.broadcast(m)
-    out = (docmap.join(m, ["segment", "docid"])
-           .groupBy(field).agg(F.count("*").cast("long").alias("cnt"))
-           .orderBy(F.desc("cnt"), field))
-    return out.limit(top_n) if top_n else out
-
-
 def range_facets(matches: DataFrame, docmap: DataFrame, field: str,
                  ranges: list[tuple[str, float, float]],
                  broadcast_matches: bool = True) -> DataFrame:

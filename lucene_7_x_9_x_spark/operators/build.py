@@ -489,25 +489,3 @@ def combined_schema_ddl(id_fields: list) -> str:
             + ", ".join(f"{n} {t}" for n, t in id_fields)
             + ", dl long, norm int, extra_norms array<int>,"
             + " content_sha256_out string")
-
-
-def make_build_udfs(id_fields, text_col, cfg, with_positions=True):
-    """Two applyInPandas bodies sharing one inversion: Spark calls them on
-    the same grouped data; kind-discriminated single-pass variant below."""
-    id_cols = [n for n, _ in id_fields]
-
-    def build_postings(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(key[0])
-        postings, _ = invert_segment(pdf, segment=seg, id_cols=id_cols,
-                                     text_col=text_col, cfg=cfg,
-                                     with_positions=with_positions)
-        return postings
-
-    def build_docmap(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(key[0])
-        _, docmap = invert_segment(pdf, segment=seg, id_cols=id_cols,
-                                   text_col=text_col, cfg=cfg,
-                                   with_positions=False)
-        return docmap
-
-    return build_postings, build_docmap

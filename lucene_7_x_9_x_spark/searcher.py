@@ -1,14 +1,26 @@
 """Driver-side search API over an IndexSnapshot (IndexSearcher analogue).
 
-Plan shape per query (SURVEY.md §3.2 Spark translation):
-  driver:   rewrite -> gather term stats (pruned scan of the terms table)
-            -> per-query constants
-  executors: cogroup(postings rows of the query terms BY segment,
-                     docmap norms BY segment) -> applyInPandas kernel
-            -> per-segment top-k
-  driver:   ORDER BY score DESC, segment, docid LIMIT k (Catalyst
+Plan shape (SURVEY.md §3.2 Spark translation). search and search_many
+share ONE top-k path, Searcher._topk_frame; a single query is a batch of
+one qid:
+  driver:   rewrite -> term stats (driver-side seek of the terms table),
+            block-max plans, one impacts read, per-qid theta seeds
+  executors: per-segment kernel looping over the batch's qids -> each
+            segment's top-k, in one of three shapes:
+              broadcast norms  groupBy(segment) over the pruned postings,
+                               segnorms parsed once and broadcast — when
+                               the index is hot (cache_index) or its norms
+                               are small, and tombstones fit the driver
+              cogroup          cogroup(postings BY segment, segnorms BY
+                               segment) — the fallback that scales: big
+                               norms, or tombstones riding the norms side
+              norms-only       groupBy(segment) over segnorms alone, for
+                               MatchAll-bearing qids on segments holding
+                               none of the batch's postings (unioned in)
+  driver:   search: ORDER BY score DESC, segment, docid LIMIT k (Catalyst
             TakeOrderedAndProject) == TopDocs.merge tie semantics
-            (solr-8.4.0/.../search/TopDocs.java:75,106)
+            (solr-8.4.0/.../search/TopDocs.java:75,106);
+            search_many: the same order as a row_number per qid
 
 The postings scan carries a pushed-down IN(term, ...) filter; postings files
 are written sorted by term, so parquet row-group stats prune the scan — the
@@ -18,6 +30,7 @@ BlockTree/FST seek analogue (SURVEY.md §3.3).
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -565,7 +578,7 @@ class Searcher:
         return [(kk, w) for kk, w in pairs if float(w) > 0]
 
     def _impacts_for(self, keys) -> dict:
-        """Key-level memoized impacts read. A batch (search_many) prefetches
+        """Key-level memoized impacts read. A batch (_topk_frame) prefetches
         the UNION of its queries' keys through this in ONE pyarrow read —
         the round-4 regression was 32 per-query reads before one job."""
         missing = [kk for kk in keys if kk not in self._impacts_cache]
@@ -592,24 +605,19 @@ class Searcher:
             self._norms_bc = self.index.spark.sparkContext.broadcast(by_seg)
         return self._norms_bc
 
-    def _posting_frame(self, query, terms: set) -> DataFrame:
-        """Pruned postings scan for a query: pushed-down key filter plus
-        column pruning — the positions column (the .pos file analogue) is
-        only read when the query actually needs positions (SURVEY.md
-        §3.3.4 lazy-positions); docmap-only union columns never are."""
-        post = self._post_src
-        if terms:
-            post = post.where(self._key_filter(terms))
-        else:  # match-all style queries need no postings
-            post = post.where(F.lit(False))
+    def _posting_frame(self, keys, extra_cols=()) -> DataFrame:
+        """Pruned postings scan for a set of term keys: pushed-down key
+        filter plus column pruning — the positions/payload/offset columns
+        (the .pos/.pay file analogues) are only read when the caller asks
+        for them (SURVEY.md §3.3.4 lazy-positions); docmap-only union
+        columns never are. The ONE place the postings column list lives."""
         cols = ["term", "segment", "doc_freq", "total_term_freq",
                 "block_max_docs", "block_ns", "block_docs", "block_freqs",
                 "imp_freqs", "imp_norms"]
         if self._has_field_col:
             cols.insert(1, "field")
-        if _needs_positions(query):
-            cols += ["pos_offsets", "pos_data"]
-        return post.select(*cols)
+        return (self._post_src.where(self._key_filter(keys))
+                .select(*cols, *extra_cols))
 
     def _segnorms_with_deletes(self, sn: DataFrame) -> DataFrame:
         """Big-deletes fallback (tombstones beyond the driver cap): union
@@ -628,47 +636,54 @@ class Searcher:
             F.col("docid").cast("long").alias("del_docid"))
         return sn2.unionByName(dd)
 
-    def _kernel_frame(self, query, terms: set,
-                      with_deletes: bool = False) -> DataFrame:
-        post = self._posting_frame(query, terms)
+    def _cogroup(self, post: DataFrame, with_deletes: bool = False):
         # norms come from the tiny per-segment blob table (1 row/segment),
         # NOT the docmap — a query never shuffles per-doc rows. The blob
         # side is semi-joined down to segments that actually hold matching
         # postings: segments without postings can't produce hits, and a
         # cogroup shuffle partition whose postings side has zero Arrow
         # batches segfaults pyspark's reader (same bug as the global-empty
-        # guard in _run)
+        # guard in _topk_frame)
         sn = (self.index.segnorms()
               .join(post.select("segment").distinct(), "segment"))
         if with_deletes:
             sn = self._segnorms_with_deletes(sn)
         return post.groupBy("segment").cogroup(sn.groupBy("segment"))
 
-    def _run(self, query, k: int | None, mode: str,
-             after: tuple | None = None) -> DataFrame:
-        query = self.rewrite(query)
-        terms = Q.scoring_terms(query) | _filter_terms(query)
-        stats = self._global_stats(terms)
-        plan = (classify_blockmax(query)
-                if mode in ("auto", "blockmax") and stats.is_bm25 else None)
-        use_blockmax = (plan is not None and k is not None
-                        and mode != "complete" and after is None)
+    def _topk_frame(self, queries: dict, k: int | None, mode: str = "auto",
+                    after: tuple | None = None) -> DataFrame:
+        """Per-segment top-k (every match when k is None) of MANY rewritten
+        queries {qid: query} in ONE Spark job: DataFrame(qid, segment,
+        docid, score). The one kernel path behind search (a batch of one)
+        and search_many; stats, block-max plans, the impacts prefetch and
+        theta seeding happen once for the batch, `mode` and `after` apply
+        to all of it."""
+        schema = "qid string, segment int, docid long, score float"
+        all_terms: set = set()
+        for q in queries.values():
+            all_terms |= Q.scoring_terms(q) | _filter_terms(q)
+        stats = self._global_stats(all_terms)
+        blockmax = (mode in ("auto", "blockmax") and stats.is_bm25
+                    and k is not None and after is None)
+        plans = {qid: classify_blockmax(q) if blockmax else None
+                 for qid, q in queries.items()}
+        matchall = [qid for qid, q in queries.items()
+                    if _contains_matchall(q)]
 
         # an all-absent term set means the postings scan is empty; a
         # zero-batch nested-schema side crashes pyspark's Arrow reader
         # (pyspark 4.1 arrow_to_pandas segfault), and we can answer without
         # the kernel anyway unless a MatchAll clause is involved
-        empty_postings = all(stats.doc_freqs.get(t, 0) == 0 for t in terms)
-        if empty_postings and not _contains_matchall(query):
-            return self.index.spark.createDataFrame(
-                [], "segment int, docid long, score float")
+        has_postings = any(stats.doc_freqs.get(t, 0) > 0 for t in all_terms)
+        if not has_postings and not matchall:
+            return self.index.spark.createDataFrame([], schema)
 
         del_bc = self._deleted_broadcast()
         big_deletes = self._big_deletes
-        # task-local theta floor: this dict is pickled into each task's
-        # closure copy, so segments processed by the SAME task seed each
-        # other's competitive threshold (the MaxScoreAccumulator slice-
-        # sharing analogue, IndexSearcher.java:399-402) with zero
+        # task-local theta floor per qid: this dict is pickled into each
+        # task's closure copy, so segments processed by the SAME task seed
+        # each other's competitive threshold (the MaxScoreAccumulator
+        # slice-sharing analogue, IndexSearcher.java:399-402) with zero
         # cross-task coordination; exact because any subset's k-th score
         # lower-bounds the global k-th and skips stay strict.
         # When the query shape allows it, the dict starts PRE-SEEDED with
@@ -676,103 +691,129 @@ class Searcher:
         # (_seed_theta) — every task, including each one's FIRST segment,
         # then prunes against a near-final threshold
         task_theta: dict = {}
-        if use_blockmax and del_bc is None and not big_deletes:
-            t0 = self._seed_theta(plan, stats, k)
-            if t0 > 0.0:
-                task_theta["q"] = t0
+        if del_bc is None and not big_deletes:
+            # prefetch the UNION of the batch's eligible keys in ONE
+            # pyarrow read: per-query reads cost 32 driver round-trips and
+            # caused the round-4 batch_32_hot 1.9x regression
+            batch_keys = {kk for plan in plans.values() if plan is not None
+                          for kk, _ in self._theta_pairs(plan, stats)}
+            if batch_keys:
+                self._impacts_for(batch_keys)
+            for qid, plan in plans.items():
+                if plan is not None:
+                    t0 = self._seed_theta(plan, stats, k)
+                    if t0 > 0.0:
+                        task_theta[qid] = t0
 
         def kernel_body(seg: int, post_pdf: pd.DataFrame, norms, max_doc,
-                        fnorms, dele2=None) -> pd.DataFrame:
+                        fnorms, dele2=None, qids=tuple(queries)
+                        ) -> pd.DataFrame:
             reader = SparkSegmentReader(post_pdf, norms, max_doc,
                                         field_norms=fnorms)
             dele = dele2 if dele2 is not None else (
                 del_bc.value.get(seg) if del_bc is not None else None)
-            if use_blockmax:
-                d, s, _ = blockmax_topk(reader, stats, plan, k, deleted=dele,
-                                        theta0=task_theta.get("q"))
-                if len(d) == k:
-                    task_theta["q"] = max(task_theta.get("q", 0.0),
-                                          float(s[-1]))
-            else:
-                m = ex.evaluate(reader, stats, query)
-                d, s = m.docids, m.scores
-                if dele is not None:
-                    keep = ~np.isin(d, dele, assume_unique=True)
-                    d, s = d[keep], s[keep]
-                if after is not None:
-                    # searchAfter cursor (IndexSearcher.java:388-422):
-                    # keep docs strictly after (score, segment, docid)
-                    a_s, a_seg, a_doc = (np.float32(after[0]), after[1],
-                                         after[2])
-                    keep = (s < a_s) | ((s == a_s) & (
-                        (seg > a_seg) | ((seg == a_seg) & (d > a_doc))))
-                    d, s = d[keep], s[keep]
-                if k is not None:
-                    m2 = ex.Matches(d, s)
-                    d, s = ex.top_k(m2, k)
-            return pd.DataFrame({
-                "segment": np.full(len(d), seg, dtype=np.int32),
-                "docid": d, "score": s.astype(np.float32)})
+            out = []
+            for qid in qids:
+                plan = plans[qid]
+                if plan is not None:
+                    d, s, _ = blockmax_topk(reader, stats, plan, k,
+                                            deleted=dele,
+                                            theta0=task_theta.get(qid))
+                    if len(d) == k:
+                        task_theta[qid] = max(task_theta.get(qid, 0.0),
+                                              float(s[-1]))
+                else:
+                    m = ex.evaluate(reader, stats, queries[qid])
+                    d, s = m.docids, m.scores
+                    if dele is not None:
+                        keep = ~np.isin(d, dele, assume_unique=True)
+                        d, s = d[keep], s[keep]
+                    if after is not None:
+                        # searchAfter cursor (IndexSearcher.java:388-422):
+                        # keep docs strictly after (score, segment, docid)
+                        a_s, a_seg, a_doc = (np.float32(after[0]),
+                                             after[1], after[2])
+                        keep = (s < a_s) | ((s == a_s) & (
+                            (seg > a_seg) | ((seg == a_seg) & (d > a_doc))))
+                        d, s = d[keep], s[keep]
+                    if k is not None:
+                        d, s = ex.top_k(ex.Matches(d, s), k)
+                out.append(pd.DataFrame({
+                    "qid": qid,
+                    "segment": np.full(len(d), seg, dtype=np.int32),
+                    "docid": d, "score": s.astype(np.float32)}))
+            return pd.concat(out, ignore_index=True)
 
+        # pyspark picks the grouped-UDF calling convention by argument
+        # count, so these keep exactly (key, post[, sn]) parameters
         def kernel(key, post_pdf: pd.DataFrame, sn_pdf: pd.DataFrame
                    ) -> pd.DataFrame:
             sn_rows, dele2 = _split_sn_deletes(sn_pdf)
             if len(sn_rows) == 0:
-                return pd.DataFrame({"segment": [], "docid": [], "score": []})
+                return _no_hits()
             return kernel_body(int(key[0]), post_pdf,
                                *_parse_segnorms(sn_rows), dele2=dele2)
 
         def kernel_sn(key, sn_pdf: pd.DataFrame) -> pd.DataFrame:
-            return kernel(key, pd.DataFrame({"term": []}), sn_pdf)
+            # norms-only: only the MatchAll-bearing qids can match here
+            sn_rows, dele2 = _split_sn_deletes(sn_pdf)
+            if len(sn_rows) == 0:
+                return _no_hits()
+            return kernel_body(int(key[0]), pd.DataFrame({"term": []}),
+                               *_parse_segnorms(sn_rows), dele2=dele2,
+                               qids=matchall)
 
-        schema = "segment int, docid long, score float"
-        if empty_postings:  # MatchAll-only query: norms-only kernel
-            sn_all = self.index.segnorms()
-            if big_deletes:
-                sn_all = self._segnorms_with_deletes(sn_all)
-            return (sn_all.groupBy("segment")
-                    .applyInPandas(kernel_sn, schema=schema))
-        if (self._hot or self._small_norms) and not big_deletes:
-            # one-stage fast path: norms ride a broadcast instead of a
-            # cogroup side. Hot mode reads the persisted pre-partitioned
-            # postings (groupBy reuses the partitioning — no exchange);
-            # cold-with-small-norms shuffles only the pruned postings rows
-            # of the query's terms (an explicit repartition so AQE can't
-            # coalesce the compute-bound kernel onto one task)
-            bc = self._segnorms_broadcast()
+        parts = []
+        if has_postings:
+            post = self._posting_frame(all_terms, (
+                ("pos_offsets", "pos_data")
+                if any(_needs_positions(q) for q in queries.values())
+                else ()))
+            if (self._hot or self._small_norms) and not big_deletes:
+                # one-stage fast path: norms ride a broadcast instead of a
+                # cogroup side. Hot mode reads the persisted pre-partitioned
+                # postings (groupBy reuses the partitioning — no exchange);
+                # cold-with-small-norms shuffles only the pruned postings
+                # rows of the batch's terms (an explicit repartition so AQE
+                # can't coalesce the compute-bound kernel onto one task)
+                bc = self._segnorms_broadcast()
 
-            def kernel_hot(key, post_pdf: pd.DataFrame) -> pd.DataFrame:
-                got = bc.value.get(int(key[0]))
-                if got is None:
-                    return pd.DataFrame(
-                        {"segment": [], "docid": [], "score": []})
-                return kernel_body(int(key[0]), post_pdf, *got)
+                def kernel_hot(key, post_pdf: pd.DataFrame) -> pd.DataFrame:
+                    got = bc.value.get(int(key[0]))
+                    if got is None:
+                        return _no_hits()
+                    return kernel_body(int(key[0]), post_pdf, *got)
 
-            pf = self._posting_frame(query, terms)
-            if not self._hot:
-                pf = pf.repartition(self._n_part, "segment")
-            main = pf.groupBy("segment").applyInPandas(kernel_hot,
-                                                       schema=schema)
-        else:
-            main = self._kernel_frame(
-                query, terms, with_deletes=big_deletes).applyInPandas(
-                kernel, schema=schema)
-        if _contains_matchall(query):
-            # segments holding NONE of the query's terms still match
-            # through the MatchAll clause (term clauses contribute nothing
+                pf = post if self._hot else post.repartition(self._n_part,
+                                                             "segment")
+                parts.append(pf.groupBy("segment")
+                             .applyInPandas(kernel_hot, schema=schema))
+            else:
+                parts.append(self._cogroup(post, big_deletes)
+                             .applyInPandas(kernel, schema=schema))
+        if matchall:
+            # segments holding NONE of the batch's terms still match
+            # through a MatchAll clause (term clauses contribute nothing
             # there): run them on the norms-only kernel and union — the
-            # postings-driven cogroup above cannot cover them, and feeding
-            # it zero-postings groups would hit the zero-batch Arrow bug
-            seg_with = (self._post_src.where(self._key_filter(terms))
-                        .select("segment").distinct())
-            rest = self.index.segnorms().join(seg_with, "segment",
-                                              "left_anti")
+            # postings-driven kernel above cannot cover them, and feeding
+            # it zero-postings groups would hit the zero-batch Arrow bug.
+            # With no postings at all, that is every segment
+            rest = self.index.segnorms()
+            if has_postings:
+                rest = rest.join(post.select("segment").distinct(),
+                                 "segment", "left_anti")
             if big_deletes:
                 rest = self._segnorms_with_deletes(rest)
-            main = main.unionByName(
-                rest.groupBy("segment").applyInPandas(kernel_sn,
-                                                      schema=schema))
-        return main
+            parts.append(rest.groupBy("segment")
+                         .applyInPandas(kernel_sn, schema=schema))
+        return reduce(DataFrame.unionByName, parts)
+
+    def _run(self, query, k: int | None, mode: str,
+             after: tuple | None = None) -> DataFrame:
+        """One query through _topk_frame: DataFrame(segment, docid,
+        score)."""
+        return self._topk_frame({"q": self.rewrite(query)}, k, mode,
+                                after).drop("qid")
 
     # ---------------- public API
     def search(self, query, k: int = 10, mode: str = "auto",
@@ -1152,13 +1193,7 @@ class Searcher:
         if field is not None and field == self._default_field:
             field = None
         kk = term_key(field, term)
-        post = self._post_src.where(self._key_filter({kk}))
-        cols = ["term", "segment", "doc_freq", "total_term_freq",
-                "block_max_docs", "block_ns", "block_docs", "block_freqs",
-                "imp_freqs", "imp_norms", "pay_offsets", "pay_data"]
-        if self._has_field_col:
-            cols.insert(1, "field")
-        post = post.select(*cols)
+        post = self._posting_frame({kk}, ("pay_offsets", "pay_data"))
         fn = function
 
         def kernel(pkey, post_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1221,13 +1256,7 @@ class Searcher:
         if field is not None and field == self._default_field:
             field = None
         keys = [term_key(field, t) for t in terms]
-        post = self._post_src.where(self._key_filter(set(keys)))
-        cols = ["term", "segment", "doc_freq", "total_term_freq",
-                "block_max_docs", "block_ns", "block_docs", "block_freqs",
-                "imp_freqs", "imp_norms", "off_offsets", "off_data"]
-        if self._has_field_col:
-            cols.insert(1, "field")
-        post = post.select(*cols)
+        post = self._posting_frame(set(keys), ("off_offsets", "off_data"))
 
         def kernel(pkey, post_pdf: pd.DataFrame) -> pd.DataFrame:
             seg = int(pkey[0])
@@ -1908,147 +1937,13 @@ class Searcher:
 
         queries: {qid: Query}. Each query is rewritten and classified
         independently; block-max is used where eligible."""
-        rewritten = {qid: self.rewrite(q) for qid, q in queries.items()}
-        # MatchAll-containing queries can hit docs in segments that hold
-        # NONE of the batch's terms, which the postings-driven cogroup below
-        # (and its segnorms semi-join) would silently drop — route them
-        # through the single-query path, which has a segnorms-only kernel
-        extra = []
-        for qid in [i for i, q in rewritten.items() if _contains_matchall(q)]:
-            r = (self._run(rewritten.pop(qid), k, "auto")
-                 .orderBy(F.desc("score"), "segment", "docid").limit(k))
-            extra.append(
-                _rank_limited(r, [F.desc("score"), "segment", "docid"],
-                              "docid")
-                 .select(F.lit(qid).alias("qid"), "rank", "segment",
-                         "docid", "score"))
-
-        def _with_extra(batched: DataFrame) -> DataFrame:
-            for e in extra:
-                batched = batched.unionByName(e)
-            return batched
-
-        empty = self.index.spark.createDataFrame(
-            [], "qid string, rank int, segment int, docid long, score float")
-        if not rewritten:
-            return _with_extra(empty)
-        all_terms = set()
-        for q in rewritten.values():
-            all_terms |= Q.scoring_terms(q) | _filter_terms(q)
-        stats = self._global_stats(all_terms)
-        if all(stats.doc_freqs.get(t, 0) == 0 for t in all_terms):
-            # rest of the batch would leave the postings scan empty (see the
-            # zero-batch Arrow guard in _run); term-based queries can't hit
-            return _with_extra(empty)
-        plans = ({qid: classify_blockmax(q) for qid, q in rewritten.items()}
-                 if stats.is_bm25 else {qid: None for qid in rewritten})
-        needs_pos = any(_needs_positions(q) for q in rewritten.values())
-
-        post = self._post_src
-        if all_terms:
-            post = post.where(self._key_filter(all_terms))
-        else:
-            post = post.where(F.lit(False))
-        cols = ["term", "segment", "doc_freq", "total_term_freq",
-                "block_max_docs", "block_ns", "block_docs", "block_freqs",
-                "imp_freqs", "imp_norms"]
-        if self._has_field_col:
-            cols.insert(1, "field")
-        if needs_pos:
-            cols += ["pos_offsets", "pos_data"]
-        post = post.select(*cols)
-        sn = (self.index.segnorms()
-              .join(post.select("segment").distinct(), "segment"))
-
-        del_bc = self._deleted_broadcast()
-        big_deletes = self._big_deletes
-        task_theta: dict = {}  # per-qid cross-segment theta (see _run)
-        if del_bc is None and not big_deletes:
-            # driver-seeded global floors, one per eligible query (the
-            # MaxScoreAccumulator completion — see _seed_theta). Prefetch
-            # the UNION of the batch's eligible keys in ONE pyarrow read:
-            # per-query reads here cost 32 driver round-trips and caused
-            # the round-4 batch_32_hot 1.9x regression.
-            batch_keys: set = set()
-            for qid, plan in plans.items():
-                if plan is not None:
-                    batch_keys |= {kk for kk, _ in
-                                   self._theta_pairs(plan, stats)}
-            if batch_keys:
-                self._impacts_for(batch_keys)
-            for qid, plan in plans.items():
-                if plan is not None:
-                    t0 = self._seed_theta(plan, stats, k)
-                    if t0 > 0.0:
-                        task_theta[qid] = t0
-
-        def kernel_body(seg: int, post_pdf: pd.DataFrame, norms, max_doc,
-                        fnorms, dele2=None) -> pd.DataFrame:
-            out = []
-            reader = SparkSegmentReader(post_pdf, norms, max_doc,
-                                        field_norms=fnorms)
-            dele = dele2 if dele2 is not None else (
-                del_bc.value.get(seg) if del_bc is not None else None)
-            for qid, q in rewritten.items():
-                plan = plans[qid]
-                if plan is not None:
-                    d, s_, _ = blockmax_topk(reader, stats, plan, k,
-                                             deleted=dele,
-                                             theta0=task_theta.get(qid))
-                    if len(d) == k:
-                        task_theta[qid] = max(task_theta.get(qid, 0.0),
-                                              float(s_[-1]))
-                else:
-                    m = ex.evaluate(reader, stats, q)
-                    if dele is not None:
-                        keep = ~np.isin(m.docids, dele, assume_unique=True)
-                        m = ex.Matches(m.docids[keep], m.scores[keep])
-                    d, s_ = ex.top_k(m, k)
-                out.append(pd.DataFrame({
-                    "qid": qid,
-                    "segment": np.full(len(d), seg, dtype=np.int32),
-                    "docid": d, "score": s_.astype(np.float32)}))
-            return pd.concat(out, ignore_index=True) if out else \
-                pd.DataFrame({"qid": [], "segment": [], "docid": [],
-                              "score": []})
-
-        def kernel(key, post_pdf: pd.DataFrame, sn_pdf: pd.DataFrame
-                   ) -> pd.DataFrame:
-            sn_rows, dele2 = _split_sn_deletes(sn_pdf)
-            if len(sn_rows) == 0:
-                return pd.DataFrame({"qid": [], "segment": [], "docid": [],
-                                     "score": []})
-            return kernel_body(int(key[0]), post_pdf,
-                               *_parse_segnorms(sn_rows), dele2=dele2)
-
-        qschema = "qid string, segment int, docid long, score float"
-        if (self._hot or self._small_norms) and not big_deletes:
-            # broadcast norms: one stage, no cogroup (see _run); cold-
-            # with-small-norms repartitions the pruned postings explicitly
-            # so AQE can't coalesce the compute-bound kernel
-            bc = self._segnorms_broadcast()
-
-            def kernel_hot(key, post_pdf: pd.DataFrame) -> pd.DataFrame:
-                got = bc.value.get(int(key[0]))
-                if got is None:
-                    return pd.DataFrame({"qid": [], "segment": [],
-                                         "docid": [], "score": []})
-                return kernel_body(int(key[0]), post_pdf, *got)
-
-            pf = post if self._hot else post.repartition(self._n_part,
-                                                         "segment")
-            res = (pf.groupBy("segment")
-                   .applyInPandas(kernel_hot, schema=qschema))
-        else:
-            sn2 = self._segnorms_with_deletes(sn) if big_deletes else sn
-            res = (post.groupBy("segment").cogroup(sn2.groupBy("segment"))
-                   .applyInPandas(kernel, schema=qschema))
+        res = self._topk_frame(
+            {qid: self.rewrite(q) for qid, q in queries.items()}, k)
         w = Window.partitionBy("qid").orderBy(F.desc("score"), "segment",
                                               "docid")
-        return _with_extra(
-            res.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("qid", "rank", "segment", "docid", "score"))
+        return (res.withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k)
+                .select("qid", "rank", "segment", "docid", "score"))
 
     def explain(self, query, segment: int, docid: int) -> list[dict]:
         """Score explanation for one doc — the Weight.explain / Explanation
@@ -2199,7 +2094,9 @@ class Searcher:
                 "segment": np.full(len(d), seg, dtype=np.int32),
                 "docid": d, "score": comb})
 
-        res = (self._kernel_frame(query2, terms)
+        post = self._posting_frame(terms, ("pos_offsets", "pos_data")
+                                   if _needs_positions(query2) else ())
+        res = (self._cogroup(post)
                .applyInPandas(kernel,
                               schema="segment int, docid long, score float"))
         # coverage rule: first-pass docs in segments that hold NONE of
@@ -2212,10 +2109,8 @@ class Searcher:
 
         def kernel_sn(key, sn_pdf):
             return kernel(key, pd.DataFrame({"term": []}), sn_pdf)
-        seg_with = (self._post_src.where(self._key_filter(terms))
-                    .select("segment").distinct())
-        rest = self.index.segnorms().join(seg_with, "segment",
-                                          "left_anti")
+        rest = self.index.segnorms().join(post.select("segment").distinct(),
+                                          "segment", "left_anti")
         res = res.unionByName(
             rest.groupBy("segment").applyInPandas(
                 kernel_sn, schema="segment int, docid long,"
@@ -2244,6 +2139,10 @@ def _scoring_leaves(q, boost: float = 1.0) -> list:
                 out += sub
         return out
     return []
+
+
+def _no_hits() -> pd.DataFrame:
+    return pd.DataFrame({"qid": [], "segment": [], "docid": [], "score": []})
 
 
 def _split_sn_deletes(sn_pdf: pd.DataFrame):

@@ -11,6 +11,10 @@ Endpoints (GET, JSON responses):
                                               paths apply)
     /health                                   index stats
 
+Errors are JSON {"error": ...}: 400 for a query that does not parse or a
+k that is not a positive integer, 404 for an unknown path, 500 for any
+failure inside the engine.
+
 Serving notes: one Searcher (one SparkSession) serves every request —
 the IndexSearcher-reuse model; `--hot` turns on cache_index (persisted
 postings + broadcast norms, the dedicated-search-node shape).  The
@@ -24,15 +28,32 @@ import argparse
 import json
 import os
 import sys
+import traceback
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+class BadRequest(ValueError):
+    """A request parameter the client must fix (answered 400)."""
+
+
+def _parse_k(qs) -> int:
+    raw = (qs.get("k") or ["10"])[0]
+    try:
+        k = int(raw)
+    except ValueError:
+        k = 0
+    if k < 1:
+        raise BadRequest(f"k must be a positive integer, got {raw!r}")
+    return k
+
+
 def make_handler(searcher):
-    from lucene_7_x_9_x_spark.plans.parser import parse
-    from lucene_7_x_9_x_spark.plans.surround import parse_surround
+    from lucene_7_x_9_x_spark.plans.parser import QueryParseError, parse
+    from lucene_7_x_9_x_spark.plans.surround import (SurroundParseError,
+                                                     parse_surround)
 
     class Handler(BaseHTTPRequestHandler):
         def _json(self, code: int, obj) -> None:
@@ -50,7 +71,6 @@ def make_handler(searcher):
             u = urllib.parse.urlparse(self.path)
             qs = urllib.parse.parse_qs(u.query)
             q = (qs.get("q") or [""])[0]
-            k = int((qs.get("k") or ["10"])[0])
             try:
                 if u.path == "/health":
                     st = searcher.index.stats
@@ -61,6 +81,7 @@ def make_handler(searcher):
                         else searcher.index.manifest.get("num_segments"),
                         "default_field": searcher.index.default_field})
                 if u.path in ("/search", "/surround"):
+                    k = _parse_k(qs)
                     parsed = (parse_surround(q) if u.path == "/surround"
                               else parse(q))
                     rows = searcher.search(parsed, k).collect()
@@ -75,8 +96,11 @@ def make_handler(searcher):
                         200, {"query": q,
                               "count": int(searcher.count(parse(q)))})
                 return self._json(404, {"error": "unknown endpoint"})
-            except Exception as e:  # surface parse/engine errors as 400s
+            except (QueryParseError, SurroundParseError, BadRequest) as e:
                 return self._json(400, {"error": str(e)})
+            except Exception as e:  # engine failure: the server's fault
+                traceback.print_exc()
+                return self._json(500, {"error": f"{type(e).__name__}: {e}"})
 
     return Handler
 

@@ -3,8 +3,11 @@
 # given command. Usage: waitq.sh [threshold] -- cmd args...
 # The box has a bursty co-tenant (CLAUDE.md): loadavg_1m_start < ~1.5 is
 # the only usable quiet signal; measurements taken under load are noise.
-THRESH="${1:-1.5}"
-shift
+THRESH=1.5
+if [ $# -gt 0 ] && [ "$1" != "--" ]; then
+  THRESH="$1"
+  shift
+fi
 [ "$1" = "--" ] && shift
 for i in $(seq 1 240); do
   LA=$(cut -d' ' -f1 /proc/loadavg)

@@ -54,7 +54,31 @@ def test_http_endpoints(spark, tmp_path):
         assert code == 200 and [h["doc_id"] for h in r["hits"]] == [0]
         code, r = _get(port, "/search?q=" + urllib.parse.quote('"AND('))
         assert code == 400 and "error" in r
+        code, r = _get(port, "/search?q=scan&k=abc")
+        assert code == 400 and "k must be" in r["error"]
+        code, r = _get(port, "/surround?q=2W(fast,%20scan)&k=0")
+        assert code == 400 and "k must be" in r["error"]
         code, r = _get(port, "/nope")
         assert code == 404
     finally:
         srv.shutdown()
+
+
+def test_engine_failure_is_500():
+    """A failure inside the engine is the server's fault: 500, not 400."""
+    from serve import make_handler
+
+    class Broken:
+        def search(self, query, k):
+            raise RuntimeError("executor lost")
+
+    srv = HTTPServer(("127.0.0.1", 0), make_handler(Broken()))
+    port = srv.server_address[1]
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        code, r = _get(port, "/search?q=scan&k=3")
+        assert code == 500 and "RuntimeError" in r["error"]
+    finally:
+        srv.shutdown()
+        srv.server_close()

@@ -137,7 +137,9 @@ def test_vectorized_kterm_matches_heap_walk_random():
     """Property: the k-pointer round simulation (_sloppy_match_k, k >= 3
     distinct terms) reproduces the PhraseQueue heap walk bit-for-bit —
     docids, float32 sloppyFreq, and fold order — across random position
-    data, slops and k."""
+    data, slops and k. Positions are drawn WITH repeats: MultiPhrase
+    slot unions keep duplicate positions in the stream, so the walk must
+    agree with the heap on those too."""
     from lucene_7_x_9_x_spark.operators.executor import (_sloppy_freq_doc,
                                                          _sloppy_match_k)
     rng = np.random.RandomState(777)
@@ -151,7 +153,7 @@ def test_vectorized_kterm_matches_heap_walk_random():
             lists = []
             for s in range(k):
                 ns = rng.randint(1, 8)
-                lists.append(np.unique(
+                lists.append(np.sort(
                     rng.randint(0, 30, size=ns)).astype(np.int64))
                 per_slot[s].append(lists[-1])
             per_doc.append(lists)
