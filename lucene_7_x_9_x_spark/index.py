@@ -274,6 +274,13 @@ class IndexSnapshot:
             self._pads_cache[dirs] = got
         return got
 
+    def _batches_dataset(self, kind: str):
+        """The pyarrow dataset of one row kind ("postings"/"docmap") over
+        every batch of the snapshot."""
+        return self._pads_dataset(tuple(
+            os.path.join(self.root, d, f"kind={kind}")
+            for d in self.manifest["batches"]))
+
     def segnorms(self) -> DataFrame:
         """Per-segment norms blob: (segment, max_doc, norms binary) — one
         tiny row per segment so queries need never shuffle the docmap (the
@@ -282,6 +289,18 @@ class IndexSnapshot:
             self._segnorms_df = self.spark.read.parquet(
                 os.path.join(self.root, "segnorms"))
         return self._segnorms_df
+
+    def segnorms_parsed(self) -> dict:
+        """{segment: (default norms uint8[], max_doc, {field: uint8[]})} —
+        the segnorms table read with pyarrow and parsed once per snapshot
+        (no Spark job); the driver-side search path and the broadcast-norms
+        kernel share it."""
+        if not hasattr(self, "_segnorms_parsed"):
+            pdf = self._pads_dataset(
+                (os.path.join(self.root, "segnorms"),)).to_table().to_pandas()
+            self._segnorms_parsed = {int(seg): parse_segnorms(g)
+                                     for seg, g in pdf.groupby("segment")}
+        return self._segnorms_parsed
 
     def term_stats_lookup(self, keys) -> dict:
         """Driver-side terms-dict seek — the TermsEnum.seekExact analogue
@@ -297,24 +316,9 @@ class IndexSnapshot:
         keys: iterable of bare term strings (default field) and/or
         (field, term) tuples. Returns {key: (doc_freq, total_term_freq)}
         for the keys present in the dictionary."""
-        import pyarrow.dataset as pads
         dset = self._pads_dataset((os.path.join(self.root, "terms"),))
         has_field = "field" in dset.schema.names
-        bare = sorted(k for k in keys if isinstance(k, str))
-        by_field: dict = {}
-        for k in keys:
-            if not isinstance(k, str):
-                by_field.setdefault(k[0], []).append(k[1])
-        expr = None
-        if bare:
-            e = pads.field("term").isin(bare)
-            if has_field:
-                e = e & pads.field("field").is_null()
-            expr = e
-        for f, ts in sorted(by_field.items()):
-            e = (pads.field("field") == f) & pads.field("term").isin(
-                sorted(ts))
-            expr = e if expr is None else expr | e
+        expr = _key_expr(keys, has_field)
         if expr is None:
             return {}
         cols = (["field"] if has_field else []) + [
@@ -341,26 +345,9 @@ class IndexSnapshot:
 
         Returns {key: (freqs int64[], norms int64[])} concatenated across
         segments and blocks."""
-        import pyarrow.dataset as pads
-        dirs = tuple(os.path.join(self.root, d, "kind=postings")
-                     for d in self.manifest["batches"])
-        dset = self._pads_dataset(dirs)
+        dset = self._batches_dataset("postings")
         has_field = "field" in dset.schema.names
-        bare = sorted(k for k in keys if isinstance(k, str))
-        by_field: dict = {}
-        for k in keys:
-            if not isinstance(k, str):
-                by_field.setdefault(k[0], []).append(k[1])
-        expr = None
-        if bare:
-            e = pads.field("term").isin(bare)
-            if has_field:
-                e = e & pads.field("field").is_null()
-            expr = e
-        for f, ts in sorted(by_field.items()):
-            e = (pads.field("field") == f) & pads.field("term").isin(
-                sorted(ts))
-            expr = e if expr is None else expr | e
+        expr = _key_expr(keys, has_field)
         if expr is None:
             return {}
         cols = (["field"] if has_field else []) + [
@@ -385,6 +372,39 @@ class IndexSnapshot:
         return {k: (np.asarray(v[0], dtype=np.int64),
                     np.asarray(v[1], dtype=np.int64))
                 for k, v in acc.items()}
+
+    def postings_rows(self, keys, columns: list):
+        """Driver-side read of the postings rows of the given term keys
+        (pyarrow Table of `columns`) — the same pushed-down key filter as
+        impacts_lookup, so term-sorted row groups prune; no Spark job."""
+        dset = self._batches_dataset("postings")
+        expr = _key_expr(keys, "field" in dset.schema.names)
+        if expr is None:
+            return dset.schema.empty_table().select(columns)
+        return dset.to_table(filter=expr, columns=columns)
+
+    def postings_bytes(self) -> int:
+        """On-disk bytes of the postings parquet files of every batch."""
+        if not hasattr(self, "_postings_bytes"):
+            dset = self._batches_dataset("postings")
+            # a multi-batch snapshot is a UnionDataset of per-batch datasets
+            parts = getattr(dset, "children", None) or [dset]
+            self._postings_bytes = sum(
+                fi.size for p in parts
+                for fi in p.filesystem.get_file_info(p.files))
+        return self._postings_bytes
+
+    def docmap_rows(self, segments, docids, columns: list):
+        """Point-read of the BASE docmap rows (no dv_updates overlay) whose
+        segment is in `segments` and docid in `docids`: pyarrow Table
+        (segment, docid, *columns), in file order. A superset of the
+        (segment, docid) pairs — join on both keys to keep exactly them."""
+        import pyarrow.dataset as pads
+        dset = self._batches_dataset("docmap")
+        return dset.to_table(
+            filter=(pads.field("segment").isin(sorted(set(segments)))
+                    & pads.field("docid").isin(sorted(set(docids)))),
+            columns=["segment", "docid", *columns])
 
     def hard_deletes(self) -> DataFrame | None:
         """Hard-tombstoned (segment, docid) rows committed by
@@ -440,6 +460,46 @@ class IndexSnapshot:
 
     def checkpoints(self) -> list[dict]:
         return self.manifest.get("checkpoints", [])
+
+
+def _key_expr(keys, has_field: bool):
+    """pyarrow filter selecting term KEYS from a (field, term) table:
+    (field IS NULL AND term IN bare) OR (field = f AND term IN ...) per
+    named field; None when there are no keys."""
+    import pyarrow.dataset as pads
+    bare = sorted(k for k in keys if isinstance(k, str))
+    by_field: dict = {}
+    for k in keys:
+        if not isinstance(k, str):
+            by_field.setdefault(k[0], []).append(k[1])
+    expr = None
+    if bare:
+        e = pads.field("term").isin(bare)
+        if has_field:
+            e = e & pads.field("field").is_null()
+        expr = e
+    for f, ts in sorted(by_field.items()):
+        e = (pads.field("field") == f) & pads.field("term").isin(sorted(ts))
+        expr = e if expr is None else expr | e
+    return expr
+
+
+def parse_segnorms(sn_pdf: pd.DataFrame):
+    """(default_norms, max_doc, {field: norms}) from the per-(segment,
+    field) segnorm rows of ONE segment (field NULL = default field;
+    format-1 tables have no field column)."""
+    if "field" not in sn_pdf.columns:
+        return (np.frombuffer(bytes(sn_pdf["norms"].iloc[0]), np.uint8),
+                int(sn_pdf["max_doc"].iloc[0]), {})
+    fnorms: dict = {}
+    base, max_doc = None, 0
+    for rr in sn_pdf.itertuples():
+        arr = np.frombuffer(bytes(rr.norms), np.uint8)
+        if isinstance(rr.field, str):
+            fnorms[rr.field] = arr
+        else:
+            base, max_doc = arr, int(rr.max_doc)
+    return base, max_doc, fnorms
 
 
 def _analyzer_manifest(cfg: AnalyzerConfig) -> dict:

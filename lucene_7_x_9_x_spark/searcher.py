@@ -17,6 +17,16 @@ one qid:
               norms-only       groupBy(segment) over segnorms alone, for
                                MatchAll-bearing qids on segments holding
                                none of the batch's postings (unioned in)
+            or, in a fourth shape, not on executors at all:
+              driver           a single search() on a cold Searcher over
+                               a small index (postings within
+                               DRIVER_POSTINGS_BYTES, norms small enough to
+                               broadcast, driver-held tombstones,
+                               no docvalues overlays): the same kernel_body
+                               once per segment over a pyarrow read of the
+                               pruned postings rows, ids point-read from
+                               the docmap, the result a DataFrame over a
+                               pyarrow Table — no Spark job at all
   driver:   search: ORDER BY score DESC, segment, docid LIMIT k (Catalyst
             TakeOrderedAndProject) == TopDocs.merge tie semantics
             (solr-8.4.0/.../search/TopDocs.java:75,106);
@@ -38,13 +48,22 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .functions import bm25
 from .functions.editdist import osa_distance as _osa_distance
-from .index import IndexSnapshot
+from .index import IndexSnapshot, parse_segnorms
 from .operators import executor as ex
 from .operators.search import (SparkSegmentReader, blockmax_topk,
                                classify_blockmax)
 from .plans import query as Q
 from .plans.query import (RewriteContext, key_field, key_term, term_key,
                           rewrite as rewrite_query)
+
+# postings bytes (all batches) up to which a cold single search runs on
+# the driver (_local). scripts/driver_crossover.py found no crossover up
+# to 137 MB on local[2], 4 vCPU (driver p50 ahead of the Spark path by
+# 9.7x at 3 MB, 3.7x at 72 MB, 2.2x at 137 MB); the margin shrinks with
+# size and the driver runs one thread, so the bound stays well inside
+# that range.
+# Independent of the norms-broadcast bound (_small_norms).
+DRIVER_POSTINGS_BYTES = 64 * 1024 * 1024
 
 
 def _rank_limited(df, order, part):
@@ -131,6 +150,13 @@ class Searcher:
         nb = int(index.stats["doc_count"]) * max(
             1, len(getattr(index, "field_names", [None])))
         self._small_norms = nb <= 64 * 1024 * 1024
+        # driver path (_search_local): a cold single search over an index
+        # this small reads its postings rows with pyarrow and runs the
+        # kernel in this process — no Spark job and no Python worker task,
+        # whose fixed start-up cost dwarfs the kernel at this size; the
+        # norms it parses in the driver are within the broadcast bound
+        self._local = (not self._hot and self._small_norms
+                       and index.postings_bytes() <= DRIVER_POSTINGS_BYTES)
         self._n_part = index.spark.sparkContext.defaultParallelism
         if cache_index:
             # exactly one cached partition per core: fewer tasks per query
@@ -599,25 +625,27 @@ class Searcher:
         ~1 byte/doc/field — in-memory-index scale by construction (hot mode
         already persists the full postings table in executor storage)."""
         if self._norms_bc is None:
-            pdf = self.index.segnorms().toPandas()
-            by_seg = {int(seg): _parse_segnorms(g)
-                      for seg, g in pdf.groupby("segment")}
-            self._norms_bc = self.index.spark.sparkContext.broadcast(by_seg)
+            self._norms_bc = self.index.spark.sparkContext.broadcast(
+                self.index.segnorms_parsed())
         return self._norms_bc
 
-    def _posting_frame(self, keys, extra_cols=()) -> DataFrame:
-        """Pruned postings scan for a set of term keys: pushed-down key
-        filter plus column pruning — the positions/payload/offset columns
-        (the .pos/.pay file analogues) are only read when the caller asks
-        for them (SURVEY.md §3.3.4 lazy-positions); docmap-only union
-        columns never are. The ONE place the postings column list lives."""
+    def _posting_cols(self, extra_cols=()) -> list:
+        """The postings column list — positions/payload/offset columns
+        (the .pos/.pay file analogues) only when the caller asks for them
+        (SURVEY.md §3.3.4 lazy-positions); docmap-only union columns
+        never."""
         cols = ["term", "segment", "doc_freq", "total_term_freq",
                 "block_max_docs", "block_ns", "block_docs", "block_freqs",
                 "imp_freqs", "imp_norms"]
         if self._has_field_col:
             cols.insert(1, "field")
+        return cols + list(extra_cols)
+
+    def _posting_frame(self, keys, extra_cols=()) -> DataFrame:
+        """Pruned postings scan for a set of term keys: pushed-down key
+        filter plus column pruning (_posting_cols)."""
         return (self._post_src.where(self._key_filter(keys))
-                .select(*cols, *extra_cols))
+                .select(*self._posting_cols(extra_cols)))
 
     def _segnorms_with_deletes(self, sn: DataFrame) -> DataFrame:
         """Big-deletes fallback (tombstones beyond the driver cap): union
@@ -651,13 +679,16 @@ class Searcher:
         return post.groupBy("segment").cogroup(sn.groupBy("segment"))
 
     def _topk_frame(self, queries: dict, k: int | None, mode: str = "auto",
-                    after: tuple | None = None) -> DataFrame:
+                    after: tuple | None = None, local: bool = False
+                    ) -> DataFrame | pd.DataFrame:
         """Per-segment top-k (every match when k is None) of MANY rewritten
         queries {qid: query} in ONE Spark job: DataFrame(qid, segment,
         docid, score). The one kernel path behind search (a batch of one)
         and search_many; stats, block-max plans, the impacts prefetch and
         theta seeding happen once for the batch, `mode` and `after` apply
-        to all of it."""
+        to all of it. local=True runs the same kernel_body in this process
+        instead (the driver path, see _search_local) and returns the rows
+        as a pandas frame."""
         schema = "qid string, segment int, docid long, score float"
         all_terms: set = set()
         for q in queries.values():
@@ -676,10 +707,12 @@ class Searcher:
         # the kernel anyway unless a MatchAll clause is involved
         has_postings = any(stats.doc_freqs.get(t, 0) > 0 for t in all_terms)
         if not has_postings and not matchall:
-            return self.index.spark.createDataFrame([], schema)
+            return (_no_hits() if local
+                    else self.index.spark.createDataFrame([], schema))
 
-        del_bc = self._deleted_broadcast()
+        dels = self._deleted_by_segment()
         big_deletes = self._big_deletes
+        del_bc = None if local else self._deleted_broadcast()
         # task-local theta floor per qid: this dict is pickled into each
         # task's closure copy, so segments processed by the SAME task seed
         # each other's competitive threshold (the MaxScoreAccumulator
@@ -691,7 +724,7 @@ class Searcher:
         # (_seed_theta) — every task, including each one's FIRST segment,
         # then prunes against a near-final threshold
         task_theta: dict = {}
-        if del_bc is None and not big_deletes:
+        if not dels and not big_deletes:
             # prefetch the UNION of the batch's eligible keys in ONE
             # pyarrow read: per-query reads cost 32 driver round-trips and
             # caused the round-4 batch_32_hot 1.9x regression
@@ -752,7 +785,7 @@ class Searcher:
             if len(sn_rows) == 0:
                 return _no_hits()
             return kernel_body(int(key[0]), post_pdf,
-                               *_parse_segnorms(sn_rows), dele2=dele2)
+                               *parse_segnorms(sn_rows), dele2=dele2)
 
         def kernel_sn(key, sn_pdf: pd.DataFrame) -> pd.DataFrame:
             # norms-only: only the MatchAll-bearing qids can match here
@@ -760,15 +793,40 @@ class Searcher:
             if len(sn_rows) == 0:
                 return _no_hits()
             return kernel_body(int(key[0]), pd.DataFrame({"term": []}),
-                               *_parse_segnorms(sn_rows), dele2=dele2,
+                               *parse_segnorms(sn_rows), dele2=dele2,
                                qids=matchall)
+
+        pos_cols = (("pos_offsets", "pos_data")
+                    if any(_needs_positions(q) for q in queries.values())
+                    else ())
+        if local:
+            # the driver path: kernel_body once per segment over a pyarrow
+            # read of the pruned postings rows; MatchAll-bearing qids also
+            # run over the norms of the segments holding no postings (every
+            # segment when there are none) — the coverage rule
+            norms = self.index.segnorms_parsed()
+            dels = dels or {}
+            out, seen = [], set()
+            if has_postings:
+                rows = self.index.postings_rows(
+                    all_terms, self._posting_cols(pos_cols)).to_pandas()
+                for seg, g in rows.groupby("segment"):
+                    seg = int(seg)
+                    seen.add(seg)
+                    if seg in norms:
+                        out.append(kernel_body(
+                            seg, g.reset_index(drop=True), *norms[seg],
+                            dele2=dels.get(seg)))
+            if matchall:
+                for seg in sorted(set(norms) - seen):
+                    out.append(kernel_body(
+                        seg, pd.DataFrame({"term": []}), *norms[seg],
+                        dele2=dels.get(seg), qids=matchall))
+            return pd.concat(out, ignore_index=True) if out else _no_hits()
 
         parts = []
         if has_postings:
-            post = self._posting_frame(all_terms, (
-                ("pos_offsets", "pos_data")
-                if any(_needs_positions(q) for q in queries.values())
-                else ()))
+            post = self._posting_frame(all_terms, pos_cols)
             if (self._hot or self._small_norms) and not big_deletes:
                 # one-stage fast path: norms ride a broadcast instead of a
                 # cogroup side. Hot mode reads the persisted pre-partitioned
@@ -823,7 +881,13 @@ class Searcher:
         cols]) with (score desc, segment asc, docid asc) order.
 
         after=(score, segment, docid) pages past a previous result row
-        (searchAfter, IndexSearcher.java:388-422)."""
+        (searchAfter, IndexSearcher.java:388-422).
+
+        Behind the _driver_path gate the query runs eagerly in this
+        process and the DataFrame holds its rows; otherwise it is the lazy
+        Spark plan."""
+        if self._driver_path():
+            return self._search_local(query, k, mode, with_ids, after)
         res = (self._run(query, k, mode, after=after)
                .orderBy(F.desc("score"), "segment", "docid").limit(k))
         res = _rank_limited(
@@ -837,6 +901,46 @@ class Searcher:
         cols = ["rank", "segment", "docid", "score"] + (
             self.index.id_cols if with_ids else [])
         return res.select(*cols).orderBy("rank")
+
+    def _driver_path(self) -> bool:
+        """Whether a search() runs on the driver: the index-size gate of
+        __init__, plus tombstones the driver holds (not beyond
+        TOMBSTONE_DRIVER_CAP) and no docvalues overlays, which only the
+        Spark docmap applies."""
+        if not self._local or self.index.manifest.get("dv_updates"):
+            return False
+        self._deleted_by_segment()
+        return not self._big_deletes
+
+    def _search_local(self, query, k: int, mode: str, with_ids: bool,
+                      after: tuple | None) -> DataFrame:
+        """search() on the driver: the kernel rows come from _topk_frame
+        (local=True), the id columns from a pyarrow docmap point-read, and
+        the result is a DataFrame over a pyarrow Table — a LocalRelation,
+        so collecting it starts no job either (a DataFrame over a Python
+        list would run one, with a Python task)."""
+        import pyarrow as pa
+        res = (self._topk_frame({"q": self.rewrite(query)}, k, mode, after,
+                                local=True)
+               .sort_values(["score", "segment", "docid"],
+                            ascending=[False, True, True])
+               .head(k))
+        tbl = pa.table({
+            "rank": pa.array(np.arange(1, len(res) + 1), pa.int32()),
+            "segment": pa.array(res["segment"], pa.int32()),
+            "docid": pa.array(res["docid"], pa.int64()),
+            "score": pa.array(res["score"], pa.float32())})
+        if with_ids:
+            ids = self.index.docmap_rows(res["segment"], res["docid"],
+                                         self.index.id_cols)
+            tbl = (tbl.join(ids, ["segment", "docid"], join_type="inner")
+                   .sort_by("rank")
+                   .select(["rank", "segment", "docid", "score",
+                            *self.index.id_cols]))
+        # rank is non-nullable, as row_number makes it on the Spark path
+        tbl = tbl.cast(tbl.schema.set(
+            0, tbl.schema.field(0).with_nullable(False)))
+        return self.index.spark.createDataFrame(tbl)
 
     def matches(self, query) -> DataFrame:
         """All matching docs: DataFrame(segment, docid, score)."""
@@ -1966,7 +2070,7 @@ class Searcher:
                   .toPandas())
         if not len(sn_pdf):
             return []
-        norms, max_doc, fnorms = _parse_segnorms(sn_pdf)
+        norms, max_doc, fnorms = parse_segnorms(sn_pdf)
         reader = SparkSegmentReader(rows, norms, max_doc, field_norms=fnorms)
         from .functions.smallfloat import byte4_to_int
         if isinstance(query, (Q.SpanNearQuery, Q.SpanOrQuery,
@@ -2076,7 +2180,7 @@ class Searcher:
             seg_docs = wanted.get(seg, {})
             if not seg_docs or len(sn_pdf) == 0:
                 return pd.DataFrame({"segment": [], "docid": [], "score": []})
-            norms, max_doc, fnorms = _parse_segnorms(sn_pdf)
+            norms, max_doc, fnorms = parse_segnorms(sn_pdf)
             reader = SparkSegmentReader(post_pdf, norms, max_doc,
                                         field_norms=fnorms)
             m = ex.evaluate(reader, stats, query2)
@@ -2155,24 +2259,6 @@ def _split_sn_deletes(sn_pdf: pd.DataFrame):
     dele = np.unique(
         sn_pdf.loc[~mask, "del_docid"].to_numpy(dtype=np.int64))
     return sn_pdf[mask], (dele if len(dele) else None)
-
-
-def _parse_segnorms(sn_pdf: pd.DataFrame):
-    """(default_norms, max_doc, {field: norms}) from the per-(segment,
-    field) segnorm rows of ONE segment (field NULL = default field;
-    format-1 tables have no field column)."""
-    if "field" not in sn_pdf.columns:
-        return (np.frombuffer(bytes(sn_pdf["norms"].iloc[0]), np.uint8),
-                int(sn_pdf["max_doc"].iloc[0]), {})
-    fnorms: dict = {}
-    base, max_doc = None, 0
-    for rr in sn_pdf.itertuples():
-        arr = np.frombuffer(bytes(rr.norms), np.uint8)
-        if isinstance(rr.field, str):
-            fnorms[rr.field] = arr
-        else:
-            base, max_doc = arr, int(rr.max_doc)
-    return base, max_doc, fnorms
 
 
 def _contains_matchall(q) -> bool:

@@ -1,0 +1,98 @@
+"""Fixed cost of a Spark job, with and without Python tasks.
+
+Runs five tiny probes in perfbench's session shape (local[min(2, nproc)],
+shuffle partitions = task slots, a fixed 1 GB driver heap) and prints, for
+each, the median wall ms per op and the Spark jobs per op:
+
+  jvm_groupby_count      a JVM-only 2-task groupBy().count()
+  apply_in_pandas        an identity groupBy().applyInPandas
+  apply_in_arrow         an identity groupBy().applyInArrow
+  create_df_list         createDataFrame(list of tuples).collect()
+  create_df_arrow        createDataFrame(pyarrow.Table).collect()
+
+The gap between the JVM-only job and the identity UDFs is the per-task
+Python floor that no kernel I/O format can remove; the last two show that
+a DataFrame over a pyarrow Table is a LocalRelation (no job) while one
+over a Python list runs a job with a Python task.
+
+Usage: python scripts/pytask_floor.py [reps]   (default 7)
+The last stdout line is one JSON object {probe: {ms_per_op, jobs_per_op}}.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import statistics
+import sys
+import time
+
+
+def session():
+    from pyspark.sql import SparkSession
+    n = min(2, os.cpu_count() or 1)
+    spark = (SparkSession.builder.master(f"local[{n}]")
+             .appName("pytask_floor")
+             .config("spark.sql.shuffle.partitions", str(n))
+             .config("spark.driver.memory", "1g")
+             .config("spark.driver.extraJavaOptions",
+                     "-Xms1g -XX:+AlwaysPreTouch")
+             .config("spark.ui.enabled", "false")
+             .config("spark.ui.showConsoleProgress", "false")
+             .getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def probes(spark):
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    base = spark.range(0, 1000, 1, 2).withColumn("g", F.col("id") % 2)
+    rows = [(i, float(i)) for i in range(10)]
+    tbl = pa.table({"a": [a for a, _ in rows], "b": [b for _, b in rows]})
+    return {
+        "jvm_groupby_count":
+            lambda: spark.range(0, 1000, 1, 2).groupBy().count().collect(),
+        "apply_in_pandas": lambda: base.groupBy("g").applyInPandas(
+            lambda pdf: pdf, schema=base.schema).collect(),
+        "apply_in_arrow": lambda: base.groupBy("g").applyInArrow(
+            lambda t: t, schema=base.schema).collect(),
+        "create_df_list": lambda: spark.createDataFrame(
+            rows, "a long, b double").collect(),
+        "create_df_arrow": lambda: spark.createDataFrame(tbl).collect(),
+    }
+
+
+def measure(spark, fn, reps: int, group: str) -> dict:
+    sc = spark.sparkContext
+    fn()  # warm: JIT, the Python worker daemon, plan caches
+    wall = []
+    sc.setJobGroup(group, group)
+    try:
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            fn()
+            wall.append((time.perf_counter() - t0) * 1000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return {"ms_per_op": round(statistics.median(wall), 1),
+            "jobs_per_op": round(jobs / reps, 2)}
+
+
+def main():
+    reps = int(sys.argv[1]) if len(sys.argv) > 1 else 7
+    spark = session()
+    try:
+        out = {}
+        for name, fn in probes(spark).items():
+            out[name] = measure(spark, fn, reps, f"floor-{name}")
+            print(f"{name:20s} {out[name]['ms_per_op']:8.1f} ms/op "
+                  f"{out[name]['jobs_per_op']:5.2f} jobs/op", flush=True)
+        print(json.dumps(out))
+    finally:
+        spark.stop()
+
+
+if __name__ == "__main__":
+    main()
