@@ -78,16 +78,10 @@ def main():
     ops = set(sys.argv[1:]) or {"minhash", "simhash", "decontam",
                                 "dupspans", "termvec", "percolate",
                                 "build", "query"}
-    from pyspark.sql import SparkSession, functions as F
-    spark = (SparkSession.builder.master(f"local[{CPUS}]")
-             .appName("lucene-spark-bench-extra")
-             .config("spark.sql.shuffle.partitions", str(CPUS))
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    from pyspark.sql import functions as F
+    from lucene_7_x_9_x_spark.session import local_session
+    spark = local_session(
+        CPUS, heap=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     sc = spark.sparkContext
     print(f"loadavg_start={open('/proc/loadavg').read().split()[0]}",
           flush=True)

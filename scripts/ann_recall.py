@@ -20,14 +20,10 @@ K = 10
 
 
 def main():
-    from pyspark.sql import SparkSession, functions as F
-    spark = (SparkSession.builder.master(
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("ann-recall")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    from pyspark.sql import functions as F
     from lucene_7_x_9_x_spark.pipeline import similarity as sim
+    from lucene_7_x_9_x_spark.session import local_session
+    spark = local_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
 
     emb = (spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
            .withColumn("embedding",

@@ -22,12 +22,10 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def main():
-    from pyspark.sql import SparkSession
     import __spark_entry__ as E
+    from lucene_7_x_9_x_spark.session import local_session
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    spark = local_session(8)
     con = duckdb.connect()
     for t in ["documents", "embeddings", "region", "nation", "customer",
               "supplier", "part", "orders", "lineitem", "events"]:

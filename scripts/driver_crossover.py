@@ -34,26 +34,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
-
-def session(work: str):
-    from pyspark.sql import SparkSession
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(
-            os.pathsep) if p])
-    os.environ["PYSPARK_PYTHON"] = sys.executable
-    n = min(2, os.cpu_count() or 1)
-    spark = (SparkSession.builder.master(f"local[{n}]")
-             .appName("driver_crossover")
-             .config("spark.sql.shuffle.partitions", str(n))
-             .config("spark.driver.memory", "2g")
-             .config("spark.local.dir", os.path.join(work, "spark-local"))
-             .config("spark.sql.warehouse.dir",
-                     os.path.join(work, "warehouse"))
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+from lucene_7_x_9_x_spark.session import local_session
 
 
 def one_size(spark, work: str, n_docs: int, n_queries: int) -> dict:
@@ -117,7 +98,7 @@ def main():
     ap.add_argument("--work", default=None)
     a = ap.parse_args()
     work = a.work or tempfile.mkdtemp(prefix="driver_crossover_")
-    spark = session(work)
+    spark = local_session(min(2, os.cpu_count() or 1), heap="2g", work=work)
     try:
         out = []
         for n in a.n_docs:

@@ -27,21 +27,9 @@ import statistics
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def session():
-    from pyspark.sql import SparkSession
-    n = min(2, os.cpu_count() or 1)
-    spark = (SparkSession.builder.master(f"local[{n}]")
-             .appName("pytask_floor")
-             .config("spark.sql.shuffle.partitions", str(n))
-             .config("spark.driver.memory", "1g")
-             .config("spark.driver.extraJavaOptions",
-                     "-Xms1g -XX:+AlwaysPreTouch")
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+from lucene_7_x_9_x_spark.session import local_session
 
 
 def probes(spark):
@@ -82,7 +70,9 @@ def measure(spark, fn, reps: int, group: str) -> dict:
 
 def main():
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 7
-    spark = session()
+    spark = local_session(
+        min(2, os.cpu_count() or 1), heap="1g",
+        conf={"spark.driver.extraJavaOptions": "-Xms1g -XX:+AlwaysPreTouch"})
     try:
         out = {}
         for name, fn in probes(spark).items():

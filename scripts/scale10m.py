@@ -27,24 +27,20 @@ sys.path.insert(0, REPO)
 
 def main():
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
-    from pyspark.sql import SparkSession, functions as F
-    spark = (SparkSession.builder.master("local[32]")
-             .appName("scale10m")
-             .config("spark.sql.shuffle.partitions", "64")
-             .config("spark.sql.adaptive.enabled", "true")
-             # ~16MB scan splits over the ~2.1GB/10M-doc corpus ->
-             # ~130 input-mode segments of ~75k docs: balanced build
-             # waves and bounded per-task inversion memory
-             .config("spark.sql.files.maxPartitionBytes", "16m")
-             .config("spark.sql.files.openCostInBytes", "1m")
-             # NOT bigger = better: an 80g single-JVM heap let garbage
-             # accumulate until multi-ten-second full GCs dominated the
-             # query tail (130 s outliers on a 4 s query — measured,
-             # BENCH/BASELINE.md 10M section); 20g keeps pauses bounded
-             .config("spark.driver.memory", "20g")
-             .config("spark.driver.maxResultSize", "8g")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    from pyspark.sql import functions as F
+    from lucene_7_x_9_x_spark.session import local_session
+    # NOT bigger = better: an 80g single-JVM heap let garbage accumulate
+    # until multi-ten-second full GCs dominated the query tail (130 s
+    # outliers on a 4 s query — measured, BENCH/BASELINE.md 10M section);
+    # 20g keeps pauses bounded
+    spark = local_session(32, heap="20g", conf={
+        "spark.sql.shuffle.partitions": "64",
+        # ~16MB scan splits over the ~2.1GB/10M-doc corpus -> ~130
+        # input-mode segments of ~75k docs: balanced build waves and
+        # bounded per-task inversion memory
+        "spark.sql.files.maxPartitionBytes": "16m",
+        "spark.sql.files.openCostInBytes": "1m",
+        "spark.driver.maxResultSize": "8g"})
 
     from lucene_7_x_9_x_spark.index import build_index
     from lucene_7_x_9_x_spark.searcher import Searcher

@@ -24,17 +24,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
-from pyspark.sql import SparkSession
+from lucene_7_x_9_x_spark.session import local_session
 cpus = int(sys.argv[1]); corpus = sys.argv[2]; out = sys.argv[3]
-spark = (SparkSession.builder.master(f"local[{cpus}]")
-         .appName(f"scaling-{cpus}")
-         .config("spark.sql.shuffle.partitions", str(cpus))
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.files.maxPartitionBytes", "384k")
-         .config("spark.sql.files.openCostInBytes", "65536")
-         .config("spark.driver.memory", "24g")
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+spark = local_session(cpus, heap="24g", conf={
+    "spark.sql.files.maxPartitionBytes": "384k",
+    "spark.sql.files.openCostInBytes": "65536"})
 from lucene_7_x_9_x_spark.index import build_index
 from lucene_7_x_9_x_spark.searcher import Searcher
 from lucene_7_x_9_x_spark.plans.query import BooleanQuery, Occur, TermQuery
@@ -86,14 +80,10 @@ def main():
     corpus = os.path.join(tmp, "corpus")
 
     # materialize identical input once
-    gen = WORKER  # reuse interpreter bootstrap? generate inline instead
     code = (
         "import sys; sys.path.insert(0, %r)\n"
-        "from pyspark.sql import SparkSession\n"
-        "spark = (SparkSession.builder.master('local[32]')"
-        ".config('spark.ui.enabled','false')"
-        ".config('spark.driver.memory','16g').getOrCreate())\n"
-        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "from lucene_7_x_9_x_spark.session import local_session\n"
+        "spark = local_session(32, heap='16g')\n"
         "from lucene_7_x_9_x_spark.sources.corpus import synth_corpus\n"
         "synth_corpus(spark, %d, partitions=256).write.mode('overwrite')"
         ".parquet(%r)\n"

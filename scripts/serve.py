@@ -107,13 +107,10 @@ def make_handler(searcher):
 
 def serve(index_dir: str, port: int = 8080, hot: bool = False,
           cpus: int = 8):
-    from pyspark.sql import SparkSession
-
     from lucene_7_x_9_x_spark.index import IndexSnapshot
     from lucene_7_x_9_x_spark.searcher import Searcher
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.ui.enabled", "false").getOrCreate())
+    from lucene_7_x_9_x_spark.session import local_session
+    spark = local_session(cpus)
     s = Searcher(IndexSnapshot(spark, index_dir), cache_index=hot)
     srv = HTTPServer(("127.0.0.1", port), make_handler(s))
     print(f"serving {index_dir} on http://127.0.0.1:{port}")

@@ -7,16 +7,11 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder
-         .master(os.environ.get("SPARK_TEST_MASTER", "local[8]"))
-         .appName("lucene-spark-tests")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory",
-                 os.environ.get("SPARK_TEST_DRIVER_MEM", "4g"))
-         .getOrCreate())
+    from lucene_7_x_9_x_spark.session import local_session
+    # SPARK_TEST_MASTER is a local[N] master string
+    master = os.environ.get("SPARK_TEST_MASTER", "local[8]")
+    s = local_session(int(master[len("local["):-1]),
+                      heap=os.environ.get("SPARK_TEST_DRIVER_MEM", "4g"))
     yield s
     s.stop()
 
