@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.analysis import AnalyzerConfig
 from .operators.build import (combine_segment_rows, combined_schema_ddl,
-                              invert_segment)
+                              invert_segment, parse_segnorms)
 
 MANIFEST = "manifest.json"
 # On-disk layout generation, stamped into every manifest.  Version 2 =
@@ -484,24 +484,6 @@ def _key_expr(keys, has_field: bool):
     return expr
 
 
-def parse_segnorms(sn_pdf: pd.DataFrame):
-    """(default_norms, max_doc, {field: norms}) from the per-(segment,
-    field) segnorm rows of ONE segment (field NULL = default field;
-    format-1 tables have no field column)."""
-    if "field" not in sn_pdf.columns:
-        return (np.frombuffer(bytes(sn_pdf["norms"].iloc[0]), np.uint8),
-                int(sn_pdf["max_doc"].iloc[0]), {})
-    fnorms: dict = {}
-    base, max_doc = None, 0
-    for rr in sn_pdf.itertuples():
-        arr = np.frombuffer(bytes(rr.norms), np.uint8)
-        if isinstance(rr.field, str):
-            fnorms[rr.field] = arr
-        else:
-            base, max_doc = arr, int(rr.max_doc)
-    return base, max_doc, fnorms
-
-
 def _analyzer_manifest(cfg: AnalyzerConfig) -> dict:
     """JSON form of an analyzer chain — persisted like the reference's
     per-field analysis configuration so searchers reconstruct the exact
@@ -581,10 +563,6 @@ def build_index(
     id_fields = [(f.name, f.dataType.simpleString())
                  for f in corpus.schema.fields if f.name in id_cols]
     extra_fields = [tuple(x) for x in (extra_fields or [])]
-    xf_cols = [F.col(src).alias(f"__f{i}__")
-               for i, (_, src) in enumerate(extra_fields)]
-    xf_inv = [(name, f"__f{i}__")
-              for i, (name, _) in enumerate(extra_fields)]
     col_types = {f.name: f.dataType.simpleString()
                  for f in corpus.schema.fields}
     if sort_by is not None and sort_by not in col_types:
@@ -594,50 +572,21 @@ def build_index(
     sort_extra = (sort_by is not None and sort_by not in id_cols)
     dm_fields = id_fields + ([(sort_by, col_types[sort_by])]
                              if sort_extra else [])
+    keep = [sort_by] if sort_extra else []
 
     if segment_by == "input":
         if num_batches != 1:
             raise ValueError("batched resume requires segment_by='hash'")
-        prepared = corpus.select(
-            *id_cols, *([sort_by] if sort_extra else []),
-            F.col(text_col).alias("__text__"), *xf_cols,
-            F.sha2(F.col(text_col), 256).alias("content_sha256"),
-        )
+        prepared = _prepare_rows(corpus, id_cols, text_col, extra_fields,
+                                 keep)
         num_segments = prepared.rdd.getNumPartitions()
     else:
         # deterministic segment assignment: hash of doc identity, independent
         # of input partitioning (resume/rebuild produce identical segments)
         seg_col = F.pmod(F.xxhash64(*[F.col(c) for c in id_cols]),
                          F.lit(num_segments)).cast("int")
-        prepared = corpus.select(
-            *id_cols, *([sort_by] if sort_extra else []),
-            F.col(text_col).alias("__text__"), *xf_cols,
-            F.sha2(F.col(text_col), 256).alias("content_sha256"),
-            seg_col.alias("segment"),
-        )
-
-    combined_ddl = combined_schema_ddl(dm_fields)
-
-    def _combine(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
-        postings, docmap = invert_segment(
-            pdf, segment=seg, id_cols=id_cols, text_col="__text__",
-            cfg=cfg, with_positions=with_positions, extra_fields=xf_inv,
-            with_offsets=with_offsets, sort_by=sort_by,
-            field_analyzers=field_analyzers)
-        return combine_segment_rows(postings, docmap, dm_fields,
-                                    [n for n, _ in xf_inv])
-
-    def build_combined(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _combine(int(key[0]), pdf)
-
-    def map_combined(batches):
-        from pyspark import TaskContext
-        seg = TaskContext.get().partitionId()
-        dfs = [b for b in batches if len(b)]
-        if not dfs:  # empty scan split (e.g. sub-row-group file chunk)
-            return
-        pdf = pd.concat(dfs, ignore_index=True)
-        yield _combine(seg, pdf)
+        prepared = _prepare_rows(corpus, id_cols, text_col, extra_fields,
+                                 keep, seg_col)
 
     manifest_path = os.path.join(out_dir, MANIFEST)
     phase_secs: dict[str, float] = {}
@@ -657,26 +606,16 @@ def build_index(
             continue
         t0 = time.time()
         batch_dir = os.path.join(out_dir, f"batch_{b}")
-        if segment_by == "input":
-            # zero-shuffle DWPT path: each scan partition becomes a segment;
-            # rows leave the UDF already sorted by term within the segment
-            out = prepared.mapInPandas(map_combined, schema=combined_ddl)
-            out.write.mode("overwrite").partitionBy("kind").parquet(batch_dir)
-        else:
-            part = prepared if num_batches == 1 else prepared.where(
-                F.pmod(F.col("segment"), num_batches) == b)
-            # explicit repartition: a user-specified partition count that
-            # AQE will NOT coalesce — otherwise adaptive coalescing (64MB
-            # advisory) would collapse small shuffle outputs and run the
-            # inversion UDF at parallelism ~jobsize/64MB instead of one
-            # task per segment
-            segs_in_batch = max(num_segments // num_batches, 1)
-            out = (part.repartition(segs_in_batch, "segment")
-                   .groupBy("segment")
-                   .applyInPandas(build_combined, schema=combined_ddl))
-            (out.sortWithinPartitions("segment", "field", "term")
-                .write.mode("overwrite").partitionBy("kind")
-                .parquet(batch_dir))
+        part = prepared if num_batches == 1 else prepared.where(
+            F.pmod(F.col("segment"), num_batches) == b)
+        _write_batch(
+            part, batch_dir,
+            None if segment_by == "input"
+            else max(num_segments // num_batches, 1),
+            id_cols=id_cols, dm_fields=dm_fields, extra_fields=extra_fields,
+            cfg=cfg, with_positions=with_positions,
+            with_offsets=with_offsets, sort_by=sort_by,
+            field_analyzers=field_analyzers)
         secs = time.time() - t0
         phase_secs[f"invert_write_b{b}"] = round(secs, 2)
         # metrics: one narrow aggregate over the written docmap (postings
@@ -699,69 +638,9 @@ def build_index(
 
     batches = [f"batch_{b}" for b in range(num_batches)]
     t_fin = time.time()
-
-    # ---- finalize: global term dictionary + collection stats (one shuffle
-    # over the tiny terms projection, not the corpus) ----------------------
-    all_postings = spark.read.parquet(
-        *[os.path.join(out_dir, d, "kind=postings") for d in batches])
-    terms_global = (all_postings
-                    .groupBy("field", "term")
-                    .agg(F.sum("doc_freq").alias("doc_freq"),
-                         F.sum("total_term_freq").alias("total_term_freq"))
-                    .persist())
-    terms_dir = os.path.join(out_dir, "terms")
-    (terms_global.repartitionByRange(max(num_segments // 4, 1),
-                                     "field", "term")
-     .sortWithinPartitions("field", "term")
-     .write.mode("overwrite").parquet(terms_dir))
-    sdf = (terms_global.where(F.col("field").isNull()) if extra_fields
-           else terms_global).agg(
-        F.sum("doc_freq").alias("sum_doc_freq"),
-        F.count("*").alias("n_terms")).collect()[0]
-    # per-extra-field sum_ttf: exact (sum over the field's term stats)
-    xf_sum_ttf = {}
-    if extra_fields:
-        for r in (terms_global.where(F.col("field").isNotNull())
-                  .groupBy("field")
-                  .agg(F.sum("total_term_freq").alias("sttf")).collect()):
-            xf_sum_ttf[r["field"]] = int(r["sttf"] or 0)
-    terms_global.unpersist()
-    phase_secs["finalize_terms"] = round(time.time() - t_fin, 2)
-
-    t_fin = time.time()
-    all_docmap = spark.read.parquet(
-        *[os.path.join(out_dir, d, "kind=docmap") for d in batches])
-    xf_counts = [
-        F.sum(F.when(F.col("extra_norms")[i] != 0, 1).otherwise(0))
-        .alias(f"dc_{i}") for i in range(len(extra_fields))]
-    srow = all_docmap.agg(
-        F.count("*").alias("max_doc"),
-        F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("doc_count"),
-        F.sum("dl").alias("sum_total_term_freq"), *xf_counts).collect()[0]
-    phase_secs["finalize_stats"] = round(time.time() - t_fin, 2)
-    t_fin = time.time()
-    # segnorm rows were emitted by the build pass itself: one tiny
-    # column-pruned scan rewrites them into the segnorms table — no docmap
-    # shuffle (the r2 finalize-tail fix)
-    sn_src = spark.read.parquet(
-        *[os.path.join(out_dir, d, "kind=segnorms") for d in batches])
-    (sn_src.select("segment", "field",
-                   F.col("docid").cast("long").alias("max_doc"),
-                   F.col("pos_data").alias("norms"))
-     .coalesce(1)
-     .write.mode("overwrite").parquet(os.path.join(out_dir, "segnorms")))
-    phase_secs["finalize_segnorms"] = round(time.time() - t_fin, 2)
-
-    stats = {
-        "max_doc": srow["max_doc"], "doc_count": int(srow["doc_count"] or 0),
-        "sum_total_term_freq": int(srow["sum_total_term_freq"] or 0),
-        "sum_doc_freq": int(sdf["sum_doc_freq"] or 0),
-        "n_terms": sdf["n_terms"],
-        "per_field": {
-            name: {"doc_count": int(srow[f"dc_{i}"] or 0),
-                   "sum_total_term_freq": xf_sum_ttf.get(name, 0)}
-            for i, (name, _) in enumerate(extra_fields)},
-    }
+    stats = _finalize_tables(spark, out_dir, batches, extra_fields,
+                             num_segments)
+    phase_secs["finalize"] = round(time.time() - t_fin, 2)
 
     manifest = {
         "format_version": FORMAT_VERSION,
@@ -794,6 +673,143 @@ def build_index(
     return IndexSnapshot(spark, out_dir)
 
 
+def _prepare_rows(corpus: DataFrame, id_cols: list, text_col: str,
+                  extra_fields: list, keep=(),
+                  segment=None) -> DataFrame:
+    """The batch writer's input rows: the id columns (and `keep`), the
+    default field's text as __text__, extra field i's source column as
+    __f{i}__, the text's sha256 and, when segments come from a hash of
+    the doc identity, that `segment` column."""
+    return corpus.select(
+        *id_cols, *keep, F.col(text_col).alias("__text__"),
+        *[F.col(src).alias(f"__f{i}__")
+          for i, (_, src) in enumerate(extra_fields)],
+        F.sha2(F.col(text_col), 256).alias("content_sha256"),
+        *([] if segment is None else [segment.alias("segment")]))
+
+
+def _write_batch(prepared: DataFrame, batch_dir: str, n_parts: int | None,
+                 *, id_cols: list, dm_fields: list, extra_fields: list,
+                 cfg: AnalyzerConfig, with_positions: bool,
+                 with_offsets: bool, sort_by: str | None = None,
+                 field_analyzers: dict | None = None) -> None:
+    """Invert _prepare_rows output into one batch directory — the DWPT
+    flush, the one write path of build_index and streaming appends. Each
+    segment is inverted in one task; its postings, docmap and segnorm
+    rows come out of that single pass and are written partitionBy(kind),
+    term-sorted within the segment (row-group stats prune term seeks).
+
+    n_parts=None: every scan partition is a segment (zero corpus
+    shuffle, segment_by="input"). Otherwise rows shuffle to their
+    `segment` through an explicit repartition(n_parts, "segment"): a
+    user-specified partition count AQE will NOT coalesce — otherwise
+    adaptive coalescing (64MB advisory) would collapse small shuffle
+    outputs and run the inversion UDF at parallelism ~jobsize/64MB
+    instead of one task per segment."""
+    xf_names = [name for name, _ in extra_fields]
+    xf_inv = [(name, f"__f{i}__") for i, name in enumerate(xf_names)]
+    ddl = combined_schema_ddl(dm_fields)
+
+    def combine(seg, pdf):
+        postings, docmap = invert_segment(
+            pdf, segment=seg, id_cols=id_cols, text_col="__text__",
+            cfg=cfg, with_positions=with_positions, extra_fields=xf_inv,
+            with_offsets=with_offsets, sort_by=sort_by,
+            field_analyzers=field_analyzers)
+        return combine_segment_rows(postings, docmap, dm_fields, xf_names)
+
+    if n_parts is None:
+        def per_split(batches):
+            from pyspark import TaskContext
+            dfs = [b for b in batches if len(b)]
+            if dfs:  # else an empty scan split (sub-row-group file chunk)
+                yield combine(TaskContext.get().partitionId(),
+                              pd.concat(dfs, ignore_index=True))
+
+        # rows leave the UDF already sorted by term within the segment
+        out = prepared.mapInPandas(per_split, schema=ddl)
+    else:
+        def per_segment(key, pdf):
+            return combine(int(key[0]), pdf)
+
+        out = (prepared.repartition(n_parts, "segment").groupBy("segment")
+               .applyInPandas(per_segment, schema=ddl)
+               .sortWithinPartitions("segment", "field", "term"))
+    out.write.mode("overwrite").partitionBy("kind").parquet(batch_dir)
+
+
+def _finalize_tables(spark: SparkSession, root: str, batches: list,
+                     extra_fields: list, num_segments: int) -> dict:
+    """Commit the global tables of the index at `root` from its batch
+    directories — the one finalize of build, append and every rewrite:
+    the terms dictionary (one shuffle over the postings' term projection,
+    written through a temp dir and an atomic rename), the segnorms table,
+    and the collection stats it returns for the manifest. The caller
+    writes the manifest. Structural columns (dl, norm, extra_norms) are
+    read from the raw batch docmaps: docvalues overlays cannot touch
+    them."""
+    import shutil
+
+    def kind(k):
+        return [os.path.join(root, d, f"kind={k}") for d in batches]
+
+    terms = (spark.read.parquet(*kind("postings"))
+             .groupBy("field", "term")
+             .agg(F.sum("doc_freq").alias("doc_freq"),
+                  F.sum("total_term_freq").alias("total_term_freq"))
+             .persist())
+    tmp_terms = os.path.join(root, "terms_new")
+    (terms.repartitionByRange(max(num_segments // 4, 1), "field", "term")
+     .sortWithinPartitions("field", "term")
+     .write.mode("overwrite").parquet(tmp_terms))
+    tstats = (terms.where(F.col("field").isNull()) if extra_fields
+              else terms).agg(F.sum("doc_freq").alias("sdf"),
+                              F.count("*").alias("n")).collect()[0]
+    # per-extra-field sum_ttf: exact (sum over the field's term stats)
+    xf_sum_ttf = {
+        r["field"]: int(r["sttf"] or 0)
+        for r in (terms.where(F.col("field").isNotNull()).groupBy("field")
+                  .agg(F.sum("total_term_freq").alias("sttf")).collect())
+    } if extra_fields else {}
+    terms.unpersist()
+    final_terms = os.path.join(root, "terms")
+    shutil.rmtree(final_terms, ignore_errors=True)
+    os.replace(tmp_terms, final_terms)
+
+    dm = spark.read.parquet(*kind("docmap"))
+    xf_counts = [
+        F.sum(F.when(F.col("extra_norms")[i] != 0, 1).otherwise(0))
+        .alias(f"dc_{i}") for i in range(len(extra_fields))]
+    srow = dm.agg(F.count("*").alias("max_doc"),
+                  F.sum(F.when(F.col("dl") > 0, 1).otherwise(0))
+                  .alias("doc_count"),
+                  F.sum("dl").alias("sum_ttf"), *xf_counts).collect()[0]
+    # build/append passes emit kind=segnorms rows, so one tiny
+    # column-pruned scan rewrites them into the segnorms table with no
+    # docmap shuffle; compaction/re-sort batches have none — only then
+    # pack the docmap's norms
+    sn_dirs = kind("segnorms")
+    if all(os.path.exists(d) for d in sn_dirs):
+        (spark.read.parquet(*sn_dirs)
+         .select("segment", "field",
+                 F.col("docid").cast("long").alias("max_doc"),
+                 F.col("pos_data").alias("norms"))
+         .coalesce(1)
+         .write.mode("overwrite").parquet(os.path.join(root, "segnorms")))
+    else:
+        write_segnorms(dm, os.path.join(root, "segnorms"),
+                       extra_field_names=[n for n, _ in extra_fields])
+    return {"max_doc": srow["max_doc"],
+            "doc_count": int(srow["doc_count"] or 0),
+            "sum_total_term_freq": int(srow["sum_ttf"] or 0),
+            "sum_doc_freq": int(tstats["sdf"] or 0),
+            "n_terms": tstats["n"],
+            "per_field": {
+                name: {"doc_count": int(srow[f"dc_{i}"] or 0),
+                       "sum_total_term_freq": xf_sum_ttf.get(name, 0)}
+                for i, (name, _) in enumerate(extra_fields)}}
+
+
 def write_segnorms(docmap_df: DataFrame, out_path: str,
                    extra_field_names: list | None = None) -> None:
     """Pack each segment's norm bytes (docid order) into one binary row per
@@ -802,7 +818,7 @@ def write_segnorms(docmap_df: DataFrame, out_path: str,
     the Lucene .nvd/.nvm analogue)."""
     xf = extra_field_names or []
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, pdf):
         pdf = pdf.sort_values("docid")
         rows = {"segment": [int(key[0])], "field": [None],
                 "max_doc": [len(pdf)],

@@ -53,6 +53,128 @@ def postings_schema_ddl() -> str:
     return ", ".join(f"{n} {t}" for n, t in POSTINGS_COLS)
 
 
+# the block-encoded columns of a postings row, and the per-posting blob
+# streams (positions, char offsets, payloads) as (slice bounds, blob)
+BLOCK_COLS = ["block_max_docs", "block_ns", "block_docs", "block_freqs",
+              "imp_freqs", "imp_norms"]
+SLICED_COLS = (("pos_offsets", "pos_data"), ("off_offsets", "off_data"),
+               ("pay_offsets", "pay_data"))
+
+
+def encode_postings(docids: np.ndarray, freqs: np.ndarray,
+                    norms: np.ndarray) -> dict:
+    """Block-encode one term's postings (ascending docids, their freqs and
+    norm bytes): doc and freq blocks plus one impact frontier per block —
+    the Lucene84PostingsWriter role, shared by the build's multi-block
+    terms and every postings rewrite (compaction, re-sort)."""
+    blocks, ns, max_docs = codec.encode_doc_blocks(docids)
+    impf, impn = [], []
+    for bs in range(0, len(docids), codec.BLOCK_SIZE):
+        be = bs + codec.BLOCK_SIZE
+        ff, nn = codec.impacts_frontier(freqs[bs:be], norms[bs:be])
+        impf.append(ff.astype(np.int32))
+        impn.append(nn.astype(np.int32))
+    return {"block_max_docs": np.asarray(max_docs, dtype=np.int64),
+            "block_ns": np.asarray(ns, dtype=np.int32),
+            "block_docs": blocks,
+            "block_freqs": codec.encode_freq_blocks(freqs),
+            "imp_freqs": impf, "imp_norms": impn}
+
+
+def decode_postings(row) -> tuple[np.ndarray, np.ndarray]:
+    """(docids, freqs) of a whole postings row (an itertuples record)."""
+    ds, fs, base = [], [], -1
+    for j in range(len(row.block_ns)):
+        n = int(row.block_ns[j])
+        ds.append(codec.decode_doc_block(bytes(row.block_docs[j]), n, base))
+        fs.append(codec.decode_freq_block(bytes(row.block_freqs[j]), n))
+        base = int(row.block_max_docs[j])
+    if not ds:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    return np.concatenate(ds), np.concatenate(fs)
+
+
+def reencode_postings(row, docids: np.ndarray, freqs: np.ndarray,
+                      sel: np.ndarray, new_ids: np.ndarray,
+                      norms: np.ndarray) -> dict:
+    """Every postings column but term/field/segment after a docid remap.
+    `docids`/`freqs` are the row's decoded postings, `sel` picks and
+    orders the surviving ones (a keep mask's indices, an argsort),
+    `new_ids` are their new docids in that order (ascending) and `norms`
+    the field's norm bytes by OLD docid. Blocks and impacts re-encode;
+    positions/offsets/payloads need no re-encode (per-doc slices are
+    independent), so the selected slices are re-concatenated and
+    re-offset."""
+    f = freqs[sel]
+    out = encode_postings(new_ids, f, norms[docids[sel]])
+    out["doc_freq"] = len(new_ids)
+    out["total_term_freq"] = int(f.sum())
+    for ocol, dcol in SLICED_COLS:
+        if getattr(row, dcol, None) is None:
+            out[ocol] = out[dcol] = None
+            continue
+        offs = np.asarray(getattr(row, ocol), np.int64)
+        data = bytes(getattr(row, dcol))
+        parts = [data[offs[i]:offs[i + 1]] for i in sel]
+        lens = np.fromiter((len(p) for p in parts), np.int64, len(parts))
+        out[ocol] = np.concatenate(([0], np.cumsum(lens)))
+        out[dcol] = b"".join(parts)
+    return out
+
+
+def rewrite_postings(segment: int, post_pdf: pd.DataFrame,
+                     sn_pdf: pd.DataFrame, remap) -> pd.DataFrame:
+    """One segment's postings rows rewritten through a docid remap — the
+    SegmentMerger + MergeState.DocMap role (solr-8.4.0/.../index/
+    SegmentMerger.java) behind compaction and index re-sort.
+    `remap(docids) -> (sel, new_ids)` as in reencode_postings; `sn_pdf`
+    holds the segment's segnorm rows, so impact frontiers recompute
+    against each posting's own field's norms. A row left with no
+    postings (a term whose every doc was dropped) disappears."""
+    default_norms, _, fnorms = parse_segnorms(sn_pdf)
+    norms_by_field = {None: default_norms, **fnorms}
+    pcols = [n for n, _ in POSTINGS_COLS]
+    out = {c: [] for c in pcols}
+    has_field = "field" in post_pdf.columns
+    for r in post_pdf.itertuples():
+        fld = r.field if has_field and isinstance(r.field, str) else None
+        docids, freqs = decode_postings(r)
+        sel, new_ids = remap(docids)
+        if len(sel) == 0:
+            continue
+        out["term"].append(r.term)
+        out["field"].append(fld)
+        out["segment"].append(segment)
+        for c, v in reencode_postings(r, docids, freqs, sel, new_ids,
+                                      norms_by_field[fld]).items():
+            out[c].append(v)
+    res = pd.DataFrame({c: pd.Series(v, dtype=object)
+                        for c, v in out.items()})
+    if len(res):
+        res["segment"] = res["segment"].astype(np.int32)
+        res["doc_freq"] = res["doc_freq"].astype(np.int64)
+        res["total_term_freq"] = res["total_term_freq"].astype(np.int64)
+    return res
+
+
+def parse_segnorms(sn_pdf: pd.DataFrame):
+    """(default_norms, max_doc, {field: norms}) from the per-(segment,
+    field) segnorm rows of ONE segment (field NULL = default field;
+    format-1 tables have no field column)."""
+    if "field" not in sn_pdf.columns:
+        return (np.frombuffer(bytes(sn_pdf["norms"].iloc[0]), np.uint8),
+                int(sn_pdf["max_doc"].iloc[0]), {})
+    fnorms: dict = {}
+    base, max_doc = None, 0
+    for rr in sn_pdf.itertuples():
+        arr = np.frombuffer(bytes(rr.norms), np.uint8)
+        if isinstance(rr.field, str):
+            fnorms[rr.field] = arr
+        else:
+            base, max_doc = arr, int(rr.max_doc)
+    return base, max_doc, fnorms
+
+
 def _vint_lengths(vals: np.ndarray) -> np.ndarray:
     nb = np.ones(len(vals), dtype=np.int64)
     v = vals.astype(np.uint64)
@@ -297,20 +419,13 @@ def _invert_tokens(row_idx, pos, terms_flat, norms, segment: int,
     mv = memoryview(pos_data_all) if with_positions else None
     mv_doc = memoryview(doc_buf)
     mv_freq = memoryview(freq_buf)
-    BS = codec.BLOCK_SIZE
 
-    def _fill(col: list, idx: list, values: list) -> None:
+    def _fill(col: str, idx: list, values: list) -> None:
         for i, v in zip(idx, values):
-            col[i] = v
+            blk[col][i] = v
 
-    col_bdocs: list = [None] * n_terms
-    col_bfreqs: list = [None] * n_terms
-    col_ns: list = [None] * n_terms
-    col_maxd: list = [None] * n_terms
-    col_impf: list = [None] * n_terms
-    col_impn: list = [None] * n_terms
-
-    is_tail = term_df <= BS
+    blk = {c: [None] * n_terms for c in BLOCK_COLS}
+    is_tail = term_df <= codec.BLOCK_SIZE
     tail = np.nonzero(is_tail)[0]
     if len(tail):
         tail_l = tail.tolist()
@@ -318,41 +433,27 @@ def _invert_tokens(row_idx, pos, terms_flat, norms, segment: int,
         de = doc_off[term_end[tail]].tolist()
         fs = freq_off[term_start[tail]].tolist()
         fe = freq_off[term_end[tail]].tolist()
-        _fill(col_bdocs, tail_l,
+        _fill("block_docs", tail_l,
               [[VB + bytes(mv_doc[a:b])] for a, b in zip(ds, de)])
-        _fill(col_bfreqs, tail_l,
+        _fill("block_freqs", tail_l,
               [[VB + bytes(mv_freq[a:b])] for a, b in zip(fs, fe)])
-        _fill(col_ns, tail_l, [[d] for d in term_df[tail].tolist()])
-        _fill(col_maxd, tail_l,
+        _fill("block_ns", tail_l, [[d] for d in term_df[tail].tolist()])
+        _fill("block_max_docs", tail_l,
               [[m] for m in max_doc_of_term[tail].tolist()])
         uni = tail[fmax[tail] == fmin[tail]]
-        _fill(col_impf, uni.tolist(), [[[f]] for f in fmax[uni].tolist()])
-        _fill(col_impn, uni.tolist(), [[[n]] for n in nmin[uni].tolist()])
+        _fill("imp_freqs", uni.tolist(), [[[f]] for f in fmax[uni].tolist()])
+        _fill("imp_norms", uni.tolist(), [[[n]] for n in nmin[uni].tolist()])
         for ti in tail[fmax[tail] != fmin[tail]].tolist():
             s, e = term_start[ti], term_end[ti]
             ff, nn = codec.impacts_frontier(freqs[s:e], post_norm[s:e])
-            col_impf[ti] = [ff.astype(np.int32)]
-            col_impn[ti] = [nn.astype(np.int32)]
+            blk["imp_freqs"][ti] = [ff.astype(np.int32)]
+            blk["imp_norms"][ti] = [nn.astype(np.int32)]
 
     for ti in np.nonzero(~is_tail)[0].tolist():
         s, e = term_start[ti], term_end[ti]
-        df = e - s
-        docids = post_doc[s:e]
-        tfs = freqs[s:e]
-        blocks, ns, max_docs = codec.encode_doc_blocks(docids)
-        col_bdocs[ti] = blocks
-        col_bfreqs[ti] = codec.encode_freq_blocks(tfs)
-        col_ns[ti] = np.asarray(ns, dtype=np.int32)
-        col_maxd[ti] = np.asarray(max_docs, dtype=np.int64)
-        impf, impn = [], []
-        tnorms = post_norm[s:e]
-        for bs in range(0, df, BS):
-            be = min(bs + BS, df)
-            ff, nn = codec.impacts_frontier(tfs[bs:be], tnorms[bs:be])
-            impf.append(ff.astype(np.int32))
-            impn.append(nn.astype(np.int32))
-        col_impf[ti] = impf
-        col_impn[ti] = impn
+        for c, v in encode_postings(post_doc[s:e], freqs[s:e],
+                                    post_norm[s:e]).items():
+            blk[c][ti] = v
 
     if with_positions:
         po = post_pos_offsets
@@ -405,12 +506,7 @@ def _invert_tokens(row_idx, pos, terms_flat, norms, segment: int,
         "segment": np.full(n_terms, segment, dtype=np.int32),
         "doc_freq": term_df,
         "total_term_freq": ttf,
-        "block_max_docs": S(col_maxd),
-        "block_ns": S(col_ns),
-        "block_docs": S(col_bdocs),
-        "block_freqs": S(col_bfreqs),
-        "imp_freqs": S(col_impf),
-        "imp_norms": S(col_impn),
+        **{c: S(v) for c, v in blk.items()},
         "pos_offsets": S(col_poff),
         "pos_data": S(col_pdat),
         "off_offsets": S(col_ooff),
@@ -425,10 +521,9 @@ def combine_segment_rows(postings: pd.DataFrame, docmap: pd.DataFrame,
     """Union-table rows for one built segment, kind-discriminated:
     postings rows + docmap rows + one segnorm row per field. Column reuse
     in the union: segnorm rows carry max_doc in `docid` and the packed
-    norm bytes in `pos_data` (field NULL = default field). Shared by the
-    one-shot builder (index.build_index) and streaming appends
-    (streaming.incremental.append_batch) so the row shapes can never
-    drift apart."""
+    norm bytes in `pos_data` (field NULL = default field). Called only by
+    the one batch writer (index._write_batch), which serves both the
+    one-shot build and streaming appends."""
     postings = postings.copy()
     postings.insert(0, "kind", "postings")
     dm = pd.DataFrame({"kind": "docmap", "term": None, "field": None,

@@ -25,13 +25,12 @@ import time
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions import codec
 from ..index import (MANIFEST, IndexSnapshot, _atomic_write_json,
                      locked_writer)
-from ..operators.build import POSTINGS_COLS, postings_schema_ddl
+from ..operators.build import (POSTINGS_COLS, postings_schema_ddl,
+                               rewrite_postings)
 
 
 @locked_writer("index_dir")
@@ -155,13 +154,13 @@ def compact_index(spark: SparkSession, index: IndexSnapshot,
     with MergeState.DocMap). Segments keep their ids; within a segment the
     kept docs are renumbered by rank: new_id = old_id - |deleted < old_id|.
 
-    Per-segment work runs in one cogroup kernel: doc blocks are decoded,
-    filtered, and re-encoded; freq blocks likewise; impact frontiers are
-    recomputed from the surviving (freq, norm) pairs; position payloads
-    need NO re-encoding (per-doc slices are independent — kept slices are
-    concatenated and re-offset). Global terms/stats are re-finalized, so
-    docFreq no longer counts deleted docs — exactly the post-merge
-    semantics of the reference."""
+    Per-segment work runs in one cogroup kernel through the shared
+    postings re-encoder (operators.build.rewrite_postings): postings
+    decode, drop the deleted docs, renumber and re-encode; impact
+    frontiers are recomputed from the surviving (freq, norm) pairs; kept
+    position/offset/payload slices are concatenated and re-offset. Global
+    terms/stats are re-finalized, so docFreq no longer counts deleted
+    docs — exactly the post-merge semantics of the reference."""
     from ..streaming.incremental import finalize
     t0 = time.time()
     os.makedirs(out_dir, exist_ok=True)
@@ -213,100 +212,30 @@ def compact_index(spark: SparkSession, index: IndexSnapshot,
                           *other_cols)
 
     # ---- postings: decode -> filter -> renumber -> re-encode -----------
-    schema = postings_schema_ddl()
     pcols = [n for n, _ in POSTINGS_COLS]
 
-    def kernel(key, post_pdf: pd.DataFrame, sn_pdf: pd.DataFrame
-               ) -> pd.DataFrame:
-        seg = int(key[0])
+    def kernel(key, post_pdf, sn_pdf):
         if len(sn_pdf) == 0:
             return post_pdf[pcols]  # untouched segment passes through
         dval = sn_pdf["dels"].iloc[0]
         if dval is None or len(dval) == 0:
             return post_pdf[pcols]
         deleted = np.asarray(dval, dtype=np.int64)
-        # per-field norms rows (field NULL = default): impact frontiers are
-        # recomputed against the POSTING's own field's norms
-        norms_by_field = {}
-        for rr in sn_pdf.itertuples():
-            fkey = rr.field if isinstance(getattr(rr, "field", None), str) \
-                else None
-            norms_by_field[fkey] = np.frombuffer(bytes(rr.norms), np.uint8)
-        out = {c: [] for c in pcols}
-        has_field = "field" in post_pdf.columns
-        for r in post_pdf.itertuples():
-            rfld = (r.field if has_field and isinstance(r.field, str)
-                    else None)
-            norms = norms_by_field[rfld]
-            ds, fs = [], []
-            base = -1
-            for j in range(len(r.block_ns)):
-                n = int(r.block_ns[j])
-                d = codec.decode_doc_block(bytes(r.block_docs[j]), n, base)
-                fs.append(codec.decode_freq_block(bytes(r.block_freqs[j]),
-                                                  n))
-                base = int(r.block_max_docs[j])
-                ds.append(d)
-            docids = np.concatenate(ds) if ds else np.zeros(0, np.int64)
-            freqs = np.concatenate(fs) if fs else np.zeros(0, np.int64)
+
+        def drop_deleted(docids):
             keep = ~np.isin(docids, deleted, assume_unique=True)
-            if not keep.any():
-                continue  # term vanished from this segment
-            kept_old = docids[keep]
-            kept_f = freqs[keep]
-            kept_norm = norms[kept_old]
-            new_ids = kept_old - np.searchsorted(deleted, kept_old)
-            blocks, ns, max_docs = codec.encode_doc_blocks(new_ids)
-            fblocks = codec.encode_freq_blocks(kept_f)
-            impf, impn = [], []
-            BS = codec.BLOCK_SIZE
-            for bs in range(0, len(new_ids), BS):
-                be = min(bs + BS, len(new_ids))
-                ff, nn = codec.impacts_frontier(kept_f[bs:be],
-                                                kept_norm[bs:be])
-                impf.append(ff.astype(np.int32))
-                impn.append(nn.astype(np.int32))
-            out["term"].append(r.term)
-            out["field"].append(rfld)
-            out["segment"].append(seg)
-            out["doc_freq"].append(len(new_ids))
-            out["total_term_freq"].append(int(kept_f.sum()))
-            out["block_max_docs"].append(np.asarray(max_docs, np.int64))
-            out["block_ns"].append(np.asarray(ns, np.int32))
-            out["block_docs"].append(blocks)
-            out["block_freqs"].append(fblocks)
-            out["imp_freqs"].append(impf)
-            out["imp_norms"].append(impn)
-            for ocol, dcol in (("pos_offsets", "pos_data"),
-                               ("off_offsets", "off_data"),
-                               ("pay_offsets", "pay_data")):
-                if getattr(r, dcol, None) is not None:
-                    offs = np.asarray(getattr(r, ocol), np.int64)
-                    data = bytes(getattr(r, dcol))
-                    parts = [data[offs[i]:offs[i + 1]]
-                             for i in np.nonzero(keep)[0]]
-                    lens = np.fromiter((len(p) for p in parts), np.int64,
-                                       len(parts))
-                    out[ocol].append(
-                        np.concatenate(([0], np.cumsum(lens))))
-                    out[dcol].append(b"".join(parts))
-                else:
-                    out[ocol].append(None)
-                    out[dcol].append(None)
-        res = pd.DataFrame({c: pd.Series(v, dtype=object)
-                            for c, v in out.items()})
-        if len(res):
-            res["segment"] = res["segment"].astype(np.int32)
-            res["doc_freq"] = res["doc_freq"].astype(np.int64)
-            res["total_term_freq"] = res["total_term_freq"].astype(np.int64)
-        return res
+            sel = np.nonzero(keep)[0]
+            kept = docids[sel]
+            return sel, kept - np.searchsorted(deleted, kept)
+
+        return rewrite_postings(int(key[0]), post_pdf, sn_pdf, drop_deleted)
 
     post = index.postings()
     if "field" not in post.columns:  # format-1 snapshot: single field
         post = post.withColumn("field", F.lit(None).cast("string"))
     sn = index.segnorms().join(del_arrays, "segment", "left")
     new_post = (post.groupBy("segment").cogroup(sn.groupBy("segment"))
-                .applyInPandas(kernel, schema=schema))
+                .applyInPandas(kernel, schema=postings_schema_ddl()))
 
     batch_dir = os.path.join(out_dir, "batch_0")
     (new_post.repartitionByRange(

@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..index import (MANIFEST, IndexSnapshot, _atomic_write_json,
                      locked_writer)
@@ -39,7 +39,8 @@ def update_doc_values(spark: SparkSession, index_dir: str, field: str,
     idx = IndexSnapshot(spark, index_dir)
     if field == idx.manifest.get("index_sort"):
         raise ValueError(f"cannot update index-sort field {field!r}")
-    if field in ("segment", "docid", *idx.id_cols, "norm", "dl"):
+    if field in ("segment", "docid", *idx.id_cols, "norm", "dl",
+                 "extra_norms"):
         raise ValueError(f"column {field!r} is structural, not docvalues")
     base = spark.read.parquet(*[
         os.path.join(index_dir, d, "kind=docmap")

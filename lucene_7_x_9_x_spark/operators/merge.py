@@ -22,7 +22,6 @@ solr-8.4.0/.../index/TieredMergePolicy.java:88-101).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -34,7 +33,8 @@ from pyspark.sql import SparkSession, functions as F
 from ..functions import codec
 from ..index import (MANIFEST, IndexSnapshot, _atomic_write_json,
                      locked_writer)
-from .build import POSTINGS_COLS
+from .build import (POSTINGS_COLS, SLICED_COLS, postings_schema_ddl,
+                    rewrite_postings)
 
 
 def _rebase_row_arrays(row: dict, base: int) -> dict:
@@ -87,9 +87,7 @@ def _concat_rows(rows: list[dict], term, new_segment: int,
         "imp_freqs": [x for r in rows for x in r["imp_freqs"]],
         "imp_norms": [x for r in rows for x in r["imp_norms"]],
     }
-    for ocol, dcol in (("pos_offsets", "pos_data"),
-                       ("off_offsets", "off_data"),
-                       ("pay_offsets", "pay_data")):
+    for ocol, dcol in SLICED_COLS:
         if rows[0].get(dcol) is not None:
             offs, data, shift = [], [], 0
             for r in rows:
@@ -102,6 +100,35 @@ def _concat_rows(rows: list[dict], term, new_segment: int,
         else:
             out[ocol] = None
             out[dcol] = None
+    return out
+
+
+def _merge_terms(pdf: pd.DataFrame, new_segment: int,
+                 partial: bool = False) -> pd.DataFrame:
+    """Rebase and concatenate, per (field, term), the postings rows of one
+    merge group in old_segment order. A salted stage-1 (`partial`) result
+    keeps old_segment (its first source, for stage-2 ordering) and
+    base 0 (already rebased)."""
+    pdf = pdf.sort_values("old_segment")
+    pcols = [n for n, _ in POSTINGS_COLS]
+    merged = {c: [] for c in pcols + (["old_segment", "base"]
+                                      if partial else [])}
+    # None-safe per-(field, term) grouping: pandas groupby drops null
+    # keys, so the default field's NULL is mapped to a sentinel
+    fk = pdf["field"].map(lambda x: x if isinstance(x, str) else "\x00")
+    for (fs, term), g in pdf.groupby([fk, pdf["term"]], sort=False):
+        rows = [_rebase_row_arrays(r, int(r["base"]))
+                for r in g.to_dict("records")]
+        m = _concat_rows(rows, term, new_segment,
+                         fld=None if fs == "\x00" else fs)
+        for c in pcols:
+            merged[c].append(m[c])
+        if partial:
+            merged["old_segment"].append(int(g["old_segment"].min()))
+            merged["base"].append(0)
+    out = pd.DataFrame(merged)
+    if len(out):
+        out["segment"] = out["segment"].astype(np.int32)
     return out
 
 
@@ -203,27 +230,10 @@ def merge_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
             .withColumn("base", bmap[F.col("segment")])
             .withColumn("segment", smap[F.col("segment")]))
 
-    pcols = [n for n, _ in POSTINGS_COLS]
-    schema = ", ".join(f"{n} {t}" for n, t in POSTINGS_COLS)
+    schema = postings_schema_ddl()
 
-    def do_merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("old_segment")
-        merged = {c: [] for c in pcols}
-        # None-safe per-(field, term) grouping: pandas groupby drops null
-        # keys, so the default field's NULL is mapped to a sentinel
-        fk = pdf["field"].map(lambda x: x if isinstance(x, str) else "\x00")
-        for (fs, term), g in pdf.groupby([fk, pdf["term"]], sort=False):
-            rows = []
-            for rec in g.to_dict("records"):
-                rows.append(_rebase_row_arrays(rec, int(rec["base"])))
-            m = _concat_rows(rows, term, int(key[0]),
-                             fld=None if fs == "\x00" else fs)
-            for c in pcols:
-                merged[c].append(m[c])
-        out = pd.DataFrame(merged)
-        if len(out):
-            out["segment"] = out["segment"].astype(np.int32)
-        return out
+    def do_merge(key, pdf):
+        return _merge_terms(pdf, int(key[0]))
 
     tb = F.pmod(F.xxhash64("field", "term"), F.lit(term_buckets))
     if salt > 1:
@@ -239,23 +249,7 @@ def merge_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
                   .groupBy("segment", "field", "term", "salt"))
 
         def partial(key, pdf):
-            pdf = pdf.sort_values("old_segment")
-            merged = {c: [] for c in pcols + ["old_segment", "base"]}
-            fk = pdf["field"].map(
-                lambda x: x if isinstance(x, str) else "\x00")
-            for (fs, term), g in pdf.groupby([fk, pdf["term"]], sort=False):
-                rows = [_rebase_row_arrays(r, int(r["base"]))
-                        for r in g.to_dict("records")]
-                m = _concat_rows(rows, term, int(key[0]),
-                                 fld=None if fs == "\x00" else fs)
-                for c in pcols:
-                    merged[c].append(m[c])
-                merged["old_segment"].append(int(g["old_segment"].min()))
-                merged["base"].append(0)  # already rebased
-            out = pd.DataFrame(merged)
-            if len(out):
-                out["segment"] = out["segment"].astype(np.int32)
-            return out
+            return _merge_terms(pdf, int(key[0]), partial=True)
 
         schema1 = schema + ", old_segment int, base long"
         pre = stage1.applyInPandas(partial, schema=schema1)
@@ -361,13 +355,8 @@ def resort_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
     when the docmap doesn't already store it (an index built with
     sort_by= stores it; others don't). The column is stored in the new
     docmap either way, so sorted_topk early-termination works."""
-    import time as _time
-    import uuid as _uuid
-    from ..index import MANIFEST, IndexSnapshot as _Snap, \
-        _atomic_write_json
-    from ..operators.build import POSTINGS_COLS, postings_schema_ddl
     from ..streaming.incremental import finalize
-    t0 = _time.time()
+    t0 = time.time()
     if index.deletes() is not None:
         raise ValueError("resort_index requires a tombstone-free index — "
                          "compact_index first (early termination counts "
@@ -399,94 +388,27 @@ def resort_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
                     F.struct("docid", "new_docid"))),
                 lambda s: s["new_docid"]).alias("perm")))
 
-    schema = postings_schema_ddl()
     pcols = [n for n, _ in POSTINGS_COLS]
 
-    def kernel(key, post_pdf: pd.DataFrame, side_pdf: pd.DataFrame
-               ) -> pd.DataFrame:
-        seg = int(key[0])
+    def kernel(key, post_pdf, side_pdf):
         if len(side_pdf) == 0 or len(post_pdf) == 0:
             return post_pdf[pcols] if len(post_pdf) else \
                 pd.DataFrame({c: [] for c in pcols})
         pm = np.asarray(side_pdf["perm"].iloc[0], dtype=np.int64)
-        norms_by_field = {}
-        for rr in side_pdf.itertuples():
-            fkey = rr.field if isinstance(getattr(rr, "field", None), str) \
-                else None
-            norms_by_field[fkey] = np.frombuffer(bytes(rr.norms), np.uint8)
-        out = {c: [] for c in pcols}
-        has_field = "field" in post_pdf.columns
-        for r in post_pdf.itertuples():
-            rfld = (r.field if has_field and isinstance(r.field, str)
-                    else None)
-            norms = norms_by_field[rfld]
-            ds, fs = [], []
-            base = -1
-            for j in range(len(r.block_ns)):
-                n = int(r.block_ns[j])
-                ds.append(codec.decode_doc_block(bytes(r.block_docs[j]),
-                                                 n, base))
-                fs.append(codec.decode_freq_block(
-                    bytes(r.block_freqs[j]), n))
-                base = int(r.block_max_docs[j])
-            docids = np.concatenate(ds) if ds else np.zeros(0, np.int64)
-            freqs = np.concatenate(fs) if fs else np.zeros(0, np.int64)
+
+        def permute(docids):
             new_ids = pm[docids]
             order = np.argsort(new_ids)
-            s_ids = new_ids[order]
-            s_f = freqs[order]
-            s_norm = norms[docids][order]  # a doc keeps its norm byte
-            blocks, ns, max_docs = codec.encode_doc_blocks(s_ids)
-            fblocks = codec.encode_freq_blocks(s_f)
-            impf, impn = [], []
-            BS = codec.BLOCK_SIZE
-            for bs in range(0, len(s_ids), BS):
-                be = min(bs + BS, len(s_ids))
-                ff, nn = codec.impacts_frontier(s_f[bs:be],
-                                                s_norm[bs:be])
-                impf.append(ff.astype(np.int32))
-                impn.append(nn.astype(np.int32))
-            out["term"].append(r.term)
-            out["field"].append(rfld)
-            out["segment"].append(seg)
-            out["doc_freq"].append(len(s_ids))
-            out["total_term_freq"].append(int(s_f.sum()))
-            out["block_max_docs"].append(np.asarray(max_docs, np.int64))
-            out["block_ns"].append(np.asarray(ns, np.int32))
-            out["block_docs"].append(blocks)
-            out["block_freqs"].append(fblocks)
-            out["imp_freqs"].append(impf)
-            out["imp_norms"].append(impn)
-            for ocol, dcol in (("pos_offsets", "pos_data"),
-                               ("off_offsets", "off_data"),
-                               ("pay_offsets", "pay_data")):
-                if getattr(r, dcol, None) is not None:
-                    offs = np.asarray(getattr(r, ocol), np.int64)
-                    data = bytes(getattr(r, dcol))
-                    parts = [data[offs[i]:offs[i + 1]] for i in order]
-                    lens = np.fromiter((len(p) for p in parts), np.int64,
-                                       len(parts))
-                    out[ocol].append(
-                        np.concatenate(([0], np.cumsum(lens))))
-                    out[dcol].append(b"".join(parts))
-                else:
-                    out[ocol].append(None)
-                    out[dcol].append(None)
-        res = pd.DataFrame({c: pd.Series(v, dtype=object)
-                            for c, v in out.items()})
-        if len(res):
-            res["segment"] = res["segment"].astype(np.int32)
-            res["doc_freq"] = res["doc_freq"].astype(np.int64)
-            res["total_term_freq"] = \
-                res["total_term_freq"].astype(np.int64)
-        return res
+            return order, new_ids[order]
+
+        return rewrite_postings(int(key[0]), post_pdf, side_pdf, permute)
 
     post = index.postings()
     if "field" not in post.columns:
         post = post.withColumn("field", F.lit(None).cast("string"))
     side = index.segnorms().join(perm, "segment")
     new_post = (post.groupBy("segment").cogroup(side.groupBy("segment"))
-                .applyInPandas(kernel, schema=schema))
+                .applyInPandas(kernel, schema=postings_schema_ddl()))
     batch_dir = os.path.join(out_dir, "batch_0")
     (new_post.repartitionByRange(
         max(int(index.manifest.get("num_segments", 8)), 8),
@@ -500,12 +422,15 @@ def resort_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
                                                    "kind=docmap")))
     manifest = dict(index.manifest)
     manifest.update({
-        "run_id": _uuid.uuid4().hex[:12],
+        "run_id": uuid.uuid4().hex[:12],
         "batches": ["batch_0"],
         "index_sort": sort_by,
+        # the new docmap was built from the OVERLAID view: updates
+        # materialized (their files stay behind in the source index)
+        "dv_updates": [],
         "checkpoints": index.manifest.get("checkpoints", []) + [{
             "stage": "resort", "status": "done", "sort_by": sort_by,
-            "secs": round(_time.time() - t0, 3)}],
+            "secs": round(time.time() - t0, 3)}],
     })
     _atomic_write_json(os.path.join(out_dir, MANIFEST), manifest)
     return finalize(spark, out_dir)

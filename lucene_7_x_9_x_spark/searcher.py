@@ -778,16 +778,17 @@ class Searcher:
             return pd.concat(out, ignore_index=True)
 
         # pyspark picks the grouped-UDF calling convention by argument
-        # count, so these keep exactly (key, post[, sn]) parameters
-        def kernel(key, post_pdf: pd.DataFrame, sn_pdf: pd.DataFrame
-                   ) -> pd.DataFrame:
+        # count, so these keep exactly (key, post[, sn]) parameters — and
+        # no type hints: any annotation makes it try (and, without one on
+        # `key`, fail) eval-type inference, with a warning per call
+        def kernel(key, post_pdf, sn_pdf):
             sn_rows, dele2 = _split_sn_deletes(sn_pdf)
             if len(sn_rows) == 0:
                 return _no_hits()
             return kernel_body(int(key[0]), post_pdf,
                                *parse_segnorms(sn_rows), dele2=dele2)
 
-        def kernel_sn(key, sn_pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel_sn(key, sn_pdf):
             # norms-only: only the MatchAll-bearing qids can match here
             sn_rows, dele2 = _split_sn_deletes(sn_pdf)
             if len(sn_rows) == 0:
@@ -836,7 +837,7 @@ class Searcher:
                 # can't coalesce the compute-bound kernel onto one task)
                 bc = self._segnorms_broadcast()
 
-                def kernel_hot(key, post_pdf: pd.DataFrame) -> pd.DataFrame:
+                def kernel_hot(key, post_pdf):
                     got = bc.value.get(int(key[0]))
                     if got is None:
                         return _no_hits()
@@ -1300,7 +1301,7 @@ class Searcher:
         post = self._posting_frame({kk}, ("pay_offsets", "pay_data"))
         fn = function
 
-        def kernel(pkey, post_pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(pkey, post_pdf):
             seg = int(pkey[0])
             reader = SparkSegmentReader(post_pdf, np.zeros(0, np.uint8), 0)
             fp = reader.flat_payloads(kk)
@@ -1362,7 +1363,7 @@ class Searcher:
         keys = [term_key(field, t) for t in terms]
         post = self._posting_frame(set(keys), ("off_offsets", "off_data"))
 
-        def kernel(pkey, post_pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(pkey, post_pdf):
             seg = int(pkey[0])
             reader = SparkSegmentReader(post_pdf,
                                         np.zeros(0, np.uint8), 0)

@@ -71,6 +71,9 @@ def test_structural_and_sort_fields_rejected(spark, tmp_path):
     with pytest.raises(ValueError, match="structural"):
         update_doc_values(spark, out, "norm",
                           _upd(spark, pdf.id.tolist()[:1], [1]))
+    with pytest.raises(ValueError, match="structural"):
+        update_doc_values(spark, out, "extra_norms",
+                          _upd(spark, pdf.id.tolist()[:1], [1]))
 
 
 def test_snapshot_isolation(spark, tmp_path):
@@ -122,5 +125,21 @@ def test_merge_materializes_updates(spark, tmp_path):
     assert merged.manifest.get("dv_updates", []) == []
     got = merged.docmap().select("id", "pop").toPandas().set_index(
         "id")["pop"]
+    assert (got.loc[ids[:7]] == 5).all()
+    assert got.loc[ids[7:]].isna().all()
+
+
+def test_resort_materializes_updates(spark, tmp_path):
+    from lucene_7_x_9_x_spark.operators.merge import resort_index
+    out, pdf = _build(spark, tmp_path, seed=48)
+    ids = pdf.id.tolist()
+    update_doc_values(spark, out, "pop", _upd(spark, ids[:7], [5] * 7))
+    # reverse id order: the re-sort moves every updated doc's docid
+    attrs = spark.createDataFrame(
+        [(i, n) for n, i in enumerate(reversed(ids))], "id string, rank long")
+    rs = resort_index(spark, IndexSnapshot(spark, out), str(tmp_path / "r"),
+                      "rank", attrs=attrs)
+    assert rs.manifest.get("dv_updates", []) == []
+    got = rs.docmap().select("id", "pop").toPandas().set_index("id")["pop"]
     assert (got.loc[ids[:7]] == 5).all()
     assert got.loc[ids[7:]].isna().all()

@@ -165,6 +165,22 @@ def test_streaming_incremental_append(spark, tmp_path):
     for k in ("doc_count", "sum_total_term_freq", "sum_doc_freq",
               "n_terms", "max_doc"):
         assert idx.stats[k] == full.stats[k], k
+    # the finalized tables agree too: the terms dictionary row for row,
+    # and every doc's norm byte read through the parsed segnorms (the
+    # segment layouts differ: the append added its own segments)
+    def terms(snap):
+        return sorted(tuple(r) for r in snap.terms().select(
+            "field", "term", "doc_freq", "total_term_freq").collect())
+
+    def doc_norms(snap):
+        parsed = snap.segnorms_parsed()
+        dm = snap.docmap().select("segment", "docid", "path").collect()
+        for seg, (_, max_doc, _) in parsed.items():
+            assert max_doc == sum(r.segment == seg for r in dm)
+        return {r.path: int(parsed[r.segment][0][r.docid]) for r in dm}
+
+    assert terms(idx) == terms(full)
+    assert doc_norms(idx) == doc_norms(full)
     # and a query agrees on count + scores set
     q = TermQuery("def")
     a = Searcher(idx).search(q, 10).toPandas()

@@ -183,3 +183,30 @@ def test_per_field_analyzers(spark, tmp_path):
     # analyze() picks the field's chain
     assert s.analyze("running", field="title") == ["run"]
     assert s.analyze("running") == ["running"]
+
+
+def test_append_keeps_per_field_analyzer(spark, tmp_path):
+    # appends go through the build's batch writer with the manifest's
+    # per-field chains: an appended doc's title is stemmed like the
+    # built ones, so the stemmed term matches it too
+    from lucene_7_x_9_x_spark.functions.analysis import AnalyzerConfig
+    from lucene_7_x_9_x_spark.streaming.incremental import (append_batch,
+                                                            finalize)
+    schema = "doc_id long, text string, title string"
+    out = str(tmp_path / "pfa")
+    build_index(spark, spark.createDataFrame(
+                    [(0, "the running dog", "running dogs everywhere"),
+                     (1, "a sleeping cat", "cats sleeping soundly")],
+                    schema),
+                out, id_cols=["doc_id"], text_col="text",
+                segment_by="input", extra_fields=[("title", "title")],
+                field_analyzers={"title": AnalyzerConfig(stemmer="porter")})
+    append_batch(spark, spark.createDataFrame(
+        [(2, "dogs run fast", "fast running")], schema), out)
+    idx = finalize(spark, out)
+    terms = {(r.field, r.term) for r in idx.terms().collect()}
+    assert ("title", "running") not in terms
+    hits = (Searcher(idx).matches(TermQuery("run", field="title"))
+            .join(idx.docmap().select("segment", "docid", "doc_id"),
+                  ["segment", "docid"]))
+    assert {int(r.doc_id) for r in hits.collect()} == {0, 2}
