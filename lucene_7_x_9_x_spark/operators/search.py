@@ -304,11 +304,10 @@ def classify_blockmax(q) -> dict | None:
 
 def _select_ranges(d: np.ndarray, lo: np.ndarray, hi: np.ndarray
                    ) -> np.ndarray:
-    """Indices of sorted docids d that fall in any window [lo_i, hi_i]."""
+    """Indices of sorted docids d that fall in any of the disjoint, sorted
+    windows [lo_i, hi_i], ascending."""
     a = np.searchsorted(d, lo)
-    b = np.searchsorted(d, hi, side="right")
-    segs = [np.arange(x, y) for x, y in zip(a, b) if y > x]
-    return np.concatenate(segs) if segs else np.zeros(0, np.int64)
+    return _gather_ranges(a, np.searchsorted(d, hi, side="right") - a)
 
 
 class _Unit:
@@ -678,12 +677,12 @@ def blockmax_topk(reader: SparkSegmentReader, stats: SegmentStats,
         csc = np.concatenate(parts_s).astype(np.float64)
         cim = np.concatenate(parts_is_must)
         docs_u, inv = np.unique(cd, return_inverse=True)
-        acc = np.zeros(len(docs_u), dtype=np.float64)
-        np.add.at(acc, inv, csc)
-        mcnt = np.zeros(len(docs_u), dtype=np.int64)
-        np.add.at(mcnt, inv, cim.astype(np.int64))
-        scnt = np.zeros(len(docs_u), dtype=np.int64)
-        np.add.at(scnt, inv, (~cim).astype(np.int64))
+        # bincount adds in element order, like np.add.at: the same float64
+        # sums, bit for bit
+        n_u = len(docs_u)
+        acc = np.bincount(inv, weights=csc, minlength=n_u)
+        mcnt = np.bincount(inv[cim], minlength=n_u)
+        scnt = np.bincount(inv[~cim], minlength=n_u)
         ok = mcnt >= n_must_req
         if msm > 0:
             ok &= scnt >= msm

@@ -745,7 +745,7 @@ class Searcher:
                                         field_norms=fnorms)
             dele = dele2 if dele2 is not None else (
                 del_bc.value.get(seg) if del_bc is not None else None)
-            out = []
+            ds, ss = [], []
             for qid in qids:
                 plan = plans[qid]
                 if plan is not None:
@@ -771,11 +771,16 @@ class Searcher:
                         d, s = d[keep], s[keep]
                     if k is not None:
                         d, s = ex.top_k(ex.Matches(d, s), k)
-                out.append(pd.DataFrame({
-                    "qid": qid,
-                    "segment": np.full(len(d), seg, dtype=np.int32),
-                    "docid": d, "score": s.astype(np.float32)}))
-            return pd.concat(out, ignore_index=True)
+                ds.append(d)
+                ss.append(s)
+            # one frame per call: a frame per (qid, segment) plus a concat
+            # cost more than the scoring on small segments
+            lens = [len(d) for d in ds]
+            return pd.DataFrame({
+                "qid": np.repeat(np.array(qids, dtype=object), lens),
+                "segment": np.full(sum(lens), seg, dtype=np.int32),
+                "docid": np.concatenate(ds).astype(np.int64, copy=False),
+                "score": np.concatenate(ss).astype(np.float32, copy=False)})
 
         # pyspark picks the grouped-UDF calling convention by argument
         # count, so these keep exactly (key, post[, sn]) parameters — and

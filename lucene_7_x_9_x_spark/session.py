@@ -28,6 +28,10 @@ def local_session(cores: int, heap: str | None = None,
 
     The worker environment goes into this process's environment before
     the JVM starts: the JVM, and every Python worker it forks, inherit it.
+    Workers also get PYTHONSAFEPATH=1 (set for them only, through
+    `spark.executorEnv`): the worker daemon runs as `python -m`, which
+    would otherwise put the launching directory ahead of this checkout on
+    `sys.path`, so a package of the same name there would shadow it.
     """
     from pyspark.sql import SparkSession
     path = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
@@ -37,6 +41,7 @@ def local_session(cores: int, heap: str | None = None,
     b = (SparkSession.builder.master(f"local[{cores}]")
          .appName("lucene-spark")
          .config("spark.sql.shuffle.partitions", str(cores))
+         .config("spark.executorEnv.PYTHONSAFEPATH", "1")
          .config("spark.ui.enabled", "false")
          .config("spark.ui.showConsoleProgress", "false"))
     if heap is not None:

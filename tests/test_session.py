@@ -3,8 +3,10 @@ shape it gives the test fixture, the worker environment it hands to
 Python workers, and a guard that no other local session builder grows
 back in the repo."""
 
+import json
 import os
 import re
+import subprocess
 import sys
 
 import pandas as pd
@@ -63,3 +65,46 @@ def test_no_other_session_builder():
                     found.append(rel)
     assert not found, (f"build local sessions with "
                        f"lucene_7_x_9_x_spark.session.local_session: {found}")
+
+
+_DECOY_PROBE = r"""
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+import pandas as pd
+from lucene_7_x_9_x_spark.session import local_session
+
+
+def where(batches):
+    import lucene_7_x_9_x_spark
+    for _ in batches:
+        yield pd.DataFrame({"pkg": [lucene_7_x_9_x_spark.__file__]})
+
+
+spark = local_session(1, heap="512m")
+try:
+    row = (spark.range(1, numPartitions=1)
+           .mapInPandas(where, "pkg string").collect()[0])
+    print(json.dumps({"worker": row["pkg"],
+                      "driver_env": os.environ.get("PYTHONSAFEPATH")}))
+finally:
+    spark.stop()
+"""
+
+
+def test_workers_ignore_a_package_in_the_launching_directory(tmp_path):
+    """A worker imports the engine from this checkout even when the
+    session is started from a directory holding a package of the same
+    name; the setting that makes it so stays out of the driver's
+    environment."""
+    decoy = tmp_path / "lucene_7_x_9_x_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text("")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONSAFEPATH"}
+    out = subprocess.run([sys.executable, "-c", _DECOY_PROBE, ROOT],
+                         cwd=tmp_path, env=env, capture_output=True,
+                         text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert os.path.realpath(got["worker"]) == \
+        os.path.realpath(lucene_7_x_9_x_spark.__file__)
+    assert got["driver_env"] is None
