@@ -2,14 +2,15 @@
 in this process.
 
 Builds (or reopens) one seeded synth_corpus index with perfbench's build
-(8 hash segments, ids repo/path/commit) and runs 128-query or3/and2
-batches, drawn like perfbench's hot_batch (Zipf terms over the doc-freq
-rank, stratified blocks), through `Searcher._topk_frame(..., local=True)`:
-the same `kernel_body` the Spark kernels run, with no Spark job. So the
-numbers are kernel compute (block decode, scoring, top-k and the per-call
-output frame) plus the driver prep and the pyarrow postings read that
-`_topk_frame` does per batch, with no task, serde or exchange cost. One
-warm-up batch runs first; then every batch runs `--reps` times, and the
+(8 hash segments, ids repo/path/commit) and runs perfbench's own hot_batch
+inputs (`HotBatch.inputs`: 128 or3/and2 queries, Zipf terms over the
+doc-freq rank, stratified blocks) through `Searcher._topk_frame(...,
+local=True)`: the same `kernel_body` the Spark kernels run, with no Spark
+job. So the numbers are kernel compute (block decode, scoring, top-k and
+the per-call output frame) plus the driver prep and the pyarrow postings
+read that `_topk_frame` does per batch, with no task, serde or exchange
+cost. One warm-up batch (hot_batch's warm-up stream) runs first; then the
+first BATCHES measured batches of seed SEED each run REPS times, and the
 script prints the median wall time and the median process CPU time per
 batch.
 
@@ -18,8 +19,8 @@ N functions by internal time. --rows PATH writes every batch's rows
 (batch, qid, segment, docid, score) to a parquet file, so two checkouts
 can be compared row for row on the same batches.
 
-Usage: python scripts/kernel_profile.py [--docs 10000] [--batches 6]
-       [--reps 3] [--seed 1] [--profile N] [--rows PATH] [--work DIR]
+Usage: python scripts/kernel_profile.py [--docs 10000] [--profile N]
+       [--rows PATH] [--work DIR]
        (--work keeps the index: a later run with the same --work and
        --docs reopens it instead of building again)
 """
@@ -41,6 +42,10 @@ sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
 from lucene_7_x_9_x_spark.session import local_session
 
+BATCHES = 6   # measured batches (perfbench's MEASURE stream, inputs 0..5)
+REPS = 3      # timed runs of each batch
+SEED = 1      # perfbench --seed
+
 
 def open_index(spark, work: str, n_docs: int):
     import workloads as wl
@@ -56,21 +61,14 @@ def open_index(spark, work: str, n_docs: int):
     return idx, root
 
 
-def batches(root: str, n: int, seed: int) -> list[dict]:
-    """n hot_batch-shaped batches {qid: query}, seeded: hot_batch's query
-    mix and batch size."""
-    import numpy as np
+def batches(spark, root: str, idx) -> tuple[dict, list[dict]]:
+    """(warm-up batch, BATCHES measured batches): exactly the {qid: query}
+    inputs perfbench's hot_batch runs at seed SEED."""
     import workloads as wl
 
-    sampler = wl.TermSampler(root, wl.ZIPF_S)
-    size, mix = wl.Scale.batch, wl.HotBatch.kinds
-    out = []
-    for i in range(n):
-        terms = sampler.block(np.random.default_rng([seed, i]), size, 3)
-        kinds = [mix[j % len(mix)] for j in range(size)]
-        out.append({f"q{j}": wl.make_query(kd, t[:wl._ARITY[kd]])
-                    for j, (kd, t) in enumerate(zip(kinds, terms))})
-    return out
+    hot = wl.HotBatch(wl.Context(spark, root, idx, wl.Scale(), SEED, None))
+    return (hot.inputs(wl.WARMUP, 0),
+            [hot.inputs(wl.MEASURE, i) for i in range(BATCHES)])
 
 
 def run_batch(searcher, queries: dict, k: int):
@@ -82,9 +80,6 @@ def run_batch(searcher, queries: dict, k: int):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=10_000)
-    ap.add_argument("--batches", type=int, default=6)
-    ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--profile", type=int, default=0, metavar="N")
     ap.add_argument("--rows", default=None, metavar="PATH")
     ap.add_argument("--work", default=None)
@@ -99,11 +94,10 @@ def main():
     try:
         idx, root = open_index(spark, work, a.docs)
         s = Searcher(idx)
-        qs = batches(root, a.batches + 1, a.seed)
-        warm, qs = qs[0], qs[1:]
+        warm, qs = batches(spark, root, idx)
         run_batch(s, warm, wl.K)
         wall, cpu, rows = [], [], []
-        for _ in range(a.reps):
+        for _ in range(REPS):
             for i, q in enumerate(qs):
                 t, c = time.perf_counter(), time.process_time()
                 got = run_batch(s, q, wl.K)
@@ -111,7 +105,7 @@ def main():
                 cpu.append(time.process_time() - c)
                 if len(rows) < len(qs):
                     rows.append(got.assign(batch=i))
-        print(f"docs {a.docs}  batches {len(qs)} x {a.reps}  "
+        print(f"docs {a.docs}  batches {len(qs)} x {REPS}  "
               f"wall p50 {statistics.median(wall) * 1000:.0f} ms  "
               f"cpu p50 {statistics.median(cpu) * 1000:.0f} ms per batch",
               flush=True)

@@ -1,12 +1,19 @@
 """search_many (batched multi-query execution) must return exactly what
-per-query search returns, for every query in the batch."""
+per-query search returns, for every query in the batch; and the driver
+path (`_topk_frame(..., local=True)`) must return what each Spark kernel
+shape (hot, cold broadcast-norms, cogroup) returns for the same batch."""
 
 import numpy as np
 import pytest
 
-from lucene_7_x_9_x_spark.plans.query import (BooleanQuery, Occur,
+from lucene_7_x_9_x_spark.plans.query import (BooleanQuery,
+                                              MatchAllDocsQuery, Occur,
                                               PhraseQuery, TermQuery)
 from tests.test_search import _random_corpus
+
+RARE = [f"zq{i}" for i in range(12)]  # one doc each: each misses 2 segments
+DTYPES = {"qid": np.dtype(object), "segment": np.dtype(np.int32),
+          "docid": np.dtype(np.int64), "score": np.dtype(np.float32)}
 
 
 @pytest.fixture(scope="module")
@@ -14,6 +21,8 @@ def many_index(spark, tmp_path_factory):
     from lucene_7_x_9_x_spark.index import build_index
     rng = np.random.RandomState(21)
     pdf = _random_corpus(rng, n_docs=500)
+    for i, w in enumerate(RARE):
+        pdf.loc[i * 29, "content"] += f" {w}"
     out = str(tmp_path_factory.mktemp("many"))
     return build_index(spark, spark.createDataFrame(pdf), out,
                        id_cols=["id"], text_col="content", num_segments=3)
@@ -27,6 +36,71 @@ def _assert_same_as_search(s, got, batch, k):
             list(zip(want.segment, want.docid)), qid
         assert np.array_equal(g.score.to_numpy(np.float32),
                               want.score.to_numpy(np.float32)), qid
+
+
+def _kernel_batches(idx) -> dict:
+    """{name: batch} for the driver-path checks. "mixed": or3, and2, an
+    exact phrase, a sloppy phrase (not block-max eligible), a MatchAll qid
+    and a qid whose terms miss segments. "sparse": postings in two of the
+    three segments, so its MatchAll qid also runs the norms-only kernel.
+    "none": every qid gets zero hits in every segment it reaches."""
+    seg = idx.postings_rows(set(RARE), ["term", "segment"]).to_pydict()
+    seg_of = dict(zip(seg["term"], seg["segment"]))
+    a = RARE[0]
+    b = next(w for w in RARE if seg_of[w] != seg_of[a])
+    S, M, T = Occur.SHOULD, Occur.MUST, TermQuery
+    miss = BooleanQuery([(S, T(a)), (S, T(b))])
+    return {
+        "mixed": {
+            "or3": BooleanQuery([(S, T("h1")), (S, T("h2")), (S, T("h4"))]),
+            "and2": BooleanQuery([(M, T("h0")), (M, T("h1"))]),
+            "phrase": PhraseQuery(["h0", "h1"]),
+            "sloppy": PhraseQuery(["h0", "h2"], slop=3),
+            "matchall": BooleanQuery([(S, T("h3")),
+                                      (S, MatchAllDocsQuery())]),
+            "miss": miss},
+        "sparse": {"miss": miss,
+                   "matchall": BooleanQuery([(S, T(a)),
+                                             (S, MatchAllDocsQuery())])},
+        "none": {"and": BooleanQuery([(M, T(a)), (M, T(b))]),
+                 "phrase": PhraseQuery([a, b])},
+    }
+
+
+def _rows(pdf, label):
+    assert dict(pdf.dtypes) == DTYPES, label
+    return (pdf[list(DTYPES)].sort_values(["qid", "segment", "docid"])
+            .reset_index(drop=True))
+
+
+def _assert_driver_path_matches(s, idx):
+    """s's driver path and s's Spark path give the same (qid, segment,
+    docid) rows, byte-equal float32 scores and frame dtypes: top-k, every
+    match (k=None) and, on the mixed batch, a searchAfter cursor."""
+    for name, batch in _kernel_batches(idx).items():
+        rq = {qid: s.rewrite(q) for qid, q in batch.items()}
+        calls = [dict(k=7), dict(k=None, mode="complete")]
+        if name == "mixed":
+            top = _rows(s._topk_frame(rq, 7, local=True), name)
+            r = top[top.qid == "or3"].sort_values(
+                ["score", "segment", "docid"],
+                ascending=[False, True, True]).iloc[2]
+            calls.append(dict(k=5, after=(float(r.score), int(r.segment),
+                                          int(r.docid))))
+        for kw in calls:
+            label = (name, kw)
+            local = _rows(s._topk_frame(rq, local=True, **kw), label)
+            got = _rows(s._topk_frame(rq, **kw).toPandas(), label)
+            assert local[["qid", "segment", "docid"]].values.tolist() == \
+                got[["qid", "segment", "docid"]].values.tolist(), label
+            assert np.array_equal(local.score.to_numpy(),
+                                  got.score.to_numpy()), label
+            if name == "none":
+                assert len(got) == 0, label
+            elif "after" in kw:
+                assert len(got) > 0, label
+            else:
+                assert set(got.qid) == set(batch), label
 
 
 @pytest.mark.parametrize("cache_index", [False, True])
@@ -47,6 +121,7 @@ def test_search_many_matches_individual(spark, many_index, cache_index):
     try:
         _assert_same_as_search(s, s.search_many(batch, k=5).toPandas(),
                                batch, 5)
+        _assert_driver_path_matches(s, many_index)
     finally:
         s._post_src.unpersist()
         s._terms_src.unpersist()
@@ -55,9 +130,8 @@ def test_search_many_matches_individual(spark, many_index, cache_index):
 def test_cogroup_kernel_matches_broadcast(spark, many_index):
     """Norms too big to broadcast fall back to the cogroup kernel; without
     deletes it must return the broadcast path's rows and float32 scores,
-    for search and search_many alike (every test index has small norms,
-    so the fallback is forced on the instance)."""
-    from lucene_7_x_9_x_spark.plans.query import MatchAllDocsQuery
+    for search and search_many alike, and the driver path's (every test
+    index has small norms, so the fallback is forced on the instance)."""
     from lucene_7_x_9_x_spark.searcher import Searcher
     batch = {
         "q_term": TermQuery("h0"),
@@ -79,6 +153,7 @@ def test_cogroup_kernel_matches_broadcast(spark, many_index):
                               b.score.to_numpy(np.float32)), qid
     _assert_same_as_search(small, big.search_many(batch, k=6).toPandas(),
                            batch, 6)
+    _assert_driver_path_matches(big, many_index)
 
 
 def test_search_many_all_absent(spark, many_index):
@@ -93,7 +168,6 @@ def test_search_many_with_matchall(spark, many_index):
     """A MatchAll-containing query in a batch must hit docs in EVERY
     segment, including segments holding none of the batch's terms — and an
     all-absent-terms batch with a MatchAll must still return its docs."""
-    from lucene_7_x_9_x_spark.plans.query import MatchAllDocsQuery
     from lucene_7_x_9_x_spark.searcher import Searcher
     s = Searcher(many_index)
     batch = {
