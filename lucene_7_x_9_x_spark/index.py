@@ -317,17 +317,14 @@ class IndexSnapshot:
         (field, term) tuples. Returns {key: (doc_freq, total_term_freq)}
         for the keys present in the dictionary."""
         dset = self._pads_dataset((os.path.join(self.root, "terms"),))
-        has_field = "field" in dset.schema.names
-        expr = _key_expr(keys, has_field)
+        expr = _key_expr(keys)
         if expr is None:
             return {}
-        cols = (["field"] if has_field else []) + [
-            "term", "doc_freq", "total_term_freq"]
-        tbl = dset.to_table(filter=expr, columns=cols).to_pydict()
-        fields = tbl.get("field", [None] * len(tbl["term"]))
+        tbl = dset.to_table(filter=expr, columns=[
+            "field", "term", "doc_freq", "total_term_freq"]).to_pydict()
         out = {}
-        for f, t, df_, ttf in zip(fields, tbl["term"], tbl["doc_freq"],
-                                  tbl["total_term_freq"]):
+        for f, t, df_, ttf in zip(tbl["field"], tbl["term"],
+                                  tbl["doc_freq"], tbl["total_term_freq"]):
             out[t if f is None else (f, t)] = (int(df_), int(ttf))
         return out
 
@@ -346,14 +343,11 @@ class IndexSnapshot:
         Returns {key: (freqs int64[], norms int64[])} concatenated across
         segments and blocks."""
         dset = self._batches_dataset("postings")
-        has_field = "field" in dset.schema.names
-        expr = _key_expr(keys, has_field)
+        expr = _key_expr(keys)
         if expr is None:
             return {}
-        cols = (["field"] if has_field else []) + [
-            "term", "imp_freqs", "imp_norms"]
-        tbl = dset.to_table(filter=expr, columns=cols).to_pydict()
-        fields = tbl.get("field", [None] * len(tbl["term"]))
+        tbl = dset.to_table(filter=expr, columns=[
+            "field", "term", "imp_freqs", "imp_norms"]).to_pydict()
         def _flat(x):
             # imp columns are list<list<int>> (one inner list per block)
             for item in x:
@@ -363,8 +357,8 @@ class IndexSnapshot:
                     yield item
 
         acc: dict = {}
-        for f, t, fr, no in zip(fields, tbl["term"], tbl["imp_freqs"],
-                                tbl["imp_norms"]):
+        for f, t, fr, no in zip(tbl["field"], tbl["term"],
+                                tbl["imp_freqs"], tbl["imp_norms"]):
             k = t if f is None else (f, t)
             got = acc.setdefault(k, ([], []))
             got[0].extend(_flat(fr))
@@ -378,7 +372,7 @@ class IndexSnapshot:
         (pyarrow Table of `columns`) — the same pushed-down key filter as
         impacts_lookup, so term-sorted row groups prune; no Spark job."""
         dset = self._batches_dataset("postings")
-        expr = _key_expr(keys, "field" in dset.schema.names)
+        expr = _key_expr(keys)
         if expr is None:
             return dset.schema.empty_table().select(columns)
         return dset.to_table(filter=expr, columns=columns)
@@ -462,7 +456,7 @@ class IndexSnapshot:
         return self.manifest.get("checkpoints", [])
 
 
-def _key_expr(keys, has_field: bool):
+def _key_expr(keys):
     """pyarrow filter selecting term KEYS from a (field, term) table:
     (field IS NULL AND term IN bare) OR (field = f AND term IN ...) per
     named field; None when there are no keys."""
@@ -474,10 +468,7 @@ def _key_expr(keys, has_field: bool):
             by_field.setdefault(k[0], []).append(k[1])
     expr = None
     if bare:
-        e = pads.field("term").isin(bare)
-        if has_field:
-            e = e & pads.field("field").is_null()
-        expr = e
+        expr = pads.field("term").isin(bare) & pads.field("field").is_null()
     for f, ts in sorted(by_field.items()):
         e = (pads.field("field") == f) & pads.field("term").isin(sorted(ts))
         expr = e if expr is None else expr | e
@@ -872,18 +863,13 @@ def check_index(spark: SparkSession, index: IndexSnapshot) -> dict:
     index is structurally corrupt (CheckIndex.Status.clean analogue)."""
     out: dict = {}
     post = index.postings()
-    if "field" not in post.columns:
-        post = post.withColumn("field", F.lit(None).cast("string"))
     # NULL field (the default field) must join as a key: coalesce to a
     # sentinel, since SQL join equality never matches null == null
     fkey = F.coalesce(F.col("field"), F.lit("\x00")).alias("fkey")
     agg = (post.groupBy(fkey, "term")
            .agg(F.sum("doc_freq").alias("df2"),
                 F.sum("total_term_freq").alias("ttf2")))
-    t = index.terms()
-    if "field" not in t.columns:
-        t = t.withColumn("field", F.lit(None).cast("string"))
-    t = t.select(fkey, "term", "doc_freq", "total_term_freq")
+    t = index.terms().select(fkey, "term", "doc_freq", "total_term_freq")
     mism = (t.join(agg, ["fkey", "term"], "full_outer")
             .where(F.col("doc_freq").isNull() | F.col("df2").isNull()
                    | (F.col("doc_freq") != F.col("df2"))
@@ -908,9 +894,7 @@ def check_index(spark: SparkSession, index: IndexSnapshot) -> dict:
         (F.col("lo") != 0) | (F.col("hi") != F.col("n") - 1)
         | (F.col("nd") != F.col("n"))).count() == 0
 
-    sn = index.segnorms().where(F.col("field").isNull()
-                                if "field" in index.segnorms().columns
-                                else F.lit(True))
+    sn = index.segnorms().where(F.col("field").isNull())
     snj = (sn.select("segment", "max_doc", F.length("norms").alias("nb"))
            .join(seg.select("segment", "n"), "segment", "full_outer"))
     out["segnorms_match"] = snj.where(

@@ -135,9 +135,8 @@ def rewrite_postings(segment: int, post_pdf: pd.DataFrame,
     norms_by_field = {None: default_norms, **fnorms}
     pcols = [n for n, _ in POSTINGS_COLS]
     out = {c: [] for c in pcols}
-    has_field = "field" in post_pdf.columns
     for r in post_pdf.itertuples():
-        fld = r.field if has_field and isinstance(r.field, str) else None
+        fld = r.field if isinstance(r.field, str) else None
         docids, freqs = decode_postings(r)
         sel, new_ids = remap(docids)
         if len(sel) == 0:
@@ -159,11 +158,7 @@ def rewrite_postings(segment: int, post_pdf: pd.DataFrame,
 
 def parse_segnorms(sn_pdf: pd.DataFrame):
     """(default_norms, max_doc, {field: norms}) from the per-(segment,
-    field) segnorm rows of ONE segment (field NULL = default field;
-    format-1 tables have no field column)."""
-    if "field" not in sn_pdf.columns:
-        return (np.frombuffer(bytes(sn_pdf["norms"].iloc[0]), np.uint8),
-                int(sn_pdf["max_doc"].iloc[0]), {})
+    field) segnorm rows of ONE segment (field NULL = default field)."""
     fnorms: dict = {}
     base, max_doc = None, 0
     for rr in sn_pdf.itertuples():

@@ -231,8 +231,6 @@ def compact_index(spark: SparkSession, index: IndexSnapshot,
         return rewrite_postings(int(key[0]), post_pdf, sn_pdf, drop_deleted)
 
     post = index.postings()
-    if "field" not in post.columns:  # format-1 snapshot: single field
-        post = post.withColumn("field", F.lit(None).cast("string"))
     sn = index.segnorms().join(del_arrays, "segment", "left")
     new_post = (post.groupBy("segment").cogroup(sn.groupBy("segment"))
                 .applyInPandas(kernel, schema=postings_schema_ddl()))

@@ -78,11 +78,7 @@ def build_fuzzy_seek(index, k: int = DEFAULT_K) -> str:
         with open(meta_path) as f:
             if json.load(f) == want:
                 return out
-    t = index.terms()
-    has_field = "field" in t.columns
-    base = (t.select("field", "term") if has_field
-            else t.select(F.lit(None).cast("string").alias("field"),
-                          "term"))
+    base = index.terms().select("field", "term")
     levels = [base.withColumn("variant", F.col("term"))]
     prev = base.select("field", "term",
                        F.explode(F.expr(_DEL1.format(c="term")))

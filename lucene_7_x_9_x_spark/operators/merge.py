@@ -183,6 +183,7 @@ def merge_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
     (plus at most one full hot term's row, which is intrinsic to the row
     format); the salted stage additionally bounds per-term fan-in to
     ceil(sources/salt)."""
+    from ..streaming.incremental import finalize
     t0 = time.time()
     os.makedirs(out_dir, exist_ok=True)
     dm = index.docmap()
@@ -222,10 +223,7 @@ def merge_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
               .withColumnRenamed("new_docid", "docid"))
 
     # ---- postings: rebase (narrow) then salted grouped concat -----------
-    post = index.postings()
-    if "field" not in post.columns:  # format-1 snapshot: single field
-        post = post.withColumn("field", F.lit(None).cast("string"))
-    post = (post
+    post = (index.postings()
             .withColumn("old_segment", F.col("segment"))
             .withColumn("base", bmap[F.col("segment")])
             .withColumn("segment", smap[F.col("segment")]))
@@ -270,15 +268,6 @@ def merge_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
                                                    "kind=postings")))
     (new_dm.repartition("segment").sortWithinPartitions("segment", "docid")
      .write.mode("overwrite").parquet(os.path.join(batch_dir, "kind=docmap")))
-    # terms + stats are global -> unchanged; copy terms table
-    index.terms().write.mode("overwrite").parquet(
-        os.path.join(out_dir, "terms"))
-    from ..index import write_segnorms
-    write_segnorms(
-        spark.read.parquet(os.path.join(batch_dir, "kind=docmap")),
-        os.path.join(out_dir, "segnorms"),
-        extra_field_names=[n for n, _ in
-                           index.manifest.get("extra_fields", [])])
 
     # tombstones rebase exactly like docmap rows (merge concatenates, it
     # does not compact): remap them into the merged coordinate space.
@@ -330,7 +319,10 @@ def merge_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
             "salt": salt, "secs": round(time.time() - t0, 3)}],
     })
     _atomic_write_json(os.path.join(out_dir, MANIFEST), manifest)
-    return IndexSnapshot(spark, out_dir)
+    # terms, segnorms and stats commit through the one finalize; a merge
+    # keeps every posting and docmap row, so a finalized source's terms
+    # and stats come out unchanged
+    return finalize(spark, out_dir)
 
 
 @locked_writer("out_dir")
@@ -404,8 +396,6 @@ def resort_index(spark: SparkSession, index: IndexSnapshot, out_dir: str,
         return rewrite_postings(int(key[0]), post_pdf, side_pdf, permute)
 
     post = index.postings()
-    if "field" not in post.columns:
-        post = post.withColumn("field", F.lit(None).cast("string"))
     side = index.segnorms().join(perm, "segment")
     new_post = (post.groupBy("segment").cogroup(side.groupBy("segment"))
                 .applyInPandas(kernel, schema=postings_schema_ddl()))

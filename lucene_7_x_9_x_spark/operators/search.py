@@ -48,15 +48,12 @@ class SparkSegmentReader:
         """norms: default-field norm bytes; field_norms: {field: uint8[]}
         for named non-default fields (per-field norms files,
         solr-8.4.0/.../index/FieldInfos.java — norms are per field).
-        Postings rows with a non-null field column are keyed (field, term);
-        null/absent field means the default field (bare term key)."""
-        if "field" in postings_pdf.columns:
-            # null field (None or NaN from Arrow) = default field: bare key
-            self._rows = {
-                ((r.field, r.term) if isinstance(r.field, str) else r.term): r
-                for r in postings_pdf.itertuples()}
-        else:
-            self._rows = {r.term: r for r in postings_pdf.itertuples()}
+        Postings rows with a non-null field are keyed (field, term); a
+        null field means the default field (bare term key)."""
+        # null field (None or NaN from Arrow) = default field: bare key
+        self._rows = {
+            ((r.field, r.term) if isinstance(r.field, str) else r.term): r
+            for r in postings_pdf.itertuples()}
         self._norms = norms
         self._field_norms = field_norms or {}
         self._max_doc = max_doc

@@ -121,11 +121,11 @@ class Searcher:
 
         cache_index=True is the hot-serving mode (the page-cache-resident
         index of a dedicated Lucene search node): postings are persisted
-        PRE-PARTITIONED by segment, so every query's cogroup kernel reuses
-        that partitioning with zero exchange — the per-query shuffle (the
-        dominant fixed cost of low-latency search) disappears. Sized for
-        indexes that fit executor storage memory; leave False for
-        scan-per-query over arbitrarily large indexes."""
+        PRE-PARTITIONED by segment, so every query's broadcast-norms
+        groupBy kernel reuses that partitioning with zero exchange — the
+        per-query shuffle (the dominant fixed cost of low-latency search)
+        disappears. Sized for indexes that fit executor storage memory;
+        leave False for scan-per-query over arbitrarily large indexes."""
         self.index = index
         self.k1, self.b = k1, b
         self.similarity = similarity
@@ -134,10 +134,8 @@ class Searcher:
         self._terms_src = index.terms()
         # multi-field: the default field's NAME canonicalizes to field=None
         # (bare term keys); named extra fields carry per-field stats
-        self._default_field = getattr(index, "default_field", None)
-        self._field_stats = (index.field_stats()
-                             if hasattr(index, "field_stats") else {})
-        self._has_field_col = "field" in self._post_src.columns
+        self._default_field = index.default_field
+        self._field_stats = index.field_stats()
         self._hot = bool(cache_index)
         self._norms_bc = None  # broadcast segnorms (lazy)
         # adaptive norms strategy (the autoBroadcastJoinThreshold idea
@@ -147,8 +145,7 @@ class Searcher:
         # even cold (no segnorms scan, no cogroup exchange, postings read
         # once); past the threshold the cogroup remains the only shape
         # that scales (norms can't broadcast at 100 TB)
-        nb = int(index.stats["doc_count"]) * max(
-            1, len(getattr(index, "field_names", [None])))
+        nb = int(index.stats["doc_count"]) * len(index.field_names)
         self._small_norms = nb <= 64 * 1024 * 1024
         # driver path (_search_local): a cold single search over an index
         # this small reads its postings rows with pyarrow and runs the
@@ -169,9 +166,8 @@ class Searcher:
             n_part = index.spark.sparkContext.defaultParallelism
             self._post_src = (self._post_src
                               .repartition(n_part, "segment")
-                              .sortWithinPartitions("segment", *(
-                                  ["field"] if "field" in
-                                  self._post_src.columns else []), "term")
+                              .sortWithinPartitions("segment", "field",
+                                                    "term")
                               .persist())
             self._terms_src = self._terms_src.persist()
         self._ctx = RewriteContext(expand_terms=self._expand,
@@ -245,13 +241,7 @@ class Searcher:
     # ---------------- driver-side rewrite/expansion over the terms table
     def _expand(self, q) -> list | None:
         import re as _re
-        t = self._terms_src
-        if self._has_field_col:
-            fld = getattr(q, "field", None)
-            if fld is not None and fld == self._default_field:
-                fld = None
-            t = t.where(F.col("field").isNull() if fld is None
-                        else (F.col("field") == fld))
+        t = self._field_terms(getattr(q, "field", None))
         c = F.col("term")
         if isinstance(q, Q.PrefixQuery):
             t = t.where(c.startswith(q.prefix))
@@ -313,6 +303,13 @@ class Searcher:
                 .limit(self.max_expansions).collect())
         return [r.term for r in rows]
 
+    def _field_terms(self, field: str | None) -> DataFrame:
+        """The terms rows of one field: None or the default field's NAME
+        select the default field's rows (field IS NULL)."""
+        if field is None or field == self._default_field:
+            return self._terms_src.where(F.col("field").isNull())
+        return self._terms_src.where(F.col("field") == field)
+
     def _fuzzy_seek_terms(self, term: str, max_edits: int,
                           field: str | None = None,
                           transpositions: bool = True,
@@ -355,8 +352,7 @@ class Searcher:
         from .functions.analysis import tokenize_series
         cfg = self.index.analyzer
         if field is not None and field != self._default_field:
-            cfg = getattr(self.index, "field_analyzers", {}).get(field,
-                                                                 cfg)
+            cfg = self.index.field_analyzers.get(field, cfg)
         toks = tokenize_series(pd.Series([text]), cfg)[0]
         return [t for t in toks if t is not None]
 
@@ -473,10 +469,7 @@ class Searcher:
                 by_field.setdefault(k[0], []).append(k[1])
         conds = []
         if bare:
-            c = inlist(bare)
-            if self._has_field_col:
-                c = f"({c} AND field IS NULL)"
-            conds.append(c)
+            conds.append(f"({inlist(bare)} AND field IS NULL)")
         for f, ts in sorted(by_field.items()):
             conds.append(f"(field = {q(f)} AND {inlist(ts)})")
         if not conds:
@@ -492,20 +485,8 @@ class Searcher:
         missing = [t for t in terms if t not in self._stats_cache]
         if missing:
             # driver-side pyarrow seek of the sorted terms parquet — no
-            # Spark job, so a cold query runs as ONE job (kernel only);
-            # the Spark collect remains as the fallback for snapshots
-            # whose terms dir isn't directly readable at the driver
-            try:
-                found = self.index.term_stats_lookup(missing)
-            except Exception:
-                rows = (self._terms_src
-                        .where(self._key_filter(missing)).collect())
-                found = {}
-                for r in rows:
-                    k = ((r.field, r.term)
-                         if getattr(r, "field", None) is not None
-                         else r.term)
-                    found[k] = (int(r.doc_freq), int(r.total_term_freq))
+            # Spark job, so a cold query runs as ONE job (kernel only)
+            found = self.index.term_stats_lookup(missing)
             for t in missing:
                 self._stats_cache[t] = found.get(t, (0, 0))
         for t in terms:
@@ -609,21 +590,18 @@ class Searcher:
         the round-4 regression was 32 per-query reads before one job."""
         missing = [kk for kk in keys if kk not in self._impacts_cache]
         if missing:
-            try:
-                found = self.index.impacts_lookup(missing)
-            except Exception:
-                found = {}
+            found = self.index.impacts_lookup(missing)
             for kk in missing:
                 self._impacts_cache[kk] = found.get(kk)
         return {kk: self._impacts_cache[kk] for kk in keys}
 
     # ---------------- kernels
     def _segnorms_broadcast(self):
-        """Hot-serving norms: the per-(segment, field) blobs parsed once at
-        the driver and BROADCAST, so hot queries skip the segnorms cogroup
-        side entirely (one stage per query instead of a cogroup exchange).
-        ~1 byte/doc/field — in-memory-index scale by construction (hot mode
-        already persists the full postings table in executor storage)."""
+        """The per-(segment, field) norm blobs parsed once at the driver
+        and BROADCAST, so hot queries and cold queries under the
+        _small_norms bound skip the segnorms cogroup side entirely (one
+        stage per query instead of a cogroup exchange). ~1 byte/doc/field;
+        larger norms keep the cogroup."""
         if self._norms_bc is None:
             self._norms_bc = self.index.spark.sparkContext.broadcast(
                 self.index.segnorms_parsed())
@@ -634,12 +612,9 @@ class Searcher:
         (the .pos/.pay file analogues) only when the caller asks for them
         (SURVEY.md §3.3.4 lazy-positions); docmap-only union columns
         never."""
-        cols = ["term", "segment", "doc_freq", "total_term_freq",
+        return ["term", "field", "segment", "doc_freq", "total_term_freq",
                 "block_max_docs", "block_ns", "block_docs", "block_freqs",
-                "imp_freqs", "imp_norms"]
-        if self._has_field_col:
-            cols.insert(1, "field")
-        return cols + list(extra_cols)
+                "imp_freqs", "imp_norms", *extra_cols]
 
     def _posting_frame(self, keys, extra_cols=()) -> DataFrame:
         """Pruned postings scan for a set of term keys: pushed-down key
@@ -967,6 +942,14 @@ class Searcher:
         self.query_cache.put(key, df)
         return df
 
+    def _live_docmap(self) -> DataFrame:
+        """The docmap without the snapshot's tombstoned docs."""
+        dm = self.index.docmap()
+        dels = self.index.deletes()
+        if dels is not None:
+            dm = dm.join(dels, ["segment", "docid"], "left_anti")
+        return dm
+
     def numeric_range_docs(self, lower, upper, col: str = "dl",
                            include_lower: bool = True,
                            include_upper: bool = True) -> DataFrame:
@@ -976,10 +959,7 @@ class Searcher:
         docmap. The predicate pushes down to the parquet scan, so row-group
         stats prune non-matching ranges — the BKD tree's role re-expressed
         as columnar min/max pruning. Returns (segment, docid, <col>)."""
-        dm = self.index.docmap()
-        dels = self.index.deletes()
-        if dels is not None:
-            dm = dm.join(dels, ["segment", "docid"], "left_anti")
+        dm = self._live_docmap()
         c = F.col(col)
         if lower is not None:
             dm = dm.where(c >= lower if include_lower else c > lower)
@@ -997,10 +977,7 @@ class Searcher:
         as knn()'s `vectors`); tombstones are dropped by joining the
         live docmap AFTER the caller filters the value side, so the
         pushed-down predicate — not the join — does the heavy pruning."""
-        dm = self.index.docmap()
-        dels = self.index.deletes()
-        if dels is not None:
-            dm = dm.join(dels, ["segment", "docid"], "left_anti")
+        dm = self._live_docmap()
         if docvalues is None:
             return dm.select("segment", "docid", *self.index.id_cols,
                              *[c for c in cols
@@ -1484,10 +1461,10 @@ class Searcher:
         <id cols>, parent, score) ordered (score desc, parent asc,
         segment asc, docid asc)."""
         m = self._run(parent_query, None, "complete")
-        dm = self.index.docmap().select("segment", "docid",
-                                        *self.index.id_cols)
         pcol = parent if not isinstance(parent, str) else F.col(parent)
-        tagged = dm.withColumn("parent", pcol)
+        tagged = (self._live_docmap()
+                  .select("segment", "docid", *self.index.id_cols)
+                  .withColumn("parent", pcol))
         # parent score per parent value: the query's matches roll to ONE
         # row per parent (a parent group may hold several matching docs;
         # the child inherits the group's max, the ToParent Max roll-up)
@@ -1547,8 +1524,9 @@ class Searcher:
             vals = (fv.groupBy("join_value")
                     .agg(aggs[score_mode](F.col("score").cast("double"))
                          .cast("float").alias("score")))
-        out = (dm.select("segment", "docid", *self.index.id_cols,
-                         F.col(to_col).alias("join_value"))
+        out = (self._live_docmap()
+               .select("segment", "docid", *self.index.id_cols,
+                       F.col(to_col).alias("join_value"))
                .join(F.broadcast(vals), "join_value")
                .orderBy(F.desc("score"), "segment", "docid").limit(k))
         return (_rank_limited(out, [F.desc("score"), "segment", "docid"],
@@ -1770,12 +1748,7 @@ class Searcher:
         iterators built from the index terms). Returns
         DataFrame(rank, term, weight) ordered (weight desc, term asc);
         the sorted terms parquet prunes the prefix scan (FST-walk role)."""
-        t = self._terms_src
-        if self._has_field_col:
-            fld = None if (field is None or field == self._default_field) \
-                else field
-            t = t.where(F.col("field").isNull() if fld is None
-                        else (F.col("field") == fld))
+        t = self._field_terms(field)
         t = (t.where(F.col("term").startswith(prefix))
              .select("term", F.col("doc_freq").alias("weight"))
              .orderBy(F.desc("weight"), "term").limit(k))
@@ -1810,12 +1783,7 @@ class Searcher:
         """
         if len(prefix) < min_fuzzy_length or max_edits == 0:
             return self.suggest(prefix, k, field)
-        t = self._terms_src
-        if self._has_field_col:
-            fld = None if (field is None or field == self._default_field) \
-                else field
-            t = t.where(F.col("field").isNull() if fld is None
-                        else (F.col("field") == fld))
+        t = self._field_terms(field)
         first = prefix[:non_fuzzy_prefix]
         t = t.where(F.col("term").startswith(first))
         L = len(prefix)
@@ -1846,12 +1814,7 @@ class Searcher:
         weighted by doc_freq; prefix matches rank before pure-infix
         matches at equal weight (the suggester's exact-first bias).
         Returns DataFrame(rank, term, weight)."""
-        t = self._terms_src
-        if self._has_field_col:
-            fld = None if (field is None or field == self._default_field) \
-                else field
-            t = t.where(F.col("field").isNull() if fld is None
-                        else (F.col("field") == fld))
+        t = self._field_terms(field)
         t = (t.where(F.col("term").contains(fragment))
              .select("term", F.col("doc_freq").alias("weight"),
                      F.col("term").startswith(fragment).cast("int")
@@ -2011,10 +1974,7 @@ class Searcher:
                 pairs = [(key_term(kk), got[kk][0])
                          for kk in keys if kk in got]
         else:  # fallback: pruned distributed dictionary scan
-            t = self._terms_src
-            if self._has_field_col:
-                t = t.where(F.col("field").isNull() if field is None
-                            else (F.col("field") == field))
+            t = self._field_terms(field)
             c = F.col("term")
             if prefix:
                 t = t.where(c.startswith(prefix))

@@ -71,6 +71,16 @@ def test_merge_rebases_exactly(spark, base_index, tmp_path):
                  for r in dm_old.itertuples()}
     for r in dm_new.itertuples():
         assert old_keyed[(r.segment, r.docid)] == r.repo
+    # global tables: a merge keeps every posting and docmap row, so the
+    # terms dictionary and collection stats equal the source's
+    cols = ["field", "term", "doc_freq", "total_term_freq"]
+    key = ["field", "term"]
+    t_old = (idx.terms().toPandas()[cols].sort_values(key)
+             .reset_index(drop=True))
+    t_new = (merged.terms().toPandas()[cols].sort_values(key)
+             .reset_index(drop=True))
+    pd.testing.assert_frame_equal(t_new, t_old)
+    assert merged.stats == idx.stats
 
 
 def test_salted_merge_identical_to_unsalted(spark, base_index, tmp_path):

@@ -95,6 +95,27 @@ def test_default_field_name_canonicalizes(corpora):
     assert a == b
 
 
+def _sugg(df):
+    return [(r["rank"], r["term"], r["weight"]) for r in df.collect()]
+
+
+@pytest.mark.parametrize("method,text", [
+    ("suggest", "s"), ("suggest_fuzzy", "filtr"), ("suggest_infix", "a")])
+def test_suggesters_scope_to_field(corpora, method, text):
+    # a named field suggests from its own term dictionary: the same rows
+    # as a dedicated index over that field's text; the default field's
+    # NAME selects the default field, like field=None
+    s_mf, s_head = corpora
+    head = _sugg(getattr(s_mf, method)(text, 10, field="head"))
+    assert head == _sugg(getattr(s_head, method)(text, 10))
+    head_terms = {r["term"] for r in s_mf.index.terms()
+                  .where(F.col("field") == "head").select("term").collect()}
+    assert head and {t for _, t, _ in head} <= head_terms
+    default = _sugg(getattr(s_mf, method)(text, 10))
+    assert _sugg(getattr(s_mf, method)(text, 10, field="text")) == default
+    assert default != head
+
+
 def test_unknown_field_matches_nothing(corpora):
     s_mf, _ = corpora
     assert s_mf.matches(TermQuery("filter", field="nope")).count() == 0

@@ -332,6 +332,32 @@ def test_join_query_modes(spark, spark_index):
         s.join_query(TermQuery("h0"), "nope")
 
 
+def test_joins_drop_tombstoned_docs(spark, tmp_path):
+    # the to-side of a query-time join and the children of a to-child
+    # join are LIVE docs: a deleted doc is neither a target nor a child
+    from lucene_7_x_9_x_spark.index import IndexSnapshot, build_index
+    from lucene_7_x_9_x_spark.operators.deletes import delete_by_ids
+    from lucene_7_x_9_x_spark.searcher import Searcher
+    pdf = pd.DataFrame({
+        "id": [f"d{i}" for i in range(8)],
+        "grp": [i // 4 for i in range(8)],
+        "content": ["alpha beta" if i % 4 == 0 else "beta"
+                    for i in range(8)]})
+    out = str(tmp_path / "i")
+    build_index(spark, spark.createDataFrame(pdf), out,
+                id_cols=["id", "grp"], text_col="content", num_segments=2)
+    assert delete_by_ids(spark, out, spark.createDataFrame(
+        pdf.loc[pdf.id == "d1", ["id", "grp"]])) == 1
+    s = Searcher(IndexSnapshot(spark, out))
+    live = [f"d{i}" for i in range(8) if i != 1]
+    hits = s.search(TermQuery("beta"), 10, with_ids=True).toPandas()
+    assert sorted(hits["id"]) == live
+    child = s.to_child_join(TermQuery("alpha"), "grp", k=10).toPandas()
+    assert sorted(child["id"]) == live
+    joined = s.join_query(TermQuery("alpha"), "grp", k=10).toPandas()
+    assert sorted(joined["id"]) == live
+
+
 def test_drill_sideways_excludes_own_dim(spark, spark_index):
     from lucene_7_x_9_x_spark.searcher import Searcher
     from lucene_7_x_9_x_spark.functions.facets import drill_sideways
