@@ -170,6 +170,87 @@ def decode_block(buf: bytes | memoryview, n: int) -> np.ndarray:
     return _unpack_bits(b[1:], width, n)
 
 
+def gather_ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Flat indices concatenating ranges [starts[j], starts[j]+counts[j])."""
+    total = int(counts.sum())
+    if total == 0:
+        return np.zeros(0, np.int64)
+    bases = np.repeat(starts - np.concatenate(([0], np.cumsum(counts)[:-1])),
+                      counts)
+    return bases + np.arange(total, dtype=np.int64)
+
+
+def decode_blocks(bufs, ns) -> np.ndarray:
+    """Many blocks at once: every block of `bufs` (block j holding ns[j]
+    values) decoded and concatenated in block order — equal to
+    np.concatenate([decode_block(b, n) for b, n in zip(bufs, ns)]), with
+    one vectorized pass per encoding instead of a Python call per block.
+    FOR/PFOR values are read as big-endian 64-bit windows at their bit
+    offsets (width <= 32, so one window holds any value); the varint
+    parts (all-equal values, varbyte payloads, PFOR exceptions) decode in
+    ONE vint_decode over their gathered bytes."""
+    ns = np.asarray(ns, dtype=np.int64)
+    first = np.cumsum(ns) - ns
+    out = np.zeros(int(ns.sum()), dtype=np.uint64)
+    if len(out) == 0:
+        return out
+    lens = np.fromiter((len(b) for b in bufs), np.int64, len(ns))
+    starts = np.cumsum(lens) - lens
+    raw = np.frombuffer(b"".join(bufs), np.uint8)
+    tags = raw[starts].astype(np.int64)
+    is_equal = tags == 0
+    is_vb = tags == TAG_VARBYTE
+    is_pfor = (tags & 0x80) != 0
+    width = np.where(is_pfor, tags & 0x7F, tags)
+
+    packed = np.flatnonzero(~is_equal & ~is_vb & (ns > 0))
+    if len(packed):
+        pn = ns[packed]
+        local = np.arange(int(pn.sum()), dtype=np.int64) - np.repeat(
+            np.cumsum(pn) - pn, pn)
+        w = np.repeat(width[packed], pn)
+        bit = np.repeat((starts[packed] + 1 + is_pfor[packed]) * 8,
+                        pn) + local * w
+        win = np.lib.stride_tricks.sliding_window_view(
+            np.concatenate([raw, np.zeros(8, np.uint8)]), 8)
+        word = win[bit >> 3].view(">u8").ravel().astype(np.uint64)
+        w = w.astype(np.uint64)
+        out[np.repeat(first[packed], pn) + local] = (
+            (word >> (np.uint64(64) - (bit & 7).astype(np.uint64) - w))
+            & ((np.uint64(1) << w) - np.uint64(1)))
+
+    vblk = np.flatnonzero(is_equal | is_vb | is_pfor)
+    if len(vblk):
+        vs, vn, vf, vw = starts[vblk], ns[vblk], first[vblk], width[vblk]
+        pf, eq, vb = is_pfor[vblk], is_equal[vblk], is_vb[vblk]
+        vstart = np.where(pf, vs + 2 + (vn * vw + 7) // 8, vs + 1)
+        vals = vint_decode(raw[gather_ranges(vstart,
+                                             vs + lens[vblk] - vstart)])
+        n_exc = np.where(pf, raw[vs + pf].astype(np.int64), 0)
+        cnt = np.where(eq, 1, np.where(pf, 2 * n_exc, vn))
+        vo = np.cumsum(cnt) - cnt
+        out[gather_ranges(vf[eq], vn[eq])] = np.repeat(vals[vo[eq]], vn[eq])
+        out[gather_ranges(vf[vb], vn[vb])] = vals[gather_ranges(vo[vb],
+                                                                vn[vb])]
+        ne = n_exc[pf]
+        if ne.sum():
+            idx = vals[gather_ranges(vo[pf], ne)].astype(np.int64)
+            high = vals[gather_ranges(vo[pf] + ne, ne)]
+            out[np.repeat(vf[pf], ne) + idx] |= high << np.repeat(
+                vw[pf], ne).astype(np.uint64)
+    return out
+
+
+def decode_doc_blocks(bufs, ns, bases) -> np.ndarray:
+    """Docids of many doc blocks (block j's first delta relative to
+    bases[j], the previous block's max_doc or -1), concatenated: the
+    multi-block decode_doc_block, its prefix sums restarted per block."""
+    ns = np.asarray(ns, dtype=np.int64)
+    cs = np.cumsum(decode_blocks(bufs, ns).astype(np.int64))
+    before = np.concatenate(([0], cs))[np.cumsum(ns) - ns]
+    return cs + np.repeat(np.asarray(bases, dtype=np.int64) - before, ns)
+
+
 def encode_doc_blocks(docids: np.ndarray, block_size: int = BLOCK_SIZE):
     """Split sorted docids into blocks; returns (blocks:list[bytes],
     ns:list[int], max_docs:list[int]). First delta is docids[0] + 1

@@ -24,6 +24,7 @@ import numpy as np
 
 from ..functions import bm25
 from ..functions.bm25 import F32
+from ..functions.codec import gather_ranges as _gather_ranges
 from ..plans.query import (BooleanQuery, BoostQuery, ConstantScoreQuery,
                            DisjunctionMaxQuery, IntervalQuery,
                            MatchAllDocsQuery,
@@ -388,16 +389,6 @@ def _in_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     ok = pos < len(b)
     ok[ok] = b[pos[ok]] == a[ok]
     return ok
-
-
-def _gather_ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Flat indices concatenating ranges [starts[j], starts[j]+counts[j])."""
-    total = int(counts.sum())
-    if total == 0:
-        return np.zeros(0, np.int64)
-    bases = np.repeat(starts - np.concatenate(([0], np.cumsum(counts)[:-1])),
-                      counts)
-    return bases + np.arange(total, dtype=np.int64)
 
 
 def _flat_positions(reader, term):

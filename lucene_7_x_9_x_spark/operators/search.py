@@ -22,6 +22,19 @@ ImpactsDISI.advanceTarget, so the top-k is identical to exhaustive
 evaluation while only competitive blocks are decoded (SURVEY.md §7.4.3).
 Within surviving intervals all docs are scored vectorized — more scoring
 work per block than Lucene's per-doc pivoting, amortized by numpy.
+
+On small segments, term-only plans take the dense batch accumulator
+instead (dense_topk, the BooleanScorer strategy,
+solr-8.4.0/.../search/BooleanScorer.java:33,36): all of a kernel call's
+term-only qids are scored together, with no pruning. Their terms decode in
+one multi-block codec pass (SparkSegmentReader.prefetch), each distinct
+(term, boost) is scored once, and np.bincount over qid*max_doc+docid keys
+sums every doc's unit scores in plan-unit order, so each float32 score is
+blockmax_topk's bit for bit. Per-call Python then no longer grows with
+the number of (qid, segment) pairs. The caller
+(searcher.Searcher._topk_frame) picks the strategy per segment by max_doc
+against Searcher.DENSE_MAX_DOC, in the manner of BooleanWeight's
+cost-based choice (BooleanWeight.java:193-276).
 """
 
 from __future__ import annotations
@@ -104,6 +117,12 @@ class SparkSegmentReader:
         r = self._rows.get(term)
         if r is None:
             return None
+        full = self._full_cache.get(term)
+        if full is not None:  # already decoded whole: slice its blocks
+            ns = np.asarray(r.block_ns, dtype=np.int64)
+            take = _gather_ranges((np.cumsum(ns) - ns)[block_idx],
+                                  ns[block_idx])
+            return full[0][take], full[1][take]
         ds, fs = [], []
         for j in block_idx:
             j = int(j)
@@ -123,14 +142,48 @@ class SparkSegmentReader:
             return (np.zeros(0, np.int64), np.zeros(0, np.int64))
         return np.concatenate(ds), np.concatenate(fs)
 
+    def prefetch(self, terms) -> None:
+        """Decode every block of every not-yet-decoded term in `terms` in
+        ONE multi-block codec pass (codec.decode_doc_blocks /
+        decode_blocks) and fill the whole-postings cache that postings()
+        serves; absent terms cache as None."""
+        rows = []
+        for t in terms:
+            if t not in self._full_cache:
+                r = self._rows.get(t)
+                if r is None:
+                    self._full_cache[t] = None
+                else:
+                    rows.append((t, r))
+        if not rows:
+            return
+        nb = np.fromiter((len(r.block_ns) for _, r in rows), np.int64,
+                         len(rows))
+        ns = np.concatenate([r.block_ns for _, r in rows]).astype(np.int64)
+        # each block's delta base: the previous block's max docid, -1 at
+        # the first block of each term
+        mx = np.concatenate([r.block_max_docs for _, r in rows])
+        bases = np.concatenate(([-1], mx[:-1])).astype(np.int64)
+        bases[(np.cumsum(nb) - nb)[nb > 0]] = -1
+        # object arrays: a plain concatenate of bytes lists would make a
+        # fixed-width bytes array, which drops trailing NUL bytes
+        docs = codec.decode_doc_blocks(np.concatenate(
+            [np.asarray(r.block_docs, dtype=object) for _, r in rows]),
+            ns, bases)
+        freqs = codec.decode_blocks(np.concatenate(
+            [np.asarray(r.block_freqs, dtype=object) for _, r in rows]),
+            ns).astype(np.int64) + 1
+        self.blocks_decoded += len(ns)
+        ends = np.cumsum(ns)[np.cumsum(nb) - 1].tolist()
+        a = 0
+        for (t, _), b in zip(rows, ends):
+            self._full_cache[t] = (docs[a:b], freqs[a:b])
+            a = b
+
     def postings(self, term):
-        if term in self._full_cache:
-            return self._full_cache[term]
-        r = self._rows.get(term)
-        out = None if r is None else self.decode_blocks(
-            term, np.arange(len(r.block_ns)))
-        self._full_cache[term] = out
-        return out
+        if term not in self._full_cache:
+            self.prefetch((term,))
+        return self._full_cache[term]
 
     def flat_positions(self, term):
         """(docids, counts, flat_pos): ALL docs' positions decoded in one
@@ -249,9 +302,13 @@ def classify_blockmax(q) -> dict | None:
     SynonymQuery.java:305-360), dismax-of-terms (max-score propagation,
     MaxScoreSumPropagator.java:32), exact phrases (conjunction-of-members
     approximation ceiling, PhraseWeight + ImpactsDISI) — return
-    {'units': [unit], 'filter': [keys], 'must_not': [keys], 'msm': n};
-    else None -> exhaustive fallback. Each unit dict carries kind/boost/
-    is_must plus kind-specific keys."""
+    {'units': [unit], 'must_not': [keys], 'msm': n}; else None ->
+    exhaustive fallback. Each unit dict carries kind/boost/is_must plus
+    kind-specific keys. A FILTER term is a required term unit of boost 0
+    marked 'filter': it scores 0.0 (adding 0.0 leaves every float64 sum
+    bit-identical) and, being required, makes SHOULD units optional when
+    there is no MUST and msm is 0 — filter-only docs match with score 0,
+    as Boolean2ScorerSupplier's required + optional split does."""
     def unit_of(sub, boost=1.0):
         if isinstance(sub, BoostQuery):
             return unit_of(sub.query, boost * sub.boost)
@@ -278,24 +335,26 @@ def classify_blockmax(q) -> dict | None:
     if not isinstance(q, BooleanQuery):
         u = unit_of(q)
         return None if u is None else {
-            "units": [dict(u, is_must=False)], "filter": [],
-            "must_not": [], "msm": 0}
-    out = {"units": [], "filter": [], "must_not": [],
-           "msm": q.minimum_should_match}
+            "units": [dict(u, is_must=False)], "must_not": [], "msm": 0}
+    out = {"units": [], "must_not": [], "msm": q.minimum_should_match}
+    filters = []
     for c in q.clauses:
         if c.occur in (Occur.SHOULD, Occur.MUST):
             u = unit_of(c.query)
             if u is None:
                 return None
             out["units"].append(dict(u, is_must=c.occur == Occur.MUST))
-        elif isinstance(c.query, TermQuery):
-            out["filter" if c.occur == Occur.FILTER
-                else "must_not"].append(
-                    term_key(c.query.field, c.query.term))
-        else:
+        elif not isinstance(c.query, TermQuery):
             return None
+        elif c.occur == Occur.FILTER:
+            filters.append({"kind": "term", "boost": 0.0, "is_must": True,
+                            "filter": True, "key": term_key(
+                                c.query.field, c.query.term)})
+        else:
+            out["must_not"].append(term_key(c.query.field, c.query.term))
     if not out["units"]:
         return None
+    out["units"] += filters
     return out
 
 
@@ -598,11 +657,6 @@ def blockmax_topk(reader: SparkSegmentReader, stats: SegmentStats,
     if not units:
         return empty
     n_must_req = sum(1 for u in units if u.is_must)
-    filt_terms = []
-    for t in plan["filter"]:
-        if reader.row(t) is None:
-            return empty
-        filt_terms.append(t)
 
     # elementary intervals: interval i covers docids (bps[i-1], bps[i]]
     bps = np.unique(np.concatenate(
@@ -685,9 +739,6 @@ def blockmax_topk(reader: SparkSegmentReader, stats: SegmentStats,
             ok &= scnt >= msm
         elif n_must_req == 0:
             ok &= scnt >= 1
-        for t in filt_terms:
-            fd, _ = reader.postings(t)
-            ok &= np.isin(docs_u, fd, assume_unique=True)
         for nd in must_not_sets:
             ok &= ~np.isin(docs_u, nd, assume_unique=True)
         docs_u = docs_u[ok]
@@ -703,3 +754,144 @@ def blockmax_topk(reader: SparkSegmentReader, stats: SegmentStats,
     top_d, top_s = top_k(Matches(top_d, top_s), k)
     frac = reader.blocks_decoded / max(total_blocks, 1)
     return top_d, top_s, frac
+
+
+# --------------------------------------------------------------------------
+# dense batch accumulator (small segments)
+# --------------------------------------------------------------------------
+
+# accumulator cells (qids x max_doc) per dense_topk pass: bounds its
+# scratch to ~33 bytes a cell (float64 sums, two int64 counts, the bool
+# and float32 score matrices and the partition copy), ~35 MB
+DENSE_CELLS = 1 << 20
+
+
+def is_term_plan(plan: dict | None) -> bool:
+    """Whether dense_topk can run this block-max plan: term units only."""
+    return plan is not None and all(u["kind"] == "term"
+                                    for u in plan["units"])
+
+
+def dense_topk(reader: SparkSegmentReader, stats: SegmentStats,
+               plans: list, k: int, max_doc: int,
+               deleted: np.ndarray | None = None) -> list:
+    """Per-segment top-k of MANY term-only block-max plans at once — the
+    BooleanScorer strategy (a dense per-window score table,
+    solr-8.4.0/.../search/BooleanScorer.java:33,36) over a whole small
+    segment and a whole batch, where blockmax_topk pays per-call Python
+    per (qid, segment). Every term of the batch decodes in one
+    multi-block pass (reader.prefetch); each distinct (term, boost) is
+    scored once, all of them in one score_term call per field; per-(qid,
+    doc) float64 sums and MUST/SHOULD counts come from np.bincount over
+    qid*max_doc+docid keys whose elements are laid out in plan-unit order,
+    so every doc's sum has blockmax_topk's addends in blockmax_topk's
+    order (the same float32 score, bit for bit); then (score desc, docid
+    asc) top-k per qid by one np.partition threshold and one lexsort. No
+    pruning: the exact per-segment top-k, so no theta0. Qids run in chunks
+    of DENSE_CELLS // max_doc to bound the scratch. Returns [(docids,
+    float32 scores)] aligned with `plans`."""
+    empty = (np.zeros(0, np.int64), np.zeros(0, np.float32))
+    out = [empty] * len(plans)
+    if k <= 0:
+        return out
+    reader.prefetch({kk for p in plans for kk in
+                     [u["key"] for u in p["units"]] + p["must_not"]})
+    slots: dict = {}  # (key, boost) -> its slot in the scored arrays
+    live = []  # (plan index, [(slot, is_must)], plan)
+    for i, p in enumerate(plans):
+        parts = []
+        for pu in p["units"]:
+            kk, is_must = pu["key"], pu.get("is_must", False)
+            if reader.postings(kk) is None:
+                if is_must:
+                    break
+                continue
+            parts.append((slots.setdefault((kk, pu["boost"]), len(slots)),
+                          is_must))
+        else:
+            if parts:
+                live.append((i, parts, p))
+    if not live:
+        return out
+    scored = _score_slots(reader, stats, list(slots))
+    step = max(DENSE_CELLS // max(max_doc, 1), 1)
+    for c in range(0, len(live), step):
+        chunk = live[c:c + step]
+        for (i, _, _), got in zip(chunk, _dense_chunk(
+                reader, chunk, scored, k, max_doc, deleted)):
+            out[i] = got
+    return out
+
+
+def _score_slots(reader, stats: SegmentStats, slots: list):
+    """(docids, float64 scores, starts, lens): the postings of every
+    (key, boost) slot scored and concatenated in slot order, weight
+    F32(F32(boost) * idf) as in _build_units; one score_term call per
+    field, with a per-posting weight array (float32 elementwise, so each
+    score is the one a per-term call gives)."""
+    posts = [reader.postings(kk) for kk, _ in slots]
+    lens = np.fromiter((len(p[0]) for p in posts), np.int64, len(posts))
+    d = np.concatenate([p[0] for p in posts])
+    f = np.concatenate([p[1] for p in posts])
+    w = np.repeat(np.array([F32(F32(b) * stats.idf(kk)) for kk, b in slots],
+                           dtype=np.float32), lens)
+    fields = [key_field(kk) for kk, _ in slots]
+    s = np.empty(len(d), np.float32)
+    for fld in set(fields):
+        m = (slice(None) if len(set(fields)) == 1 else
+             np.repeat(np.array([x == fld for x in fields]), lens))
+        s[m] = bm25.score_term(f[m], reader.norms_for(fld)[d[m]], w[m],
+                               stats.cache_for(fld))
+    return d, s.astype(np.float64), np.cumsum(lens) - lens, lens
+
+
+def _dense_chunk(reader, chunk: list, scored, k: int, max_doc: int,
+                 deleted: np.ndarray | None) -> list:
+    """dense_topk over one chunk of resolved plans: one gather of the
+    scored postings, one (qid x doc) accumulator, one partition, one
+    lexsort."""
+    flat_d, flat_s, starts, lens = scored
+    nq = len(chunk)
+    sl = np.array([j for _, parts, _ in chunk for j, _ in parts])
+    pm = np.array([m for _, parts, _ in chunk for _, m in parts], bool)
+    pq = np.repeat(np.arange(nq), [len(parts) for _, parts, _ in chunk])
+    n = lens[sl]
+    take = _gather_ranges(starts[sl], n)
+    keys = flat_d[take] + np.repeat(pq * max_doc, n)
+    must = np.repeat(pm, n)
+    need_m = np.bincount(pq[pm], minlength=nq)
+    msm = np.array([max(p["msm"], 0) for _, _, p in chunk])
+    need_s = np.where(msm > 0, msm, need_m == 0)
+    cells = nq * max_doc
+    # bincount adds in element order: each cell's addends in unit order
+    acc = np.bincount(keys, weights=flat_s[take],
+                      minlength=cells).reshape(nq, max_doc)
+    ok = np.ones((nq, max_doc), bool)
+    for sel, need in ((~must, need_s), (must, need_m)):
+        if need.any():  # a count only where some qid needs it
+            ok &= (np.bincount(keys[sel], minlength=cells)
+                   .reshape(nq, max_doc) >= need[:, None])
+    for qi, (_, _, p) in enumerate(chunk):
+        for t in p["must_not"]:
+            got = reader.postings(t)
+            if got is not None:
+                ok[qi, got[0]] = False
+    if deleted is not None and len(deleted):
+        ok[:, deleted] = False
+    score = np.where(ok, acc.astype(np.float32), np.float32(-np.inf))
+    # qids with more than k hits keep every cell scoring >= their k-th
+    # best, ties included, so the docid tie-break below stays exact
+    over = np.flatnonzero(ok.sum(axis=1) > k)
+    if len(over):
+        kth = np.partition(score[over], max_doc - k, axis=1)[:, max_doc - k]
+        ok[over] &= score[over] >= kth[:, None]
+    q, d = np.nonzero(ok)
+    s = score[q, d]
+    order = np.lexsort((d, -s, q))
+    q, d, s = q[order], d[order], s[order]
+    n_q = np.bincount(q, minlength=nq)
+    first = np.cumsum(n_q) - n_q
+    keep = np.arange(len(q)) - first[q] < k
+    d, s = d[keep], s[keep]
+    ends = np.cumsum(np.minimum(n_q, k)).tolist()
+    return [(d[a:b], s[a:b]) for a, b in zip([0] + ends[:-1], ends)]

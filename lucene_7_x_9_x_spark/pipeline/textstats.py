@@ -4,9 +4,11 @@ JVM-side expressions (whole-stage codegen), no Python UDFs."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import tokens_col
+from .dedup import TOKEN_MATCH, tokens_col
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "for", "on", "with"]
 
@@ -16,6 +18,19 @@ LANG_MARKERS = {
     "c": ["struct", "typedef", "malloc", "sizeof", "include"],
     "go": ["func", "chan", "defer", "goroutine", "package"],
 }
+
+
+def count_tokens_in(text_col: str, words: list):
+    """How many of the text's tokens (tokens_col) are one of `words`, as
+    one codegen'd regexp_extract_all of the words as WHOLE tokens: the
+    lookarounds forbid a token character on either side, so a match is
+    exactly a maximal token run equal to a word — size(filter(ts, t ->
+    array_contains(words, t))) without the interpreted lambda."""
+    tok = TOKEN_MATCH.rstrip("+")  # one token character
+    alt = "|".join(re.escape(w) for w in words)
+    return F.size(F.regexp_extract_all(
+        F.lower(F.col(text_col)),
+        F.lit(f"(?<!{tok})(?:{alt})(?!{tok})"), 0))
 
 
 def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -32,31 +47,25 @@ def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Heuristic quality features: stopword count, punctuation count, mean
     token length (as exact rationals: numerator/denominator columns so the
-    comparison with SQL oracles is float-free)."""
+    comparison with SQL oracles is float-free). Codegen'd builtins only:
+    the summed token length is the length of the tokens joined."""
     ts = tokens_col(text_col)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     return df.select(
         F.col(id_col),
         F.size(ts).cast("long").alias("n_tokens"),
-        F.size(F.filter(ts, lambda t: F.array_contains(stop_arr, t)))
-        .cast("long").alias("n_stopwords"),
+        count_tokens_in(text_col, STOPWORDS).cast("long")
+        .alias("n_stopwords"),
         (F.length(F.col(text_col))
          - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", "")))
         .cast("long").alias("n_punct"),
-        F.aggregate(ts, F.lit(0).cast("long"),
-                    lambda acc, t: acc + F.length(t)).alias("sum_token_len"))
+        F.length(F.array_join(ts, "")).cast("long").alias("sum_token_len"))
 
 
 def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Marker-keyword language guess. Deterministic tie order: langs in
     sorted key order, first max wins; 'unknown' when no marker hits."""
-    ts = tokens_col(text_col)
-    scores = []
-    for lang in sorted(LANG_MARKERS):
-        arr = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-        scores.append(
-            F.size(F.filter(ts, lambda t: F.array_contains(arr, t)))
-            .alias(f"s_{lang}"))
+    scores = [count_tokens_in(text_col, LANG_MARKERS[lang])
+              .alias(f"s_{lang}") for lang in sorted(LANG_MARKERS)]
     tmp = df.select(F.col(id_col), *scores)
     langs = sorted(LANG_MARKERS)
     best = F.greatest(*[F.col(f"s_{lg}") for lg in langs])

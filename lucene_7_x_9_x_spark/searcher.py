@@ -27,6 +27,14 @@ one qid:
                                pruned postings rows, ids point-read from
                                the docmap, the result a DataFrame over a
                                pyarrow Table — no Spark job at all
+            in every shape, kernel_body picks each qid's top-k strategy
+            per segment: term-only block-max plans on a segment of at
+            most DENSE_MAX_DOC docs run together on the dense batch
+            accumulator (operators/search.dense_topk: one multi-block
+            decode, one (qid x doc) bincount); other block-max plans run
+            blockmax_topk per qid; the rest (k=None, searchAfter,
+            non-BM25 similarities, shapes classify_blockmax rejects) run
+            the exhaustive evaluate + top_k
   driver:   search: ORDER BY score DESC, segment, docid LIMIT k (Catalyst
             TakeOrderedAndProject) == TopDocs.merge tie semantics
             (solr-8.4.0/.../search/TopDocs.java:75,106);
@@ -51,7 +59,7 @@ from .functions.editdist import osa_distance as _osa_distance
 from .index import IndexSnapshot, parse_segnorms
 from .operators import executor as ex
 from .operators.search import (SparkSegmentReader, blockmax_topk,
-                               classify_blockmax)
+                               classify_blockmax, dense_topk, is_term_plan)
 from .plans import query as Q
 from .plans.query import (RewriteContext, key_field, key_term, term_key,
                           rewrite as rewrite_query)
@@ -186,6 +194,16 @@ class Searcher:
     # driver and run the distributed fallback (tests shrink this to
     # exercise the big-deletes path without 5M rows)
     TOMBSTONE_DRIVER_CAP = 5_000_000
+
+    # segment size (max_doc) up to which term-only block-max plans run on
+    # the dense batch accumulator (operators/search.dense_topk) instead of
+    # blockmax_topk. scripts/kernel_profile.py found no crossover up to
+    # 75k-doc segments (perfbench's hot_batch inputs, 4 vCPU): dense led
+    # by 1.2-1.9x at batch 1, 2.5-3.6x at batch 16 and 2.7-6x at batch
+    # 128. The bound sits just above the largest size measured (the 10M
+    # scale point's ~75k-doc segments); bigger segments keep block-max
+    # pruning. Tests set it to 0 on the instance to force block-max.
+    DENSE_MAX_DOC = 100_000
 
     def _deleted_by_segment(self, max_driver_rows: int | None = None
                             ) -> dict | None:
@@ -552,7 +570,7 @@ class Searcher:
     def _theta_pairs(self, plan: dict, stats: ex.SegmentStats) -> list:
         """Eligible (key, weight) achieved-score sources for a plan, or []
         when the shape disqualifies seeding (see _seed_theta safety)."""
-        if plan.get("filter") or plan.get("must_not"):
+        if plan["must_not"] or any(u.get("filter") for u in plan["units"]):
             return []
         units = plan["units"]
         musts = [u for u in units if u.get("is_must")]
@@ -713,6 +731,12 @@ class Searcher:
                     if t0 > 0.0:
                         task_theta[qid] = t0
 
+        # term-only plans go to the dense batch accumulator on segments
+        # of at most DENSE_MAX_DOC docs; read here, on the driver, so the
+        # closure carries the instance's value into every task
+        dense_max = self.DENSE_MAX_DOC
+        dense_ok = {qid for qid, plan in plans.items() if is_term_plan(plan)}
+
         def kernel_body(seg: int, post_pdf: pd.DataFrame, norms, max_doc,
                         fnorms, dele2=None, qids=tuple(queries)
                         ) -> pd.DataFrame:
@@ -720,13 +744,21 @@ class Searcher:
                                         field_norms=fnorms)
             dele = dele2 if dele2 is not None else (
                 del_bc.value.get(seg) if del_bc is not None else None)
+            dense_q = ([qid for qid in qids if qid in dense_ok]
+                       if max_doc <= dense_max else [])
+            dense = dict(zip(dense_q, dense_topk(
+                reader, stats, [plans[qid] for qid in dense_q], k, max_doc,
+                deleted=dele))) if dense_q else {}
             ds, ss = [], []
             for qid in qids:
                 plan = plans[qid]
                 if plan is not None:
-                    d, s, _ = blockmax_topk(reader, stats, plan, k,
-                                            deleted=dele,
-                                            theta0=task_theta.get(qid))
+                    if qid in dense:
+                        d, s = dense[qid]
+                    else:
+                        d, s, _ = blockmax_topk(reader, stats, plan, k,
+                                                deleted=dele,
+                                                theta0=task_theta.get(qid))
                     if len(d) == k:
                         task_theta[qid] = max(task_theta.get(qid, 0.0),
                                               float(s[-1]))

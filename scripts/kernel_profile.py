@@ -12,15 +12,23 @@ read that `_topk_frame` does per batch, with no task, serde or exchange
 cost. One warm-up batch (hot_batch's warm-up stream) runs first; then the
 first BATCHES measured batches of seed SEED each run REPS times, and the
 script prints the median wall time and the median process CPU time per
-batch.
+batch and per query, and how many (qid, segment) kernel calls took each
+top-k strategy: the dense batch accumulator (`dense_topk`, term-only plans
+on segments of at most `Searcher.DENSE_MAX_DOC` docs) or `blockmax_topk`.
+
+--batch N sends the first N qids of each batch (default 128, all of
+hot_batch's) through one `_topk_frame` call: the per-query cost at a
+smaller batch, the input of the DENSE_MAX_DOC crossover. --dense-max-doc M
+overrides `Searcher.DENSE_MAX_DOC` on the instance (0 forces the
+block-max kernel everywhere).
 
 --profile N runs the batches once more under cProfile and prints the top
 N functions by internal time. --rows PATH writes every batch's rows
 (batch, qid, segment, docid, score) to a parquet file, so two checkouts
 can be compared row for row on the same batches.
 
-Usage: python scripts/kernel_profile.py [--docs 10000] [--profile N]
-       [--rows PATH] [--work DIR]
+Usage: python scripts/kernel_profile.py [--docs 10000] [--batch 128]
+       [--dense-max-doc M] [--profile N] [--rows PATH] [--work DIR]
        (--work keeps the index: a later run with the same --work and
        --docs reopens it instead of building again)
 """
@@ -77,9 +85,32 @@ def run_batch(searcher, queries: dict, k: int):
         local=True)
 
 
+def count_strategies() -> dict:
+    """Wrap the searcher module's two top-k kernels so each (qid,
+    segment) call is counted by strategy; returns the live counts."""
+    from lucene_7_x_9_x_spark import searcher as searcher_mod
+
+    counts = {"dense": 0, "blockmax": 0}
+    dense, blockmax = searcher_mod.dense_topk, searcher_mod.blockmax_topk
+
+    def dense_counted(reader, stats, plans, *a, **kw):
+        counts["dense"] += len(plans)
+        return dense(reader, stats, plans, *a, **kw)
+
+    def blockmax_counted(*a, **kw):
+        counts["blockmax"] += 1
+        return blockmax(*a, **kw)
+
+    searcher_mod.dense_topk = dense_counted
+    searcher_mod.blockmax_topk = blockmax_counted
+    return counts
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=10_000)
+    ap.add_argument("--batch", type=int, default=128, metavar="N")
+    ap.add_argument("--dense-max-doc", type=int, default=None, metavar="M")
     ap.add_argument("--profile", type=int, default=0, metavar="N")
     ap.add_argument("--rows", default=None, metavar="PATH")
     ap.add_argument("--work", default=None)
@@ -94,8 +125,12 @@ def main():
     try:
         idx, root = open_index(spark, work, a.docs)
         s = Searcher(idx)
+        if a.dense_max_doc is not None:
+            s.DENSE_MAX_DOC = a.dense_max_doc
         warm, qs = batches(spark, root, idx)
+        qs = [dict(list(q.items())[:a.batch]) for q in qs]
         run_batch(s, warm, wl.K)
+        counts = count_strategies()
         wall, cpu, rows = [], [], []
         for _ in range(REPS):
             for i, q in enumerate(qs):
@@ -105,10 +140,14 @@ def main():
                 cpu.append(time.process_time() - c)
                 if len(rows) < len(qs):
                     rows.append(got.assign(batch=i))
-        print(f"docs {a.docs}  batches {len(qs)} x {REPS}  "
-              f"wall p50 {statistics.median(wall) * 1000:.0f} ms  "
-              f"cpu p50 {statistics.median(cpu) * 1000:.0f} ms per batch",
-              flush=True)
+        nq = len(qs[0])
+        w50, c50 = statistics.median(wall), statistics.median(cpu)
+        print(f"docs {a.docs}  batch {nq}  batches {len(qs)} x {REPS}  "
+              f"wall p50 {w50 * 1000:.0f} ms  cpu p50 {c50 * 1000:.0f} ms "
+              f"per batch  ({w50 * 1000 / nq:.1f} / {c50 * 1000 / nq:.1f} "
+              f"ms per query)  DENSE_MAX_DOC {s.DENSE_MAX_DOC}  "
+              f"(qid, segment) calls: dense {counts['dense']}  "
+              f"blockmax {counts['blockmax']}", flush=True)
         if a.rows:
             (pd.concat(rows, ignore_index=True)
              [["batch", "qid", "segment", "docid", "score"]]

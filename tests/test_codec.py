@@ -111,3 +111,88 @@ def test_impacts_frontier_bounds_scores():
         ff, nn = codec.impacts_frontier(freqs, norms)
         front = bm25.score_term(ff, nn, w, cache).max()
         assert front == full
+
+
+def _random_block(r, tag: str) -> tuple[bytes, np.ndarray]:
+    """(encoded block, its values) of the given encoding."""
+    n = int(r.randint(1, 129))
+    if tag == "for":
+        w = int(r.randint(1, 33))
+        v = r.randint(0, 2**w, n, dtype=np.uint64)
+        v[r.randint(n)] = 2**w - 1  # the top bit set: width exactly w
+        if n == 1 or v.min() == v.max():
+            v[0] = 0 if v[0] else 1
+        return codec.encode_block(v, allow_pfor=False), v
+    if tag == "pfor":
+        n = max(n, 16)
+        w = int(r.randint(1, 20))
+        v = r.randint(0, 2**w, n, dtype=np.uint64)
+        exc = r.choice(n, int(r.randint(1, 4)), replace=False)
+        v[exc] = r.randint(2**(w + 8), 2**(w + 12), len(exc), dtype=np.uint64)
+        return codec.encode_block(v), v
+    if tag == "equal":
+        v = np.full(n, r.randint(0, 2**31), dtype=np.uint64)
+        return codec.encode_block(v), v
+    if tag == "varbyte":
+        v = r.randint(0, 2**int(r.randint(1, 33)), n, dtype=np.uint64)
+        return bytes([codec.TAG_VARBYTE]) + codec.vint_encode(v), v
+    v = np.zeros(0, np.uint64)
+    return codec.encode_block(v), v
+
+
+def test_multi_block_decode_matches_decode_block():
+    """decode_blocks over a random mix of every encoding equals
+    decode_block per block, concatenated: FOR widths 1-32, PFOR with 1-3
+    exceptions, all-equal, varbyte and empty blocks."""
+    r = np.random.RandomState(7)
+    tags = ["for", "pfor", "equal", "varbyte", "empty"]
+    seen_widths, seen_exc = set(), set()
+    for _ in range(30):
+        blocks = [_random_block(r, tags[r.randint(len(tags))])
+                  for _ in range(r.randint(1, 60))]
+        bufs = [b for b, _ in blocks]
+        ns = [len(v) for _, v in blocks]
+        want = np.concatenate([codec.decode_block(b, n)
+                               for b, n in zip(bufs, ns)])
+        assert np.array_equal(want, np.concatenate([v for _, v in blocks]))
+        got = codec.decode_blocks(bufs, ns)
+        assert got.dtype == np.uint64 and np.array_equal(got, want)
+        for b in bufs:
+            if 1 <= b[0] <= 32:
+                seen_widths.add(b[0])
+            elif b[0] & 0x80:
+                seen_exc.add(b[1])
+    assert seen_widths == set(range(1, 33)) and seen_exc == {1, 2, 3}
+    for tag in tags:  # each encoding alone, and nothing at all
+        blocks = [_random_block(r, tag) for _ in range(5)]
+        got = codec.decode_blocks([b for b, _ in blocks],
+                                  [len(v) for _, v in blocks])
+        assert np.array_equal(got, np.concatenate([v for _, v in blocks]))
+    assert len(codec.decode_blocks([], [])) == 0
+
+
+def test_multi_block_doc_decode_matches_decode_postings():
+    """decode_doc_blocks over several multi-block terms at once rebuilds
+    each term's docids through its chained block deltas, equal to
+    build.decode_postings row by row."""
+    from types import SimpleNamespace
+
+    from lucene_7_x_9_x_spark.operators.build import (decode_postings,
+                                                      encode_postings)
+    r = np.random.RandomState(11)
+    rows = []
+    for n in (1, 127, 128, 129, 300, 1000, 2500):
+        d = np.sort(r.choice(200_000, n, replace=False)).astype(np.int64)
+        f = r.randint(1, 40, n).astype(np.int64)
+        rows.append(SimpleNamespace(**encode_postings(
+            d, f, r.randint(0, 256, n))))
+    bufs = [b for row in rows for b in row.block_docs]
+    ns = np.concatenate([row.block_ns for row in rows])
+    bases = np.concatenate([np.concatenate(([-1], row.block_max_docs[:-1]))
+                            for row in rows])
+    want = [decode_postings(row) for row in rows]
+    got = codec.decode_doc_blocks(bufs, ns, bases)
+    assert np.array_equal(got, np.concatenate([d for d, _ in want]))
+    fbufs = [b for row in rows for b in row.block_freqs]
+    assert np.array_equal(codec.decode_blocks(fbufs, ns).astype(np.int64) + 1,
+                          np.concatenate([f for _, f in want]))

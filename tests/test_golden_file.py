@@ -14,7 +14,8 @@ from lucene_7_x_9_x_spark.operators import executor as ex
 from lucene_7_x_9_x_spark.operators.build import invert_segment
 from lucene_7_x_9_x_spark.operators.search import (SparkSegmentReader,
                                                    blockmax_topk,
-                                                   classify_blockmax)
+                                                   classify_blockmax,
+                                                   dense_topk, is_term_plan)
 from lucene_7_x_9_x_spark.functions.analysis import AnalyzerConfig
 from scripts.gen_golden import queries as golden_queries
 
@@ -61,14 +62,24 @@ def test_blockmax_kernel_reproduces_golden(golden):
              & 0xFF).astype(np.uint8)
     reader = SparkSegmentReader(postings, norms, len(corpus))
     _, stats = oracle.index_corpus(sorted_c, text_col="content")
-    for qid, desc, q in qs:
-        plan = classify_blockmax(q)
-        for k in (1, 10):
+    # term-only plans also through the dense batch accumulator, all of
+    # them in one batch per k
+    term_qids = [qid for qid, _, q in qs if is_term_plan(classify_blockmax(q))]
+    assert len(term_qids) >= 10
+    for k in (1, 10):
+        dense = dict(zip(term_qids, dense_topk(
+            SparkSegmentReader(postings, norms, len(corpus)), stats,
+            [classify_blockmax(q) for qid, _, q in qs if qid in term_qids],
+            k, len(corpus))))
+        for qid, desc, q in qs:
+            plan = classify_blockmax(q)
             want = gold[(gold.qid == qid) & (gold.k == k)]
-            if plan is not None:
-                d, s, _ = blockmax_topk(reader, stats, plan, k)
-            else:
-                d, s = ex.top_k(ex.evaluate(reader, stats, q), k)
-            assert d.tolist() == want.docid.tolist(), (qid, k)
-            assert np.array_equal(s.view(np.int32),
-                                  want.score_bits.to_numpy()), (qid, k)
+            got = [ex.top_k(ex.evaluate(reader, stats, q), k)
+                   if plan is None
+                   else blockmax_topk(reader, stats, plan, k)[:2]]
+            if qid in dense:
+                got.append(dense[qid])
+            for d, s in got:
+                assert d.tolist() == want.docid.tolist(), (qid, k)
+                assert np.array_equal(s.view(np.int32),
+                                      want.score_bits.to_numpy()), (qid, k)

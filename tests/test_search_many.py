@@ -1,9 +1,13 @@
 """search_many (batched multi-query execution) must return exactly what
 per-query search returns, for every query in the batch; and the driver
 path (`_topk_frame(..., local=True)`) must return what each Spark kernel
-shape (hot, cold broadcast-norms, cogroup) returns for the same batch."""
+shape (hot, cold broadcast-norms, cogroup) returns for the same batch.
+Each check runs twice: with the dense-accumulator gate in force (every
+segment of these small indexes is under DENSE_MAX_DOC, so term-only plans
+take dense_topk) and with DENSE_MAX_DOC forced to 0 (blockmax_topk)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from lucene_7_x_9_x_spark.plans.query import (BooleanQuery,
@@ -26,6 +30,18 @@ def many_index(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("many"))
     return build_index(spark, spark.createDataFrame(pdf), out,
                        id_cols=["id"], text_col="content", num_segments=3)
+
+
+def _gates(s):
+    """Run the body with s's dense gate in force, then with DENSE_MAX_DOC
+    forced to 0 on the instance; yields the gate value."""
+    from lucene_7_x_9_x_spark.searcher import Searcher
+    try:
+        for gate in (Searcher.DENSE_MAX_DOC, 0):
+            s.DENSE_MAX_DOC = gate
+            yield gate
+    finally:
+        s.__dict__.pop("DENSE_MAX_DOC", None)
 
 
 def _assert_same_as_search(s, got, batch, k):
@@ -73,10 +89,19 @@ def _rows(pdf, label):
             .reset_index(drop=True))
 
 
-def _assert_driver_path_matches(s, idx):
+def _assert_driver_path_matches(s, idx, monkeypatch):
     """s's driver path and s's Spark path give the same (qid, segment,
     docid) rows, byte-equal float32 scores and frame dtypes: top-k, every
-    match (k=None) and, on the mixed batch, a searchAfter cursor."""
+    match (k=None) and, on the mixed batch, a searchAfter cursor. The
+    driver path calls dense_topk only when s's gate lets it."""
+    from lucene_7_x_9_x_spark import searcher as searcher_mod
+    dense_calls, dense = [], searcher_mod.dense_topk
+
+    def counted(*a, **kw):
+        dense_calls.append(1)
+        return dense(*a, **kw)
+
+    monkeypatch.setattr(searcher_mod, "dense_topk", counted)
     for name, batch in _kernel_batches(idx).items():
         rq = {qid: s.rewrite(q) for qid, q in batch.items()}
         calls = [dict(k=7), dict(k=None, mode="complete")]
@@ -101,10 +126,13 @@ def _assert_driver_path_matches(s, idx):
                 assert len(got) > 0, label
             else:
                 assert set(got.qid) == set(batch), label
+    assert bool(dense_calls) == (s.DENSE_MAX_DOC > 0)
+    monkeypatch.undo()
 
 
 @pytest.mark.parametrize("cache_index", [False, True])
-def test_search_many_matches_individual(spark, many_index, cache_index):
+def test_search_many_matches_individual(spark, many_index, cache_index,
+                                        monkeypatch):
     from lucene_7_x_9_x_spark.searcher import Searcher
     s = Searcher(many_index, cache_index=cache_index)
     batch = {
@@ -119,15 +147,20 @@ def test_search_many_matches_individual(spark, many_index, cache_index):
         "q_absent": TermQuery("nonexistent_zzz"),
     }
     try:
-        _assert_same_as_search(s, s.search_many(batch, k=5).toPandas(),
-                               batch, 5)
-        _assert_driver_path_matches(s, many_index)
+        rows = []
+        for _ in _gates(s):
+            got = s.search_many(batch, k=5).toPandas()
+            _assert_same_as_search(s, got, batch, 5)
+            _assert_driver_path_matches(s, many_index, monkeypatch)
+            rows.append(got.sort_values(["qid", "rank"])
+                        .reset_index(drop=True))
+        pd.testing.assert_frame_equal(rows[0], rows[1])
     finally:
         s._post_src.unpersist()
         s._terms_src.unpersist()
 
 
-def test_cogroup_kernel_matches_broadcast(spark, many_index):
+def test_cogroup_kernel_matches_broadcast(spark, many_index, monkeypatch):
     """Norms too big to broadcast fall back to the cogroup kernel; without
     deletes it must return the broadcast path's rows and float32 scores,
     for search and search_many alike, and the driver path's (every test
@@ -144,16 +177,18 @@ def test_cogroup_kernel_matches_broadcast(spark, many_index):
     small = Searcher(many_index)
     big = Searcher(many_index)
     big._small_norms = False
-    for qid, q in batch.items():
-        a = small.search(q, 6, with_ids=False).toPandas()
-        b = big.search(q, 6, with_ids=False).toPandas()
-        assert a[["segment", "docid"]].values.tolist() == \
-            b[["segment", "docid"]].values.tolist(), qid
-        assert np.array_equal(a.score.to_numpy(np.float32),
-                              b.score.to_numpy(np.float32)), qid
-    _assert_same_as_search(small, big.search_many(batch, k=6).toPandas(),
-                           batch, 6)
-    _assert_driver_path_matches(big, many_index)
+    for gate in _gates(big):
+        small.DENSE_MAX_DOC = gate
+        for qid, q in batch.items():
+            a = small.search(q, 6, with_ids=False).toPandas()
+            b = big.search(q, 6, with_ids=False).toPandas()
+            assert a[["segment", "docid"]].values.tolist() == \
+                b[["segment", "docid"]].values.tolist(), qid
+            assert np.array_equal(a.score.to_numpy(np.float32),
+                                  b.score.to_numpy(np.float32)), qid
+        _assert_same_as_search(small, big.search_many(batch, k=6)
+                               .toPandas(), batch, 6)
+        _assert_driver_path_matches(big, many_index, monkeypatch)
 
 
 def test_search_many_all_absent(spark, many_index):
@@ -176,10 +211,11 @@ def test_search_many_with_matchall(spark, many_index):
         "q_boolall": BooleanQuery([(Occur.MUST, MatchAllDocsQuery()),
                                    (Occur.MUST_NOT, TermQuery("h0"))]),
     }
-    _assert_same_as_search(s, s.search_many(batch, k=7).toPandas(),
-                           batch, 7)
-    # batch whose only term is absent + a MatchAll: still k docs
-    got2 = s.search_many({"m": MatchAllDocsQuery(),
-                          "z": TermQuery("zzz_absent")}, k=4).toPandas()
-    assert len(got2[got2.qid == "m"]) == 4
-    assert len(got2[got2.qid == "z"]) == 0
+    for _ in _gates(s):
+        _assert_same_as_search(s, s.search_many(batch, k=7).toPandas(),
+                               batch, 7)
+        # batch whose only term is absent + a MatchAll: still k docs
+        got2 = s.search_many({"m": MatchAllDocsQuery(),
+                              "z": TermQuery("zzz_absent")}, k=4).toPandas()
+        assert len(got2[got2.qid == "m"]) == 4
+        assert len(got2[got2.qid == "z"]) == 0
