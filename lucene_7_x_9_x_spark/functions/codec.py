@@ -180,16 +180,26 @@ def gather_ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return bases + np.arange(total, dtype=np.int64)
 
 
+# below this many blocks, decode_blocks loops decode_block: the
+# vectorized pass costs ~0.2 ms a call at any size, one block ~30 us
+# (128-value doc blocks, FOR and PFOR; the two cross at 12-16 blocks)
+MULTI_BLOCK_MIN = 16
+
+
 def decode_blocks(bufs, ns) -> np.ndarray:
     """Many blocks at once: every block of `bufs` (block j holding ns[j]
     values) decoded and concatenated in block order — equal to
     np.concatenate([decode_block(b, n) for b, n in zip(bufs, ns)]), with
-    one vectorized pass per encoding instead of a Python call per block.
+    one vectorized pass per encoding instead of a Python call per block
+    from MULTI_BLOCK_MIN blocks up (fewer go through that loop).
     FOR/PFOR values are read as big-endian 64-bit windows at their bit
     offsets (width <= 32, so one window holds any value); the varint
     parts (all-equal values, varbyte payloads, PFOR exceptions) decode in
     ONE vint_decode over their gathered bytes."""
     ns = np.asarray(ns, dtype=np.int64)
+    if 0 < len(ns) < MULTI_BLOCK_MIN:
+        return np.concatenate([decode_block(b, n) for b, n in
+                               zip(bufs, ns.tolist())]).astype(np.uint64)
     first = np.cumsum(ns) - ns
     out = np.zeros(int(ns.sum()), dtype=np.uint64)
     if len(out) == 0:
@@ -244,8 +254,12 @@ def decode_blocks(bufs, ns) -> np.ndarray:
 def decode_doc_blocks(bufs, ns, bases) -> np.ndarray:
     """Docids of many doc blocks (block j's first delta relative to
     bases[j], the previous block's max_doc or -1), concatenated: the
-    multi-block decode_doc_block, its prefix sums restarted per block."""
+    multi-block decode_doc_block, its prefix sums restarted per block
+    (below MULTI_BLOCK_MIN blocks, decode_doc_block per block)."""
     ns = np.asarray(ns, dtype=np.int64)
+    if 0 < len(ns) < MULTI_BLOCK_MIN:
+        return np.concatenate([decode_doc_block(b, n, base) for b, n, base
+                               in zip(bufs, ns.tolist(), list(bases))])
     cs = np.cumsum(decode_blocks(bufs, ns).astype(np.int64))
     before = np.concatenate(([0], cs))[np.cumsum(ns) - ns]
     return cs + np.repeat(np.asarray(bases, dtype=np.int64) - before, ns)

@@ -23,8 +23,8 @@ evaluation while only competitive blocks are decoded (SURVEY.md §7.4.3).
 Within surviving intervals all docs are scored vectorized — more scoring
 work per block than Lucene's per-doc pivoting, amortized by numpy.
 
-On small segments, term-only plans take the dense batch accumulator
-instead (dense_topk, the BooleanScorer strategy,
+Term-only plans take the dense batch accumulator instead (dense_topk, the
+BooleanScorer strategy,
 solr-8.4.0/.../search/BooleanScorer.java:33,36): all of a kernel call's
 term-only qids are scored together, with no pruning. Their terms decode in
 one multi-block codec pass (SparkSegmentReader.prefetch), each distinct
@@ -33,8 +33,10 @@ sums every doc's unit scores in plan-unit order, so each float32 score is
 blockmax_topk's bit for bit. Per-call Python then no longer grows with
 the number of (qid, segment) pairs. The caller
 (searcher.Searcher._topk_frame) picks the strategy per segment by max_doc
-against Searcher.DENSE_MAX_DOC, in the manner of BooleanWeight's
-cost-based choice (BooleanWeight.java:193-276).
+against Searcher.DENSE_MAX_DOC (DENSE_CELLS, the accumulator's cell
+budget), where BooleanWeight chooses by cost (BooleanWeight.java:193-276):
+the dense path was the faster one at every segment size measured, so only
+its memory bounds it.
 """
 
 from __future__ import annotations
@@ -113,7 +115,9 @@ class SparkSegmentReader:
 
     def decode_blocks(self, term, block_idx: np.ndarray):
         """Decode selected blocks -> (docids, freqs) concatenated in docid
-        order. block_idx must be sorted ascending."""
+        order. block_idx must be sorted ascending. The blocks not decoded
+        yet go through one codec.decode_doc_blocks / decode_blocks call
+        and are cached per block."""
         r = self._rows.get(term)
         if r is None:
             return None
@@ -123,24 +127,27 @@ class SparkSegmentReader:
             take = _gather_ranges((np.cumsum(ns) - ns)[block_idx],
                                   ns[block_idx])
             return full[0][take], full[1][take]
-        ds, fs = [], []
-        for j in block_idx:
-            j = int(j)
-            key = (term, j)
-            got = self._block_cache.get(key)
-            if got is None:
-                base = int(r.block_max_docs[j - 1]) if j > 0 else -1
-                n = int(r.block_ns[j])
-                d = codec.decode_doc_block(bytes(r.block_docs[j]), n, base)
-                f = codec.decode_freq_block(bytes(r.block_freqs[j]), n)
-                got = (d, f)
-                self._block_cache[key] = got
-                self.blocks_decoded += 1
-            ds.append(got[0])
-            fs.append(got[1])
-        if not ds:
+        block_idx = np.asarray(block_idx).tolist()
+        if not block_idx:
             return (np.zeros(0, np.int64), np.zeros(0, np.int64))
-        return np.concatenate(ds), np.concatenate(fs)
+        todo = [j for j in block_idx if (term, j) not in self._block_cache]
+        if todo:
+            tn = [int(r.block_ns[j]) for j in todo]
+            mx = r.block_max_docs
+            docs = codec.decode_doc_blocks(
+                [r.block_docs[j] for j in todo], tn,
+                [int(mx[j - 1]) if j > 0 else -1 for j in todo])
+            freqs = codec.decode_blocks([r.block_freqs[j] for j in todo],
+                                        tn).astype(np.int64) + 1
+            self.blocks_decoded += len(todo)
+            a = 0
+            for j, n in zip(todo, tn):
+                self._block_cache[(term, j)] = (docs[a:a + n],
+                                                freqs[a:a + n])
+                a += n
+        got = [self._block_cache[(term, j)] for j in block_idx]
+        return (np.concatenate([d for d, _ in got]),
+                np.concatenate([f for _, f in got]))
 
     def prefetch(self, terms) -> None:
         """Decode every block of every not-yet-decoded term in `terms` in
@@ -757,12 +764,14 @@ def blockmax_topk(reader: SparkSegmentReader, stats: SegmentStats,
 
 
 # --------------------------------------------------------------------------
-# dense batch accumulator (small segments)
+# dense batch accumulator (segments of at most DENSE_CELLS docs)
 # --------------------------------------------------------------------------
 
 # accumulator cells (qids x max_doc) per dense_topk pass: bounds its
 # scratch to ~33 bytes a cell (float64 sums, two int64 counts, the bool
-# and float32 score matrices and the partition copy), ~35 MB
+# and float32 score matrices and the partition copy), ~35 MB. Also the
+# biggest segment the searcher sends here (Searcher.DENSE_MAX_DOC), so
+# one qid's row always fits a pass
 DENSE_CELLS = 1 << 20
 
 
@@ -777,7 +786,7 @@ def dense_topk(reader: SparkSegmentReader, stats: SegmentStats,
                deleted: np.ndarray | None = None) -> list:
     """Per-segment top-k of MANY term-only block-max plans at once — the
     BooleanScorer strategy (a dense per-window score table,
-    solr-8.4.0/.../search/BooleanScorer.java:33,36) over a whole small
+    solr-8.4.0/.../search/BooleanScorer.java:33,36) over a whole
     segment and a whole batch, where blockmax_topk pays per-call Python
     per (qid, segment). Every term of the batch decodes in one
     multi-block pass (reader.prefetch); each distinct (term, boost) is

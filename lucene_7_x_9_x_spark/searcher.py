@@ -58,8 +58,9 @@ from .functions import bm25
 from .functions.editdist import osa_distance as _osa_distance
 from .index import IndexSnapshot, parse_segnorms
 from .operators import executor as ex
-from .operators.search import (SparkSegmentReader, blockmax_topk,
-                               classify_blockmax, dense_topk, is_term_plan)
+from .operators.search import (DENSE_CELLS, SparkSegmentReader,
+                               blockmax_topk, classify_blockmax, dense_topk,
+                               is_term_plan)
 from .plans import query as Q
 from .plans.query import (RewriteContext, key_field, key_term, term_key,
                           rewrite as rewrite_query)
@@ -197,13 +198,12 @@ class Searcher:
 
     # segment size (max_doc) up to which term-only block-max plans run on
     # the dense batch accumulator (operators/search.dense_topk) instead of
-    # blockmax_topk. scripts/kernel_profile.py found no crossover up to
-    # 75k-doc segments (perfbench's hot_batch inputs, 4 vCPU): dense led
-    # by 1.2-1.9x at batch 1, 2.5-3.6x at batch 16 and 2.7-6x at batch
-    # 128. The bound sits just above the largest size measured (the 10M
-    # scale point's ~75k-doc segments); bigger segments keep block-max
-    # pruning. Tests set it to 0 on the instance to force block-max.
-    DENSE_MAX_DOC = 100_000
+    # blockmax_topk: the accumulator's cell budget, so one qid's row
+    # always fits a chunk and its scratch stays within DENSE_CELLS cells.
+    # Memory, not speed, sets it: scripts/kernel_profile.py found dense
+    # ahead at every size it measured (1,250- to 600k-doc segments, batch
+    # 1 to 128). Tests set it to 0 on the instance to force block-max.
+    DENSE_MAX_DOC = DENSE_CELLS
 
     def _deleted_by_segment(self, max_driver_rows: int | None = None
                             ) -> dict | None:

@@ -16,6 +16,9 @@ batch and per query, and how many (qid, segment) kernel calls took each
 top-k strategy: the dense batch accumulator (`dense_topk`, term-only plans
 on segments of at most `Searcher.DENSE_MAX_DOC` docs) or `blockmax_topk`.
 
+--segments S builds the index in S hash segments instead of perfbench's
+8, so segment size (docs / S) can grow apart from the corpus.
+
 --batch N sends the first N qids of each batch (default 128, all of
 hot_batch's) through one `_topk_frame` call: the per-query cost at a
 smaller batch, the input of the DENSE_MAX_DOC crossover. --dense-max-doc M
@@ -27,10 +30,11 @@ N functions by internal time. --rows PATH writes every batch's rows
 (batch, qid, segment, docid, score) to a parquet file, so two checkouts
 can be compared row for row on the same batches.
 
-Usage: python scripts/kernel_profile.py [--docs 10000] [--batch 128]
-       [--dense-max-doc M] [--profile N] [--rows PATH] [--work DIR]
-       (--work keeps the index: a later run with the same --work and
-       --docs reopens it instead of building again)
+Usage: python scripts/kernel_profile.py [--docs 10000] [--segments 8]
+       [--batch 128] [--dense-max-doc M] [--profile N] [--rows PATH]
+       [--work DIR]
+       (--work keeps the index: a later run with the same --work,
+       --docs and --segments reopens it instead of building again)
 """
 
 from __future__ import annotations
@@ -55,17 +59,18 @@ REPS = 3      # timed runs of each batch
 SEED = 1      # perfbench --seed
 
 
-def open_index(spark, work: str, n_docs: int):
+def open_index(spark, work: str, n_docs: int, segments: int):
     import workloads as wl
     from lucene_7_x_9_x_spark import index as index_mod
     from lucene_7_x_9_x_spark.sources.corpus import synth_corpus
 
-    root = os.path.join(work, f"idx_{n_docs}")
+    root = os.path.join(work, f"idx_{n_docs}" if segments == wl.SEGMENTS
+                        else f"idx_{n_docs}_s{segments}")
     if os.path.exists(os.path.join(root, index_mod.MANIFEST)):
         return index_mod.IndexSnapshot(spark, root), root
     idx = index_mod.build_index(spark, synth_corpus(spark, n_docs), root,
                                 id_cols=wl.ID_COLS, text_col=wl.TEXT_COL,
-                                num_segments=wl.SEGMENTS)
+                                num_segments=segments)
     return idx, root
 
 
@@ -109,6 +114,7 @@ def count_strategies() -> dict:
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=10_000)
+    ap.add_argument("--segments", type=int, default=None, metavar="S")
     ap.add_argument("--batch", type=int, default=128, metavar="N")
     ap.add_argument("--dense-max-doc", type=int, default=None, metavar="M")
     ap.add_argument("--profile", type=int, default=0, metavar="N")
@@ -123,7 +129,8 @@ def main():
     work = a.work or tempfile.mkdtemp(prefix="kernel_profile_")
     spark = local_session(min(2, os.cpu_count() or 1), heap="2g", work=work)
     try:
-        idx, root = open_index(spark, work, a.docs)
+        idx, root = open_index(spark, work, a.docs,
+                               a.segments or wl.SEGMENTS)
         s = Searcher(idx)
         if a.dense_max_doc is not None:
             s.DENSE_MAX_DOC = a.dense_max_doc
@@ -142,7 +149,8 @@ def main():
                     rows.append(got.assign(batch=i))
         nq = len(qs[0])
         w50, c50 = statistics.median(wall), statistics.median(cpu)
-        print(f"docs {a.docs}  batch {nq}  batches {len(qs)} x {REPS}  "
+        print(f"docs {a.docs}  segments {a.segments or wl.SEGMENTS}  "
+              f"batch {nq}  batches {len(qs)} x {REPS}  "
               f"wall p50 {w50 * 1000:.0f} ms  cpu p50 {c50 * 1000:.0f} ms "
               f"per batch  ({w50 * 1000 / nq:.1f} / {c50 * 1000 / nq:.1f} "
               f"ms per query)  DENSE_MAX_DOC {s.DENSE_MAX_DOC}  "

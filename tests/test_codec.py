@@ -140,10 +140,14 @@ def _random_block(r, tag: str) -> tuple[bytes, np.ndarray]:
     return codec.encode_block(v), v
 
 
-def test_multi_block_decode_matches_decode_block():
+@pytest.mark.parametrize("min_blocks", [0, codec.MULTI_BLOCK_MIN])
+def test_multi_block_decode_matches_decode_block(monkeypatch, min_blocks):
     """decode_blocks over a random mix of every encoding equals
     decode_block per block, concatenated: FOR widths 1-32, PFOR with 1-3
-    exceptions, all-equal, varbyte and empty blocks."""
+    exceptions, all-equal, varbyte and empty blocks. min_blocks=0 sends
+    every call through the vectorized pass; the default sends the short
+    ones through the per-block loop."""
+    monkeypatch.setattr(codec, "MULTI_BLOCK_MIN", min_blocks)
     r = np.random.RandomState(7)
     tags = ["for", "pfor", "equal", "varbyte", "empty"]
     seen_widths, seen_exc = set(), set()
@@ -196,3 +200,40 @@ def test_multi_block_doc_decode_matches_decode_postings():
     fbufs = [b for row in rows for b in row.block_freqs]
     assert np.array_equal(codec.decode_blocks(fbufs, ns).astype(np.int64) + 1,
                           np.concatenate([f for _, f in want]))
+
+
+@pytest.mark.parametrize("min_blocks", [0, codec.MULTI_BLOCK_MIN])
+def test_reader_decode_blocks_matches_decode_postings(monkeypatch,
+                                                      min_blocks):
+    """SparkSegmentReader.decode_blocks (block-max's selected blocks, one
+    codec call over the ones not cached yet) equals the selected blocks'
+    slices of build.decode_postings: cold, partly cached, and after the
+    term was decoded whole; through the vectorized pass and the short-
+    input loop alike."""
+    monkeypatch.setattr(codec, "MULTI_BLOCK_MIN", min_blocks)
+    import pandas as pd
+
+    from lucene_7_x_9_x_spark.operators.build import (decode_postings,
+                                                      encode_postings)
+    from lucene_7_x_9_x_spark.operators.search import SparkSegmentReader
+    r = np.random.RandomState(13)
+    rows = []
+    for i, n in enumerate((1, 129, 1000, 2500)):
+        d = np.sort(r.choice(200_000, n, replace=False)).astype(np.int64)
+        rows.append({"field": None, "term": f"t{i}", **encode_postings(
+            d, r.randint(1, 40, n).astype(np.int64), r.randint(0, 256, n))})
+    frame = pd.DataFrame(rows)
+    reader = SparkSegmentReader(frame, np.zeros(200_000, np.uint8), 200_000)
+    for row in frame.itertuples():
+        d, f = decode_postings(row)
+        ns = np.asarray(row.block_ns, dtype=np.int64)
+        starts = np.cumsum(ns) - ns
+        for rep in range(5):
+            if rep == 4:  # the whole-term path slices the full decode
+                reader.prefetch([row.term])
+            sel = np.flatnonzero(r.rand(len(ns)) < 0.5)
+            take = codec.gather_ranges(starts[sel], ns[sel])
+            got_d, got_f = reader.decode_blocks(row.term, sel)
+            assert np.array_equal(got_d, d[take])
+            assert np.array_equal(got_f, f[take])
+    assert reader.decode_blocks("absent", np.array([0])) is None

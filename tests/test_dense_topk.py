@@ -144,6 +144,70 @@ def test_dense_unit_order_and_empty_cases():
                dense_topk(reader, stats, plans, 0, n_docs))
 
 
+def test_dense_sum_follows_plan_unit_order():
+    """Each doc's float64 sum adds its unit scores in plan-unit order, in
+    dense_topk, blockmax_topk and exhaustive evaluation alike. A power-of-
+    two boost scales every float32 BM25 score exactly, so boosts 1, 2^b
+    and 2^c (b near 0, c near -52: the last addend lands at the float64
+    rounding bit of the first two's sum) give, for some doc, unit scores
+    whose sum rounds to a different float32 value in plan order than in
+    reverse order. The search for (b, c) runs over the segment's real
+    scores."""
+    rng = np.random.RandomState(5)
+    n_docs = 1500
+    postings, norms, stats = _segment(_random_corpus(rng, n_docs))
+    reader = SparkSegmentReader(postings, norms, n_docs)
+    terms = HOT[:3]
+    alone = [ex.evaluate(reader, stats, TermQuery(t)) for t in terms]
+    common = alone[0].docids
+    for m in alone[1:]:
+        common = np.intersect1d(common, m.docids)
+    s = [m.scores[np.searchsorted(m.docids, common)].astype(np.float64)
+         for m in alone]
+
+    def f32_sum(parts):
+        acc = np.zeros(len(common))
+        for x in parts:
+            acc = acc + x
+        return acc.astype(np.float32)
+
+    found = None
+    for b in range(-4, 4):
+        for c in range(-60, -44):
+            parts = [s[0], s[1] * 2.0 ** b, s[2] * 2.0 ** c]
+            diff = np.flatnonzero(f32_sum(parts) != f32_sum(parts[::-1]))
+            if len(diff):
+                found = (b, c, int(common[diff[0]]))
+                break
+        if found:
+            break
+    assert found is not None
+    b, c, doc = found
+    boost = dict(zip(terms, [1.0, 2.0 ** b, 2.0 ** c]))
+    q = rewrite(BooleanQuery([(Occur.SHOULD, TermQuery(t, boost=boost[t]))
+                              for t in terms]))
+    plan = classify_blockmax(q)
+    order = [terms.index(u["key"]) for u in plan["units"]]
+    i = int(np.searchsorted(common, doc))
+    parts = [s[j][i:i + 1] * boost[terms[j]] for j in order]
+    want = f32_sum(parts)[0]
+    assert want != f32_sum(parts[::-1])[0]
+
+    def score_of(got):
+        d, sc = got
+        assert doc in d
+        return sc[np.flatnonzero(d == doc)[0]]
+
+    k = n_docs
+    dense = dense_topk(reader, stats, [plan], k, n_docs)[0]
+    bm = blockmax_topk(SparkSegmentReader(postings, norms, n_docs), stats,
+                       plan, k)[:2]
+    full, _ = _exhaustive(reader, stats, q, k, None)
+    for got in (dense, bm, full):
+        assert score_of(got).view(np.int32) == want.view(np.int32)
+    assert _same(dense, bm) and _same(dense, full)
+
+
 def test_dense_only_takes_term_plans():
     assert is_term_plan(classify_blockmax(rewrite(BooleanQuery(
         [(Occur.MUST, TermQuery("a")), (Occur.FILTER, TermQuery("b")),
