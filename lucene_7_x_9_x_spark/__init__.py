@@ -3,7 +3,7 @@ capabilities of the reference (LuXugang/Lucene-7.x-9.x — Lucene internals).
 
 Public surface:
   index.build_index / IndexSnapshot      — IndexWriter / DirectoryReader
-  searcher.Searcher                      — IndexSearcher (block-max top-k)
+  searcher.Searcher                      — IndexSearcher (dense top-k)
   plans.query                            — Query model + rewrites
   oracle.OracleEngine                    — pure-pandas reference semantics
   operators.merge.merge_index            — SegmentMerger / TieredMergePolicy

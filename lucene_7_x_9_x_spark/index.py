@@ -260,7 +260,7 @@ class IndexSnapshot:
         """Memoized pyarrow dataset per directory tuple — dataset discovery
         (file listing + schema unification) costs tens of ms per call and
         sits on the hot driver-side seek paths (term_stats_lookup /
-        impacts_lookup); a snapshot is point-in-time, so reuse is safe."""
+        postings_rows); a snapshot is point-in-time, so reuse is safe."""
         import pyarrow.dataset as pads
         if not hasattr(self, "_pads_cache"):
             self._pads_cache = {}
@@ -334,11 +334,11 @@ class IndexSnapshot:
         the CompetitiveImpactAccumulator analogue (functions/codec.py;
         solr-8.4.0/.../codecs/CompetitiveImpactAccumulator.java). Every
         stored pair was observed on a REAL document, and within one
-        (term, segment) all pairs belong to distinct docs — which is what
-        makes the k-th best achieved impact score a SAFE driver-side
-        floor for top-k pruning (see Searcher._seed_theta). Pure pyarrow
-        column read (term + impact arrays only; the postings files are
-        term-sorted so row groups prune) — no Spark job.
+        (term, segment) all pairs belong to distinct docs. No query path
+        reads impacts (the dense top-k kernel does not prune); perfbench's
+        traced runs still time this read. Pure pyarrow column read (term +
+        impact arrays only; the postings files are term-sorted so row
+        groups prune) — no Spark job.
 
         Returns {key: (freqs int64[], norms int64[])} concatenated across
         segments and blocks."""
@@ -369,8 +369,8 @@ class IndexSnapshot:
 
     def postings_rows(self, keys, columns: list):
         """Driver-side read of the postings rows of the given term keys
-        (pyarrow Table of `columns`) — the same pushed-down key filter as
-        impacts_lookup, so term-sorted row groups prune; no Spark job."""
+        (pyarrow Table of `columns`) — a pushed-down key filter, so
+        term-sorted row groups prune; no Spark job."""
         dset = self._batches_dataset("postings")
         expr = _key_expr(keys)
         if expr is None:

@@ -42,8 +42,8 @@ class SegmentStats:
 
     similarity: "bm25" (default), "classic", "boolean", "lmdirichlet",
     "lmjelinekmercer", "dfr_inl2", "ib_ll", or "axiomatic_f2exp"
-    (functions/similarities.py). Block-max pruning is BM25-specific; other
-    similarities run the exhaustive path."""
+    (functions/similarities.py). The dense top-k kernel is BM25-specific;
+    other similarities run the exhaustive path."""
 
     def __init__(self, doc_count: int, sum_total_term_freq: int,
                  doc_freqs: dict, total_term_freqs: dict,

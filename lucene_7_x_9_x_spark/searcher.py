@@ -4,7 +4,7 @@ Plan shape (SURVEY.md §3.2 Spark translation). search and search_many
 share ONE top-k path, Searcher._topk_frame; a single query is a batch of
 one qid:
   driver:   rewrite -> term stats (driver-side seek of the terms table),
-            block-max plans, one impacts read, per-qid theta seeds
+            block-max plans
   executors: per-segment kernel looping over the batch's qids -> each
             segment's top-k, in one of three shapes:
               broadcast norms  groupBy(segment) over the pruned postings,
@@ -27,14 +27,13 @@ one qid:
                                pruned postings rows, ids point-read from
                                the docmap, the result a DataFrame over a
                                pyarrow Table — no Spark job at all
-            in every shape, kernel_body picks each qid's top-k strategy
-            per segment: term-only block-max plans on a segment of at
-            most DENSE_MAX_DOC docs run together on the dense batch
-            accumulator (operators/search.dense_topk: one multi-block
-            decode, one (qid x doc) bincount); other block-max plans run
-            blockmax_topk per qid; the rest (k=None, searchAfter,
-            non-BM25 similarities, shapes classify_blockmax rejects) run
-            the exhaustive evaluate + top_k
+            in every shape, kernel_body runs every qid with a block-max
+            plan together on the dense batch accumulator
+            (operators/search.dense_topk: one multi-block decode, one
+            (qid x doc) bincount, doc windows on segments too big for
+            one table); the rest (k=None, searchAfter, non-BM25
+            similarities, shapes classify_blockmax rejects) run the
+            exhaustive evaluate + top_k
   driver:   search: ORDER BY score DESC, segment, docid LIMIT k (Catalyst
             TakeOrderedAndProject) == TopDocs.merge tie semantics
             (solr-8.4.0/.../search/TopDocs.java:75,106);
@@ -58,9 +57,8 @@ from .functions import bm25
 from .functions.editdist import osa_distance as _osa_distance
 from .index import IndexSnapshot, parse_segnorms
 from .operators import executor as ex
-from .operators.search import (DENSE_CELLS, SparkSegmentReader,
-                               blockmax_topk, classify_blockmax, dense_topk,
-                               is_term_plan)
+from .operators.search import (SparkSegmentReader, classify_blockmax,
+                               dense_topk)
 from .plans import query as Q
 from .plans.query import (RewriteContext, key_field, key_term, term_key,
                           rewrite as rewrite_query)
@@ -125,8 +123,9 @@ class Searcher:
                  similarity: str = "bm25", cache_index: bool = False):
         """similarity: "bm25" (default) or "classic" (TF-IDF; the
         IndexSearcher.setSimilarity plug point, SURVEY §2.7). The stored
-        norm byte serves both models (same computeNorm). Block-max pruning
-        applies to BM25 only; classic queries run exhaustive + top-k.
+        norm byte serves both models (same computeNorm). The dense top-k
+        kernel applies to BM25 only; classic queries run exhaustive +
+        top-k.
 
         cache_index=True is the hot-serving mode (the page-cache-resident
         index of a dedicated Lucene search node): postings are persisted
@@ -167,11 +166,10 @@ class Searcher:
         if cache_index:
             # exactly one cached partition per core: fewer tasks per query
             # than one-per-segment (measured p50 0.93 s vs 1.30 s at 64
-            # segments/32 cores), and multiple segments per task let the
-            # task-local theta floor actually share across segments. The
-            # sortWithinPartitions gives the in-memory columnar batches
-            # tight (field, term) min/max stats, so the cached scan prunes
-            # batches on the term filter like parquet row-groups do
+            # segments/32 cores). The sortWithinPartitions gives the
+            # in-memory columnar batches tight (field, term) min/max stats,
+            # so the cached scan prunes batches on the term filter like
+            # parquet row-groups do
             n_part = index.spark.sparkContext.defaultParallelism
             self._post_src = (self._post_src
                               .repartition(n_part, "segment")
@@ -184,8 +182,6 @@ class Searcher:
                                    term_doc_freqs=self._term_doc_freqs,
                                    doc_count=int(index.stats["doc_count"]))
         self._stats_cache: dict = {}  # term -> (doc_freq, ttf) memo
-        self._theta_seed_cache: dict = {}  # seed-theta memo per query shape
-        self._impacts_cache: dict = {}  # term key -> impact pairs memo
         self._deletes_cache: object = False  # False = not loaded yet
         self._deletes_bc: object = False  # broadcast handle (False = unset)
         self._big_deletes = False  # tombstones beyond the driver cap
@@ -195,15 +191,6 @@ class Searcher:
     # driver and run the distributed fallback (tests shrink this to
     # exercise the big-deletes path without 5M rows)
     TOMBSTONE_DRIVER_CAP = 5_000_000
-
-    # segment size (max_doc) up to which term-only block-max plans run on
-    # the dense batch accumulator (operators/search.dense_topk) instead of
-    # blockmax_topk: the accumulator's cell budget, so one qid's row
-    # always fits a chunk and its scratch stays within DENSE_CELLS cells.
-    # Memory, not speed, sets it: scripts/kernel_profile.py found dense
-    # ahead at every size it measured (1,250- to 600k-doc segments, batch
-    # 1 to 128). Tests set it to 0 on the instance to force block-max.
-    DENSE_MAX_DOC = DENSE_CELLS
 
     def _deleted_by_segment(self, max_driver_rows: int | None = None
                             ) -> dict | None:
@@ -518,101 +505,6 @@ class Searcher:
             doc_freqs=dfs, total_term_freqs=ttfs, k1=self.k1, b=self.b,
             similarity=self.similarity, field_stats=self._field_stats)
 
-    # ---------------- global theta seeding (MaxScoreAccumulator completion)
-    def _seed_theta(self, plan: dict, stats: ex.SegmentStats,
-                    k: int) -> float:
-        """Driver-side GLOBAL competitive-threshold floor, completing the
-        MaxScoreAccumulator role across tasks
-        (L/search/IndexSearcher.java:399-402, MaxScoreAccumulator.java —
-        Lucene shares the floor between slices through an atomic; Spark
-        tasks can't share memory, so the floor is computed ONCE at the
-        driver from index-time impacts and pickled into every task's
-        theta dict).
-
-        Safety: each stored impact pair (freq, norm) of a term was
-        observed on a real document, and all pairs of one (term, segment)
-        belong to DISTINCT docs — so the k-th largest achieved
-        single-term score over a term's impact pairs is attained by k
-        distinct matching docs, hence a true lower bound on the global
-        k-th best score (any matching doc's total is a float64 sum of
-        non-negative clause scores >= its single-clause score, and
-        rounding a float64 >= an exactly-representable float32 to nearest
-        cannot go below it). Eligible shapes: pure disjunctions
-        (msm <= 1, no FILTER/MUST_NOT) seed from every term-bearing unit,
-        a single-MUST query (msm == 0) seeds from that unit; synonym
-        units seed from members (summed freq >= member freq, monotone),
-        dismax from members (max >= member). Deleted docs void the
-        achievedness argument, so any tombstones disable seeding."""
-        pairs = self._theta_pairs(plan, stats)
-        if not pairs:
-            return 0.0
-        # sort key via repr: term keys mix bare strings and (field, term)
-        # tuples, which don't compare to each other directly
-        memo_key = (tuple(sorted(((kk, float(w)) for kk, w in pairs),
-                                 key=repr)), k)
-        got = self._theta_seed_cache.get(memo_key)
-        if got is not None:
-            return got
-        imp = self._impacts_for([kk for kk, _ in pairs])
-        best = 0.0
-        for kk, w in pairs:
-            got_i = imp.get(kk)
-            if got_i is None or len(got_i[0]) < k:
-                continue  # fewer than k achieved scores: no floor
-            cache = stats.cache_for(key_field(kk))
-            sc = bm25.score_term(got_i[0], got_i[1], w, cache)
-            kth = float(np.partition(sc, -k)[-k])
-            if kth > best:
-                best = kth
-        self._theta_seed_cache[memo_key] = best
-        return best
-
-    def _theta_pairs(self, plan: dict, stats: ex.SegmentStats) -> list:
-        """Eligible (key, weight) achieved-score sources for a plan, or []
-        when the shape disqualifies seeding (see _seed_theta safety)."""
-        if plan["must_not"] or any(u.get("filter") for u in plan["units"]):
-            return []
-        units = plan["units"]
-        musts = [u for u in units if u.get("is_must")]
-        if musts:
-            if len(musts) != 1 or plan.get("msm", 0) > 0:
-                return []
-            units = musts
-        elif plan.get("msm", 0) > 1:
-            return []
-        F32 = np.float32
-        pairs = []  # (key, weight) eligible achieved-score sources
-        for u in units:
-            if u["kind"] == "term":
-                pairs.append((u["key"],
-                              F32(F32(u["boost"]) * stats.idf(u["key"]))))
-            elif u["kind"] == "synonym":
-                from .functions import bm25 as _bm25
-                df = max((stats.doc_freqs.get(kk, 0) for kk in u["keys"]),
-                         default=0)
-                if df > 0:
-                    w = F32(F32(u["boost"]) * _bm25.idf(
-                        df, stats.doc_count_for(u.get("field"))))
-                    pairs.extend((kk, w) for kk in u["keys"])
-            elif u["kind"] == "dismax":
-                pairs.extend(
-                    (m["key"], F32(F32(m["boost"]) * stats.idf(m["key"])))
-                    for m in u["members"])
-            # phrase units contribute no pairs (a term-achieving doc need
-            # not match the phrase) but don't void the other units' floors
-        return [(kk, w) for kk, w in pairs if float(w) > 0]
-
-    def _impacts_for(self, keys) -> dict:
-        """Key-level memoized impacts read. A batch (_topk_frame) prefetches
-        the UNION of its queries' keys through this in ONE pyarrow read —
-        the round-4 regression was 32 per-query reads before one job."""
-        missing = [kk for kk in keys if kk not in self._impacts_cache]
-        if missing:
-            found = self.index.impacts_lookup(missing)
-            for kk in missing:
-                self._impacts_cache[kk] = found.get(kk)
-        return {kk: self._impacts_cache[kk] for kk in keys}
-
     # ---------------- kernels
     def _segnorms_broadcast(self):
         """The per-(segment, field) norm blobs parsed once at the driver
@@ -632,7 +524,7 @@ class Searcher:
         never."""
         return ["term", "field", "segment", "doc_freq", "total_term_freq",
                 "block_max_docs", "block_ns", "block_docs", "block_freqs",
-                "imp_freqs", "imp_norms", *extra_cols]
+                *extra_cols]
 
     def _posting_frame(self, keys, extra_cols=()) -> DataFrame:
         """Pruned postings scan for a set of term keys: pushed-down key
@@ -677,18 +569,20 @@ class Searcher:
         """Per-segment top-k (every match when k is None) of MANY rewritten
         queries {qid: query} in ONE Spark job: DataFrame(qid, segment,
         docid, score). The one kernel path behind search (a batch of one)
-        and search_many; stats, block-max plans, the impacts prefetch and
-        theta seeding happen once for the batch, `mode` and `after` apply
-        to all of it. local=True runs the same kernel_body in this process
-        instead (the driver path, see _search_local) and returns the rows
-        as a pandas frame."""
+        and search_many; stats and block-max plans happen once for the
+        batch, `mode` ("auto" or "complete") and `after` apply to all of
+        it. local=True runs the same kernel_body in this process instead
+        (the driver path, see _search_local) and returns the rows as a
+        pandas frame."""
+        if mode not in ("auto", "complete"):
+            raise ValueError(f"unknown mode {mode!r}")
         schema = "qid string, segment int, docid long, score float"
         all_terms: set = set()
         for q in queries.values():
             all_terms |= Q.scoring_terms(q) | _filter_terms(q)
         stats = self._global_stats(all_terms)
-        blockmax = (mode in ("auto", "blockmax") and stats.is_bm25
-                    and k is not None and after is None)
+        blockmax = (mode == "auto" and stats.is_bm25 and k is not None
+                    and after is None)
         plans = {qid: classify_blockmax(q) if blockmax else None
                  for qid, q in queries.items()}
         matchall = [qid for qid, q in queries.items()
@@ -706,36 +600,6 @@ class Searcher:
         dels = self._deleted_by_segment()
         big_deletes = self._big_deletes
         del_bc = None if local else self._deleted_broadcast()
-        # task-local theta floor per qid: this dict is pickled into each
-        # task's closure copy, so segments processed by the SAME task seed
-        # each other's competitive threshold (the MaxScoreAccumulator
-        # slice-sharing analogue, IndexSearcher.java:399-402) with zero
-        # cross-task coordination; exact because any subset's k-th score
-        # lower-bounds the global k-th and skips stay strict.
-        # When the query shape allows it, the dict starts PRE-SEEDED with
-        # the driver-computed global floor from index-time impacts
-        # (_seed_theta) — every task, including each one's FIRST segment,
-        # then prunes against a near-final threshold
-        task_theta: dict = {}
-        if not dels and not big_deletes:
-            # prefetch the UNION of the batch's eligible keys in ONE
-            # pyarrow read: per-query reads cost 32 driver round-trips and
-            # caused the round-4 batch_32_hot 1.9x regression
-            batch_keys = {kk for plan in plans.values() if plan is not None
-                          for kk, _ in self._theta_pairs(plan, stats)}
-            if batch_keys:
-                self._impacts_for(batch_keys)
-            for qid, plan in plans.items():
-                if plan is not None:
-                    t0 = self._seed_theta(plan, stats, k)
-                    if t0 > 0.0:
-                        task_theta[qid] = t0
-
-        # term-only plans go to the dense batch accumulator on segments
-        # of at most DENSE_MAX_DOC docs; read here, on the driver, so the
-        # closure carries the instance's value into every task
-        dense_max = self.DENSE_MAX_DOC
-        dense_ok = {qid for qid, plan in plans.items() if is_term_plan(plan)}
 
         def kernel_body(seg: int, post_pdf: pd.DataFrame, norms, max_doc,
                         fnorms, dele2=None, qids=tuple(queries)
@@ -744,24 +608,14 @@ class Searcher:
                                         field_norms=fnorms)
             dele = dele2 if dele2 is not None else (
                 del_bc.value.get(seg) if del_bc is not None else None)
-            dense_q = ([qid for qid in qids if qid in dense_ok]
-                       if max_doc <= dense_max else [])
+            dense_q = [qid for qid in qids if plans[qid] is not None]
             dense = dict(zip(dense_q, dense_topk(
                 reader, stats, [plans[qid] for qid in dense_q], k, max_doc,
                 deleted=dele))) if dense_q else {}
             ds, ss = [], []
             for qid in qids:
-                plan = plans[qid]
-                if plan is not None:
-                    if qid in dense:
-                        d, s = dense[qid]
-                    else:
-                        d, s, _ = blockmax_topk(reader, stats, plan, k,
-                                                deleted=dele,
-                                                theta0=task_theta.get(qid))
-                    if len(d) == k:
-                        task_theta[qid] = max(task_theta.get(qid, 0.0),
-                                              float(s[-1]))
+                if qid in dense:
+                    d, s = dense[qid]
                 else:
                     m = ex.evaluate(reader, stats, queries[qid])
                     d, s = m.docids, m.scores
@@ -895,6 +749,11 @@ class Searcher:
 
         after=(score, segment, docid) pages past a previous result row
         (searchAfter, IndexSearcher.java:388-422).
+
+        mode="auto" runs the dense top-k kernel where the query shape
+        allows it (operators/search.classify_blockmax); "complete" always
+        evaluates exhaustively. Both return the same rows; any other mode
+        raises ValueError.
 
         Behind the _driver_path gate the query runs eagerly in this
         process and the DataFrame holds its rows; otherwise it is the lazy
@@ -1258,7 +1117,7 @@ class Searcher:
         broken by id asc (TopDocs.rrf's docid tie-break).
 
         Scale shape: each leg is an independent top-n job (the lexical
-        leg through the block-max kernel, the vector leg through
+        leg through the dense top-k kernel, the vector leg through
         whatever ANN index ``knn_kwargs`` routes to); the fusion itself
         joins two ≤n_each-row frames — driver-negligible at any corpus
         size. Returns DataFrame(rank, <id0>, lex_rank, vec_rank,
@@ -2038,7 +1897,7 @@ class Searcher:
         DataFrame(qid, rank, segment, docid, score).
 
         queries: {qid: Query}. Each query is rewritten and classified
-        independently; block-max is used where eligible."""
+        independently; the dense top-k kernel runs where eligible."""
         res = self._topk_frame(
             {qid: self.rewrite(q) for qid, q in queries.items()}, k)
         w = Window.partitionBy("qid").orderBy(F.desc("score"), "segment",

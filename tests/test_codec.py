@@ -205,11 +205,12 @@ def test_multi_block_doc_decode_matches_decode_postings():
 @pytest.mark.parametrize("min_blocks", [0, codec.MULTI_BLOCK_MIN])
 def test_reader_decode_blocks_matches_decode_postings(monkeypatch,
                                                       min_blocks):
-    """SparkSegmentReader.decode_blocks (block-max's selected blocks, one
-    codec call over the ones not cached yet) equals the selected blocks'
-    slices of build.decode_postings: cold, partly cached, and after the
-    term was decoded whole; through the vectorized pass and the short-
-    input loop alike."""
+    """SparkSegmentReader decodes the blocks of many terms in one codec
+    call (prefetch): each term's postings() equal build.decode_postings,
+    whether the term decoded alone, beside others (each term's first block
+    restarts the docid deltas) or in a prefetch that held terms decoded
+    already; an absent term gives None; through the vectorized pass and
+    the short-input loop alike."""
     monkeypatch.setattr(codec, "MULTI_BLOCK_MIN", min_blocks)
     import pandas as pd
 
@@ -223,17 +224,15 @@ def test_reader_decode_blocks_matches_decode_postings(monkeypatch,
         rows.append({"field": None, "term": f"t{i}", **encode_postings(
             d, r.randint(1, 40, n).astype(np.int64), r.randint(0, 256, n))})
     frame = pd.DataFrame(rows)
-    reader = SparkSegmentReader(frame, np.zeros(200_000, np.uint8), 200_000)
-    for row in frame.itertuples():
-        d, f = decode_postings(row)
-        ns = np.asarray(row.block_ns, dtype=np.int64)
-        starts = np.cumsum(ns) - ns
-        for rep in range(5):
-            if rep == 4:  # the whole-term path slices the full decode
-                reader.prefetch([row.term])
-            sel = np.flatnonzero(r.rand(len(ns)) < 0.5)
-            take = codec.gather_ranges(starts[sel], ns[sel])
-            got_d, got_f = reader.decode_blocks(row.term, sel)
-            assert np.array_equal(got_d, d[take])
-            assert np.array_equal(got_f, f[take])
-    assert reader.decode_blocks("absent", np.array([0])) is None
+    for prefetches in ([["t0"], ["t1", "t2", "absent"], ["t0", "t3", "t2"]],
+                       [["t3", "t1", "t0", "t2"]], []):
+        reader = SparkSegmentReader(frame, np.zeros(200_000, np.uint8),
+                                    200_000)
+        for terms in prefetches:
+            reader.prefetch(terms)
+        for row in frame.itertuples():
+            d, f = decode_postings(row)
+            got_d, got_f = reader.postings(row.term)
+            assert np.array_equal(got_d, d)
+            assert np.array_equal(got_f, f)
+        assert reader.postings("absent") is None

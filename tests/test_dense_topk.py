@@ -1,7 +1,7 @@
-"""The dense batch accumulator (operators/search.dense_topk) must return, for
-every term-only plan of a batch, exactly blockmax_topk's and exhaustive
+"""The dense batch accumulator (operators/search.dense_topk), the one top-k
+kernel, must return for every block-max plan of a batch exactly exhaustive
 evaluation's per-segment top-k: the same docids in the same order and
-byte-equal float32 scores."""
+byte-equal float32 scores, over one doc window or several."""
 
 import numpy as np
 import pytest
@@ -11,12 +11,12 @@ from lucene_7_x_9_x_spark.operators import executor as ex
 from lucene_7_x_9_x_spark.operators import search as search_mod
 from lucene_7_x_9_x_spark.operators.build import invert_segment
 from lucene_7_x_9_x_spark.operators.search import (SparkSegmentReader,
-                                                   blockmax_topk,
                                                    classify_blockmax,
-                                                   dense_topk, is_term_plan)
-from lucene_7_x_9_x_spark.plans.query import (BooleanQuery, Occur,
-                                              PhraseQuery, TermQuery,
-                                              rewrite)
+                                                   dense_topk)
+from lucene_7_x_9_x_spark.plans.query import (BooleanQuery, BoostQuery,
+                                              DisjunctionMaxQuery, Occur,
+                                              PhraseQuery, SynonymQuery,
+                                              TermQuery, rewrite)
 from tests.test_search import CFG, _random_corpus
 
 HOT = [f"h{i}" for i in range(12)]
@@ -36,19 +36,44 @@ def _segment(pdf):
     return postings, norms, stats
 
 
-def _random_term_query(rng):
-    """A Boolean of 1-6 term clauses: any occur mix, boosts, msm 0-3,
-    repeated terms and sometimes a term absent from the index."""
+def _pick(rng):
+    r = rng.rand()
+    return (HOT[rng.randint(len(HOT))] if r < 0.6
+            else TAIL[rng.randint(len(TAIL))] if r < 0.93
+            else "zzz_absent")
+
+
+def _random_unit(rng):
+    """A MUST/SHOULD clause's query: mostly a term, else a synonym, a
+    dismax of terms or an exact phrase (hot terms, so some phrases match),
+    sometimes boosted."""
+    kind = rng.choice(4, p=[0.55, 0.15, 0.15, 0.15])
+    boost = float(rng.choice([1.0, 2.0, 0.5]))
+    if kind == 0:
+        return TermQuery(_pick(rng), boost=boost)
+    if kind == 1:
+        q = SynonymQuery([_pick(rng) for _ in range(rng.randint(2, 4))])
+    elif kind == 2:
+        q = DisjunctionMaxQuery(
+            [TermQuery(_pick(rng)) for _ in range(rng.randint(2, 4))],
+            tie_breaker=float(rng.choice([0.0, 0.3])))
+    else:
+        q = PhraseQuery([HOT[rng.randint(4)] for _ in range(2)]
+                        if rng.rand() < 0.9 else ["h0", "zzz_absent"])
+    return q if boost == 1.0 else BoostQuery(q, boost)
+
+
+def _random_plan_query(rng):
+    """A Boolean of 1-6 clauses: term, synonym, dismax and exact-phrase
+    units under any occur mix (FILTER/MUST_NOT take terms), boosts, msm
+    0-3, repeated clauses and sometimes a term absent from the index."""
     clauses = []
     for _ in range(rng.randint(1, 7)):
-        r = rng.rand()
-        t = (HOT[rng.randint(len(HOT))] if r < 0.6
-             else TAIL[rng.randint(len(TAIL))] if r < 0.93
-             else "zzz_absent")
         occur = OCCURS[rng.choice(4, p=[0.3, 0.45, 0.12, 0.13])]
-        clauses.append((occur, TermQuery(
-            t, boost=float(rng.choice([1.0, 2.0, 0.5])))))
-    if rng.rand() < 0.25:  # the same term twice
+        clauses.append((occur, _random_unit(rng)
+                        if occur in (Occur.MUST, Occur.SHOULD)
+                        else TermQuery(_pick(rng))))
+    if rng.rand() < 0.25:  # the same clause twice
         clauses.append(clauses[0])
     return BooleanQuery(clauses, minimum_should_match=int(rng.randint(0, 4)))
 
@@ -67,15 +92,18 @@ def _same(a, b):
             and np.array_equal(a[1].view(np.int32), b[1].view(np.int32)))
 
 
-@pytest.mark.parametrize("cells", [search_mod.DENSE_CELLS, 3000])
-def test_dense_equals_blockmax_equals_exhaustive(monkeypatch, cells):
-    """Random term plans over multi-block segments, the whole batch in one
-    dense_topk call (cells=3000 splits it into 2-qid chunks): msm 0-3,
-    FILTER/MUST_NOT, repeated and absent terms, tombstones, k above the
-    hit count and exact float32 ties at the k-th score."""
+@pytest.mark.parametrize("cells", [search_mod.DENSE_CELLS, 3000, 500])
+def test_dense_equals_exhaustive(monkeypatch, cells):
+    """Random plans over multi-block segments, the whole batch in one
+    dense_topk call (cells=3000 splits it into 2-qid chunks, cells=500 runs
+    each qid over 3 doc windows): term, synonym, dismax and exact-phrase
+    units, msm 0-3, FILTER/MUST_NOT, repeated and absent terms,
+    tombstones, k above the hit count and exact float32 ties at the k-th
+    score."""
     monkeypatch.setattr(search_mod, "DENSE_CELLS", cells)
     rng = np.random.RandomState(99)
-    counts = {"ties": 0, "short": 0, "absent_must": 0, "multi_block": 0}
+    counts = {"ties": 0, "short": 0, "absent_must": 0, "multi_block": 0,
+              "synonym": 0, "dismax": 0, "phrase": 0}
     for trial in range(4):
         n_docs = 1200 + 100 * trial
         postings, norms, stats = _segment(_random_corpus(rng, n_docs))
@@ -83,8 +111,8 @@ def test_dense_equals_blockmax_equals_exhaustive(monkeypatch, cells):
             (postings.block_ns.map(len) > 1).sum())
         queries = []
         while len(queries) < 40:
-            q = rewrite(_random_term_query(rng))
-            if is_term_plan(classify_blockmax(q)):
+            q = rewrite(_random_plan_query(rng))
+            if classify_blockmax(q) is not None:
                 queries.append(q)
         plans = [classify_blockmax(q) for q in queries]
         for deleted in (None, np.unique(rng.randint(0, n_docs, 60))):
@@ -94,26 +122,27 @@ def test_dense_equals_blockmax_equals_exhaustive(monkeypatch, cells):
                     plans, k, n_docs, deleted=deleted)
                 reader = SparkSegmentReader(postings, norms, n_docs)
                 for q, plan, got in zip(queries, plans, dense):
-                    bm = blockmax_topk(reader, stats, plan, k,
-                                       deleted=deleted)[:2]
                     want, (all_d, all_s) = _exhaustive(reader, stats, q, k,
                                                        deleted)
-                    assert _same(got, bm), (trial, q, k)
                     assert _same(got, want), (trial, q, k)
                     if k < len(all_s) and np.sort(all_s)[::-1][k - 1] == \
                             np.sort(all_s)[::-1][k]:
                         counts["ties"] += 1
                     counts["short"] += len(all_d) < k
                     counts["absent_must"] += any(
-                        u["key"] == "zzz_absent" and u["is_must"]
+                        u["is_must"] and u.get("key") == "zzz_absent"
                         for u in plan["units"])
+                    for u in plan["units"]:
+                        if u["kind"] != "term" and len(all_d):
+                            counts[u["kind"]] += 1
     assert all(v > 0 for v in counts.values()), counts
 
 
 def test_dense_unit_order_and_empty_cases():
     """The float64 sum follows plan-unit order even when a term repeats;
-    an absent MUST or FILTER term empties the result; k <= 0 gives no
-    rows; MUST_NOT and tombstones drop docs."""
+    an absent MUST or FILTER term, or a MUST phrase with an absent member,
+    empties the result; k <= 0 gives no rows; MUST_NOT and tombstones drop
+    docs."""
     rng = np.random.RandomState(3)
     n_docs = 900
     pdf = _random_corpus(rng, n_docs)
@@ -125,13 +154,19 @@ def test_dense_unit_order_and_empty_cases():
           BooleanQuery([(M, TermQuery("zzz_absent")), (S, TermQuery("h0"))]),
           BooleanQuery([(F, TermQuery("zzz_absent")), (S, TermQuery("h0"))]),
           BooleanQuery([(S, TermQuery("h0")), (N, TermQuery("h1"))]),
-          BooleanQuery([(S, TermQuery("t0001")), (F, TermQuery("h0"))])]
+          BooleanQuery([(S, TermQuery("t0001")), (F, TermQuery("h0"))]),
+          BooleanQuery([(M, PhraseQuery(["h0", "zzz_absent"])),
+                        (S, SynonymQuery(["h0", "h1"]))]),
+          BooleanQuery([(S, SynonymQuery(["h0", "h1"])),
+                        (S, PhraseQuery(["h1", "h0"])),
+                        (N, TermQuery("h2"))])]
     plans = [classify_blockmax(rewrite(q)) for q in qs]
     got = dense_topk(reader, stats, plans, 50, n_docs)
     for q, plan, g in zip(qs, plans, got):
         want, _ = _exhaustive(reader, stats, rewrite(q), 50, None)
         assert _same(g, want), q
     assert len(got[1][0]) == 0 and len(got[2][0]) == 0
+    assert len(got[5][0]) == 0 and len(got[6][0]) == 50
     # FILTER with only SHOULD units: SHOULD is optional, filter-only docs
     # match with score 0 (the reference's required + optional split)
     assert (got[4][1] == 0).any() and (got[4][1] > 0).any()
@@ -146,7 +181,7 @@ def test_dense_unit_order_and_empty_cases():
 
 def test_dense_sum_follows_plan_unit_order():
     """Each doc's float64 sum adds its unit scores in plan-unit order, in
-    dense_topk, blockmax_topk and exhaustive evaluation alike. A power-of-
+    dense_topk and exhaustive evaluation alike. A power-of-
     two boost scales every float32 BM25 score exactly, so boosts 1, 2^b
     and 2^c (b near 0, c near -52: the last addend lands at the float64
     rounding bit of the first two's sum) give, for some doc, unit scores
@@ -200,20 +235,31 @@ def test_dense_sum_follows_plan_unit_order():
 
     k = n_docs
     dense = dense_topk(reader, stats, [plan], k, n_docs)[0]
-    bm = blockmax_topk(SparkSegmentReader(postings, norms, n_docs), stats,
-                       plan, k)[:2]
     full, _ = _exhaustive(reader, stats, q, k, None)
-    for got in (dense, bm, full):
+    for got in (dense, full):
         assert score_of(got).view(np.int32) == want.view(np.int32)
-    assert _same(dense, bm) and _same(dense, full)
+    assert _same(dense, full)
 
 
-def test_dense_only_takes_term_plans():
-    assert is_term_plan(classify_blockmax(rewrite(BooleanQuery(
-        [(Occur.MUST, TermQuery("a")), (Occur.FILTER, TermQuery("b")),
-         (Occur.MUST_NOT, TermQuery("c"))]))))
-    assert not is_term_plan(classify_blockmax(rewrite(BooleanQuery(
-        [(Occur.SHOULD, TermQuery("a")),
-         (Occur.SHOULD, PhraseQuery(["a", "b"]))]))))
-    assert not is_term_plan(None)
-
+def test_bincount_accumulation_is_add_at_bit_for_bit():
+    """np.bincount, which _dense_chunk accumulates with, adds in element
+    order like np.add.at: the same float64 sums and counts, bit for
+    bit."""
+    rng = np.random.default_rng(9)
+    for n in (0, 1, 7, 500, 5000):
+        inv = rng.integers(0, max(n // 3, 1), n)
+        # float32 scores widened to float64, with magnitudes that make the
+        # summation order visible in the last bits
+        vals = (rng.random(n, dtype=np.float32)
+                * np.float32(10.0) ** rng.integers(-3, 4, n)
+                ).astype(np.float32).astype(np.float64)
+        is_must = rng.random(n) < 0.4
+        m = int(inv.max()) + 1 if n else 0
+        want = np.zeros(m, np.float64)
+        np.add.at(want, inv, vals)
+        got = np.bincount(inv, weights=vals, minlength=m)
+        assert got.tobytes() == want.tobytes()
+        for mask in (is_must, ~is_must):
+            cnt = np.zeros(m, np.int64)
+            np.add.at(cnt, inv, mask.astype(np.int64))
+            assert np.array_equal(np.bincount(inv[mask], minlength=m), cnt)

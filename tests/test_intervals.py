@@ -6,16 +6,130 @@ matching through the Spark engine."""
 
 import itertools
 import os
+from bisect import bisect_right
 
 import numpy as np
 import pytest
 
-from lucene_7_x_9_x_spark.operators.intervals import eval_source, minimize
+from lucene_7_x_9_x_spark.plans import query as Q
 from lucene_7_x_9_x_spark.plans.query import (IntervalOr, IntervalOrdered,
                                               IntervalQuery, IntervalTerm,
                                               IntervalUnordered)
 
 SF = "/root/testdata/sf0.001"
+
+
+# ---- per-doc reference walk: the specification that
+# operators/intervals.interval_match vectorizes across candidate docs
+
+def minimize(iv: list) -> list:
+    """Keep only minimal intervals: drop any (s, e, c) containing another
+    interval (s', e') with s' >= s and e' <= e (duplicates collapse to
+    one; among same-(s, e) survivors the max-covered one is kept, i.e.
+    fewest gaps).  Sort (start asc, end desc, covered asc); scanning from
+    the right, an interval survives iff its end is strictly below every
+    later interval's end."""
+    iv = sorted(iv, key=lambda t: (t[0], -t[1], t[2]))
+    out: list = []
+    best = None
+    for t in reversed(iv):
+        if best is None or t[1] < best:
+            out.append(t)
+            best = t[1]
+    out.reverse()
+    return out
+
+
+def _gaps_filter(iv: list, max_gaps) -> list:
+    if max_gaps is None:
+        return iv
+    return [t for t in iv
+            if max(0, t[1] - t[0] + 1 - t[2]) <= max_gaps]
+
+
+def eval_source(src, pos: dict) -> list:
+    """Minimal intervals of `src` for one doc; pos maps term ->
+    ascending position array (absent term -> missing key)."""
+    if isinstance(src, Q.IntervalTerm):
+        p = pos.get(src.term)
+        if p is None:
+            return []
+        return [(int(x), int(x), 1) for x in p]
+    if isinstance(src, Q.IntervalOr):
+        iv: list = []
+        for s in src.sources:
+            iv.extend(eval_source(s, pos))
+        return minimize(iv)
+    if isinstance(src, Q.IntervalOrdered):
+        child = [eval_source(s, pos) for s in src.sources]
+        if any(not c for c in child):
+            return []
+        starts = [[t[0] for t in c] for c in child]
+        cands = []
+        for a in child[0]:
+            # greedy earliest chain: within a minimal child list starts
+            # AND ends both strictly increase, so the first interval with
+            # start > prev.end also has the least end
+            # (OrderedIntervalsSource.nextInterval)
+            s0, e_prev, cov = a
+            ok = True
+            for cl, st in zip(child[1:], starts[1:]):
+                j = bisect_right(st, e_prev)
+                if j == len(cl):
+                    ok = False
+                    break
+                e_prev = cl[j][1]
+                cov += cl[j][2]
+            if not ok:
+                break  # later first-child intervals start even later
+            cands.append((s0, e_prev, cov))
+        return _gaps_filter(minimize(cands), src.max_gaps)
+    if isinstance(src, Q.IntervalUnordered):
+        child = [eval_source(s, pos) for s in src.sources]
+        if any(not c for c in child):
+            return []
+        ptr = [0] * len(child)
+        cands = []
+        while True:
+            fronts = [c[p] for c, p in zip(child, ptr)]
+            s = min(f[0] for f in fronts)
+            e = max(f[1] for f in fronts)
+            cands.append((s, e, sum(f[2] for f in fronts)))
+            # advance the child whose front starts earliest (ties: lowest
+            # index) — the plane-sweep enumeration of candidate windows
+            j = min(range(len(fronts)), key=lambda i: (fronts[i][0], i))
+            ptr[j] += 1
+            if ptr[j] == len(child[j]):
+                break
+        return _gaps_filter(minimize(cands), src.max_gaps)
+    if isinstance(src, Q.IntervalFilter):
+        sv = eval_source(src.source, pos)
+        if not sv:
+            return []
+        rv = eval_source(src.reference, pos)
+
+        def contains(a, b):   # a contains b
+            return a[0] <= b[0] and b[1] <= a[1]
+
+        def overlaps(a, b):
+            return not (b[1] < a[0] or b[0] > a[1])
+
+        kind = src.kind
+        if kind == "containing":
+            keep = lambda s: any(contains(s, r) for r in rv)
+        elif kind == "not_containing":
+            keep = lambda s: not any(contains(s, r) for r in rv)
+        elif kind == "contained_by":
+            keep = lambda s: any(contains(r, s) for r in rv)
+        elif kind == "not_contained_by":
+            keep = lambda s: not any(contains(r, s) for r in rv)
+        elif kind == "overlapping":
+            keep = lambda s: any(overlaps(s, r) for r in rv)
+        else:  # non_overlapping
+            keep = lambda s: not any(overlaps(s, r) for r in rv)
+        # a filtered subset of a minimal list stays minimal
+        return [s for s in sv if keep(s)]
+    raise TypeError(f"unknown interval source {type(src).__name__}")
 
 
 def brute(src, pos):

@@ -1,4 +1,4 @@
-"""M3 exit criteria (SURVEY.md §7.2): pruned == exhaustive == oracle —
+"""M3 exit criteria (SURVEY.md §7.2): top-k kernel == exhaustive == oracle —
 the CheckHits.checkTopScores equivalence property
 (solr-8.4.0/lucene/test-framework/src/java/org/apache/lucene/search/CheckHits.java:577-601)
 replicated over seeded random corpora, plus Spark end-to-end identity."""
@@ -12,8 +12,8 @@ from lucene_7_x_9_x_spark.functions.analysis import AnalyzerConfig
 from lucene_7_x_9_x_spark.operators import executor as ex
 from lucene_7_x_9_x_spark.operators.build import invert_segment
 from lucene_7_x_9_x_spark.operators.search import (SparkSegmentReader,
-                                                   blockmax_topk,
-                                                   classify_blockmax)
+                                                   classify_blockmax,
+                                                   dense_topk)
 from lucene_7_x_9_x_spark.plans.query import (BooleanQuery,
                                               DisjunctionMaxQuery, Occur,
                                               PhraseQuery, SynonymQuery,
@@ -109,9 +109,10 @@ def test_blockmax_equals_exhaustive_equals_oracle_random():
                 assert np.array_equal(esc, osc), (trial, qi, q)
                 plan = classify_blockmax(q)
                 if plan is not None:
-                    bd, bs, _ = blockmax_topk(reader, ostats, plan, k)
-                    assert np.array_equal(bd, od), ("bm", trial, qi, q, k)
-                    assert np.array_equal(bs, osc), ("bm", trial, qi, q, k)
+                    [(bd, bs)] = dense_topk(reader, ostats, [plan], k,
+                                            len(pdf))
+                    assert np.array_equal(bd, od), ("dense", trial, qi, q, k)
+                    assert np.array_equal(bs, osc), ("dense", trial, qi, q, k)
 
 
 def test_blockmax_composite_shapes_classified():
@@ -130,10 +131,10 @@ def test_blockmax_composite_shapes_classified():
          (Occur.SHOULD, SynonymQuery(["c", "d"]))]))) is not None
 
 
-def test_blockmax_synonym_prunes():
-    # skewed frequencies so scores don't saturate at the idf ceiling (hot
-    # uniform terms give every interval the same bound and NOTHING can be
-    # pruned — that is data physics, not a kernel property)
+def test_dense_top1_equals_exhaustive():
+    """Top-1 of a synonym over skewed frequencies (scores that do not
+    saturate at the idf ceiling) and of a single hot term over 4000 docs:
+    dense_topk returns exhaustive evaluation's doc and float32 score."""
     rng = np.random.RandomState(9)
     rows = []
     for i in range(4000):
@@ -141,30 +142,17 @@ def test_blockmax_synonym_prunes():
         f1 = 20 if i % 512 == 9 else (2 if i % 7 == 0 else 0)
         pad = rng.randint(5, 40)
         rows.append(" ".join(["x"] * pad + ["s0"] * f0 + ["s1"] * f1))
-    pdf = pd.DataFrame({"id": [f"d{i:06d}" for i in range(4000)],
-                        "content": rows})
-    reader, oreader, ostats = _build_kernel_side(pdf)
-    q = rewrite(SynonymQuery(["s0", "s1"]))
-    plan = classify_blockmax(q)
-    d, s, frac = blockmax_topk(reader, ostats, plan, 1)
-    assert frac < 0.7, f"expected synonym pruning, decoded {frac:.0%}"
-    ed, esc = ex.top_k(ex.evaluate(reader, ostats, q), 1)
-    assert np.array_equal(d, ed) and np.array_equal(s, esc)
-
-
-def test_blockmax_actually_prunes():
-    rng = np.random.RandomState(77)
-    pdf = _random_corpus(rng, n_docs=4000)
-    reader, oreader, ostats = _build_kernel_side(pdf)
-    # single-term top-1: the ImpactsDISI case — blocks whose impact bound is
-    # below the running best must be skipped
-    q = TermQuery("h0")
-    plan = classify_blockmax(rewrite(q))
-    d, s, frac = blockmax_topk(reader, ostats, plan, 1)
-    assert frac < 0.85, f"expected pruning, decoded {frac:.0%} of blocks"
-    # and identical to exhaustive
-    ed, esc = ex.top_k(ex.evaluate(reader, ostats, rewrite(q)), 1)
-    assert np.array_equal(d, ed) and np.array_equal(s, esc)
+    skewed = pd.DataFrame({"id": [f"d{i:06d}" for i in range(4000)],
+                           "content": rows})
+    for pdf, q in ((skewed, SynonymQuery(["s0", "s1"])),
+                   (_random_corpus(np.random.RandomState(77), n_docs=4000),
+                    TermQuery("h0"))):
+        reader, _, ostats = _build_kernel_side(pdf)
+        q = rewrite(q)
+        [(d, s)] = dense_topk(reader, ostats, [classify_blockmax(q)], 1,
+                              len(pdf))
+        ed, esc = ex.top_k(ex.evaluate(reader, ostats, q), 1)
+        assert np.array_equal(d, ed) and np.array_equal(s, esc)
 
 
 @pytest.fixture(scope="module")
@@ -213,9 +201,54 @@ def test_spark_search_matches_oracle(spark, spark_index):
             assert got.id.tolist() == want_ids, (q, k)
             assert np.array_equal(got.score.to_numpy(np.float32),
                                   want.score.to_numpy(np.float32)), (q, k)
-            # blockmax and complete agree end-to-end
+            # the dense kernel and complete agree end-to-end
             got_c = searcher.search(q, k, mode="complete").toPandas()
             assert got.id.tolist() == got_c.id.tolist()
+
+
+def test_search_rejects_unknown_mode(spark, spark_index):
+    """mode is "auto" or "complete": anything else raises, on the driver
+    path and on the Spark path alike, instead of running exhaustively."""
+    from lucene_7_x_9_x_spark.searcher import Searcher
+    _, idx = spark_index
+    driver, on_spark = Searcher(idx), Searcher(idx)
+    on_spark._local = False
+    assert driver._driver_path() and not on_spark._driver_path()
+    for s in (driver, on_spark):
+        for mode in ("blockmax", "exhaustive"):
+            with pytest.raises(ValueError, match="unknown mode"):
+                s.search(TermQuery("h0"), 5, mode=mode)
+
+
+def test_search_equals_complete_on_input_segments(spark, tmp_path_factory):
+    """On an input-mode index of 8 segments (sf0.001), search's top-10
+    (the dense kernel) is search(mode="complete")'s (exhaustive
+    evaluation): the same docs in the same order, the same scores, for
+    term, disjunction, dismax and single-MUST queries."""
+    import os
+
+    from lucene_7_x_9_x_spark.index import build_index
+    from lucene_7_x_9_x_spark.searcher import Searcher
+    from tests.test_intervals import SF
+    out = str(tmp_path_factory.mktemp("input_idx"))
+    docs = (spark.read.parquet(os.path.join(SF, "documents.parquet"))
+            .repartitionByRange(8, "doc_id"))
+    s = Searcher(build_index(spark, docs, out, id_cols=["doc_id"],
+                             text_col="text", segment_by="input"))
+    S = Occur.SHOULD
+    for q in [TermQuery("filter"),
+              BooleanQuery([(S, TermQuery("filter")), (S, TermQuery("join")),
+                            (S, TermQuery("window"))]),
+              BooleanQuery([(S, TermQuery("group")),
+                            (S, TermQuery("query"))]),
+              DisjunctionMaxQuery([TermQuery("group"), TermQuery("query")],
+                                  0.3),
+              BooleanQuery([(Occur.MUST, TermQuery("filter"))])]:
+        got = s.search(q, 10).toPandas()
+        want = s.search(q, 10, mode="complete").toPandas()
+        assert len(got) == 10, q
+        assert got.doc_id.tolist() == want.doc_id.tolist(), q
+        assert got.score.tolist() == want.score.tolist(), q
 
 
 def test_spark_phrase_and_count(spark, spark_index):

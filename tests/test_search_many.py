@@ -1,18 +1,18 @@
 """search_many (batched multi-query execution) must return exactly what
 per-query search returns, for every query in the batch; and the driver
 path (`_topk_frame(..., local=True)`) must return what each Spark kernel
-shape (hot, cold broadcast-norms, cogroup) returns for the same batch.
-Each check runs twice: with the dense-accumulator gate in force (every
-segment of these small indexes is under DENSE_MAX_DOC, so term-only plans
-take dense_topk) and with DENSE_MAX_DOC forced to 0 (blockmax_topk)."""
+shape (hot, cold broadcast-norms, cogroup) returns for the same batch,
+with every plan-bearing qid on the dense top-k kernel (dense_topk), over
+one doc window or several."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from lucene_7_x_9_x_spark.plans.query import (BooleanQuery,
+                                              DisjunctionMaxQuery,
                                               MatchAllDocsQuery, Occur,
-                                              PhraseQuery, TermQuery)
+                                              PhraseQuery, SynonymQuery,
+                                              TermQuery)
 from tests.test_search import _random_corpus
 
 RARE = [f"zq{i}" for i in range(12)]  # one doc each: each misses 2 segments
@@ -32,18 +32,6 @@ def many_index(spark, tmp_path_factory):
                        id_cols=["id"], text_col="content", num_segments=3)
 
 
-def _gates(s):
-    """Run the body with s's dense gate in force, then with DENSE_MAX_DOC
-    forced to 0 on the instance; yields the gate value."""
-    from lucene_7_x_9_x_spark.searcher import Searcher
-    try:
-        for gate in (Searcher.DENSE_MAX_DOC, 0):
-            s.DENSE_MAX_DOC = gate
-            yield gate
-    finally:
-        s.__dict__.pop("DENSE_MAX_DOC", None)
-
-
 def _assert_same_as_search(s, got, batch, k):
     for qid, q in batch.items():
         want = s.search(q, k, with_ids=False).toPandas()
@@ -56,8 +44,9 @@ def _assert_same_as_search(s, got, batch, k):
 
 def _kernel_batches(idx) -> dict:
     """{name: batch} for the driver-path checks. "mixed": or3, and2, an
-    exact phrase, a sloppy phrase (not block-max eligible), a MatchAll qid
-    and a qid whose terms miss segments. "sparse": postings in two of the
+    exact phrase, a synonym beside a MUST dismax, a sloppy phrase (not
+    block-max eligible), a MatchAll qid and a qid whose terms miss
+    segments. "sparse": postings in two of the
     three segments, so its MatchAll qid also runs the norms-only kernel.
     "none": every qid gets zero hits in every segment it reaches."""
     seg = idx.postings_rows(set(RARE), ["term", "segment"]).to_pydict()
@@ -71,6 +60,9 @@ def _kernel_batches(idx) -> dict:
             "or3": BooleanQuery([(S, T("h1")), (S, T("h2")), (S, T("h4"))]),
             "and2": BooleanQuery([(M, T("h0")), (M, T("h1"))]),
             "phrase": PhraseQuery(["h0", "h1"]),
+            "syn_dismax": BooleanQuery([
+                (S, SynonymQuery(["h5", "h6"])),
+                (M, DisjunctionMaxQuery([T("h2"), T("h7")], 0.2))]),
             "sloppy": PhraseQuery(["h0", "h2"], slop=3),
             "matchall": BooleanQuery([(S, T("h3")),
                                       (S, MatchAllDocsQuery())]),
@@ -89,19 +81,26 @@ def _rows(pdf, label):
             .reset_index(drop=True))
 
 
-def _assert_driver_path_matches(s, idx, monkeypatch):
+def _assert_driver_path_matches(s, idx, monkeypatch, cells=None):
     """s's driver path and s's Spark path give the same (qid, segment,
     docid) rows, byte-equal float32 scores and frame dtypes: top-k, every
     match (k=None) and, on the mixed batch, a searchAfter cursor. The
-    driver path calls dense_topk only when s's gate lets it."""
+    driver path calls dense_topk for every top-k batch, with every unit
+    kind the batches hold, and for no other call. cells sets DENSE_CELLS in this process
+    alone, so the driver path runs doc windows where the Spark workers'
+    kernels run one."""
     from lucene_7_x_9_x_spark import searcher as searcher_mod
-    dense_calls, dense = [], searcher_mod.dense_topk
+    from lucene_7_x_9_x_spark.operators import search as search_mod
+    dense_calls, kinds, dense = [], set(), searcher_mod.dense_topk
 
-    def counted(*a, **kw):
+    def counted(reader, stats, plans, *a, **kw):
         dense_calls.append(1)
-        return dense(*a, **kw)
+        kinds.update(u["kind"] for p in plans for u in p["units"])
+        return dense(reader, stats, plans, *a, **kw)
 
     monkeypatch.setattr(searcher_mod, "dense_topk", counted)
+    if cells is not None:
+        monkeypatch.setattr(search_mod, "DENSE_CELLS", cells)
     for name, batch in _kernel_batches(idx).items():
         rq = {qid: s.rewrite(q) for qid, q in batch.items()}
         calls = [dict(k=7), dict(k=None, mode="complete")]
@@ -114,7 +113,10 @@ def _assert_driver_path_matches(s, idx, monkeypatch):
                                           int(r.docid))))
         for kw in calls:
             label = (name, kw)
+            del dense_calls[:]
             local = _rows(s._topk_frame(rq, local=True, **kw), label)
+            assert bool(dense_calls) == (kw.get("k") is not None
+                                         and "after" not in kw), label
             got = _rows(s._topk_frame(rq, **kw).toPandas(), label)
             assert local[["qid", "segment", "docid"]].values.tolist() == \
                 got[["qid", "segment", "docid"]].values.tolist(), label
@@ -126,7 +128,7 @@ def _assert_driver_path_matches(s, idx, monkeypatch):
                 assert len(got) > 0, label
             else:
                 assert set(got.qid) == set(batch), label
-    assert bool(dense_calls) == (s.DENSE_MAX_DOC > 0)
+    assert kinds == {"term", "phrase", "synonym", "dismax"}
     monkeypatch.undo()
 
 
@@ -147,14 +149,9 @@ def test_search_many_matches_individual(spark, many_index, cache_index,
         "q_absent": TermQuery("nonexistent_zzz"),
     }
     try:
-        rows = []
-        for _ in _gates(s):
-            got = s.search_many(batch, k=5).toPandas()
-            _assert_same_as_search(s, got, batch, 5)
-            _assert_driver_path_matches(s, many_index, monkeypatch)
-            rows.append(got.sort_values(["qid", "rank"])
-                        .reset_index(drop=True))
-        pd.testing.assert_frame_equal(rows[0], rows[1])
+        _assert_same_as_search(s, s.search_many(batch, k=5).toPandas(),
+                               batch, 5)
+        _assert_driver_path_matches(s, many_index, monkeypatch)
     finally:
         s._post_src.unpersist()
         s._terms_src.unpersist()
@@ -177,18 +174,18 @@ def test_cogroup_kernel_matches_broadcast(spark, many_index, monkeypatch):
     small = Searcher(many_index)
     big = Searcher(many_index)
     big._small_norms = False
-    for gate in _gates(big):
-        small.DENSE_MAX_DOC = gate
-        for qid, q in batch.items():
-            a = small.search(q, 6, with_ids=False).toPandas()
-            b = big.search(q, 6, with_ids=False).toPandas()
-            assert a[["segment", "docid"]].values.tolist() == \
-                b[["segment", "docid"]].values.tolist(), qid
-            assert np.array_equal(a.score.to_numpy(np.float32),
-                                  b.score.to_numpy(np.float32)), qid
-        _assert_same_as_search(small, big.search_many(batch, k=6)
-                               .toPandas(), batch, 6)
-        _assert_driver_path_matches(big, many_index, monkeypatch)
+    for qid, q in batch.items():
+        a = small.search(q, 6, with_ids=False).toPandas()
+        b = big.search(q, 6, with_ids=False).toPandas()
+        assert a[["segment", "docid"]].values.tolist() == \
+            b[["segment", "docid"]].values.tolist(), qid
+        assert np.array_equal(a.score.to_numpy(np.float32),
+                              b.score.to_numpy(np.float32)), qid
+    _assert_same_as_search(small, big.search_many(batch, k=6).toPandas(),
+                           batch, 6)
+    # ~170-doc segments in 64-doc windows on the driver path
+    assert min(m for _, m, _ in many_index.segnorms_parsed().values()) > 64
+    _assert_driver_path_matches(big, many_index, monkeypatch, cells=64)
 
 
 def test_search_many_all_absent(spark, many_index):
@@ -211,11 +208,10 @@ def test_search_many_with_matchall(spark, many_index):
         "q_boolall": BooleanQuery([(Occur.MUST, MatchAllDocsQuery()),
                                    (Occur.MUST_NOT, TermQuery("h0"))]),
     }
-    for _ in _gates(s):
-        _assert_same_as_search(s, s.search_many(batch, k=7).toPandas(),
-                               batch, 7)
-        # batch whose only term is absent + a MatchAll: still k docs
-        got2 = s.search_many({"m": MatchAllDocsQuery(),
-                              "z": TermQuery("zzz_absent")}, k=4).toPandas()
-        assert len(got2[got2.qid == "m"]) == 4
-        assert len(got2[got2.qid == "z"]) == 0
+    _assert_same_as_search(s, s.search_many(batch, k=7).toPandas(),
+                           batch, 7)
+    # batch whose only term is absent + a MatchAll: still k docs
+    got2 = s.search_many({"m": MatchAllDocsQuery(),
+                          "z": TermQuery("zzz_absent")}, k=4).toPandas()
+    assert len(got2[got2.qid == "m"]) == 4
+    assert len(got2[got2.qid == "z"]) == 0
