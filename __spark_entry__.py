@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship BM25 top-k query end-to-end (index build
-+ block-max search) on sf0.001. ``queries()`` exposes one entry per
++ dense top-k search) on sf0.001. ``queries()`` exposes one entry per
 implemented operator from SURVEY.md §2 plus the training-data pipeline ops;
 ``oracle_sql()`` gives the DuckDB-equivalent SQL for each (same analyzer:
 lowercase ``[a-z0-9_]+`` tokens; same SmallFloat norm quantization, verified
@@ -1324,7 +1324,7 @@ def _q():
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: BM25 top-10 disjunctive query via the block-max engine on
+    """Flagship: BM25 top-10 disjunctive query via the dense top-k kernel on
     sf0.001 (index built on first call, cached under .index_cache)."""
     Q = _q()
     q = Q.BooleanQuery([(Q.Occur.SHOULD, Q.TermQuery("filter")),

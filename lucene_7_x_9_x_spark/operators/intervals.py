@@ -58,9 +58,8 @@ def _filter_required(src, term_docs):
 #
 # The per-doc eval_source walk in tests/test_intervals.py is the
 # specification (and the shape the 300-trial property tests brute-force
-# against); interval_match
-# evaluates the same algebra for every candidate doc AT ONCE on flat
-# numpy arrays (rank, start, end, covered) packed as
+# against); interval_match evaluates the same algebra for every candidate
+# doc AT ONCE on flat numpy arrays (rank, start, end, covered) packed as
 # (doc_rank << 32 | value) keys — the construction that vectorized the
 # unordered span walk (executor._span_near_unordered_freqs). Each node's
 # result keeps the per-doc minimal-list invariant (starts strictly

@@ -581,9 +581,9 @@ class Searcher:
         for q in queries.values():
             all_terms |= Q.scoring_terms(q) | _filter_terms(q)
         stats = self._global_stats(all_terms)
-        blockmax = (mode == "auto" and stats.is_bm25 and k is not None
-                    and after is None)
-        plans = {qid: classify_blockmax(q) if blockmax else None
+        top_scores = (mode == "auto" and stats.is_bm25 and k is not None
+                      and after is None)
+        plans = {qid: classify_blockmax(q) if top_scores else None
                  for qid, q in queries.items()}
         matchall = [qid for qid, q in queries.items()
                     if _contains_matchall(q)]

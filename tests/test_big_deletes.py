@@ -1,7 +1,7 @@
 """Tombstones beyond the driver cap (VERDICT r4 #4 / r4 directive #8):
 queries stay correct through the distributed fallback — deletes ride the
 norms cogroup side (the compaction cogroup shape) instead of a driver
-collect + broadcast, and theta seeding stays disabled."""
+collect + broadcast."""
 
 import numpy as np
 

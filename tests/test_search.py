@@ -52,7 +52,7 @@ def _random_query(rng, hot, tail):
     kind = rng.randint(10)
     pick = lambda n: [hot[rng.randint(len(hot))] if rng.rand() < 0.7
                       else tail[rng.randint(len(tail))] for _ in range(n)]
-    if kind == 6:  # synonym unit (merged-impacts block-max shape)
+    if kind == 6:  # synonym unit
         return SynonymQuery(pick(rng.randint(2, 4)))
     if kind == 7:  # dismax of terms (max-score propagation shape)
         return DisjunctionMaxQuery(

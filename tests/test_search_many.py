@@ -86,9 +86,9 @@ def _assert_driver_path_matches(s, idx, monkeypatch, cells=None):
     docid) rows, byte-equal float32 scores and frame dtypes: top-k, every
     match (k=None) and, on the mixed batch, a searchAfter cursor. The
     driver path calls dense_topk for every top-k batch, with every unit
-    kind the batches hold, and for no other call. cells sets DENSE_CELLS in this process
-    alone, so the driver path runs doc windows where the Spark workers'
-    kernels run one."""
+    kind the batches hold, and for no other call. cells sets DENSE_CELLS
+    in this process alone, so the driver path runs doc windows where the
+    Spark workers' kernels run one."""
     from lucene_7_x_9_x_spark import searcher as searcher_mod
     from lucene_7_x_9_x_spark.operators import search as search_mod
     dense_calls, kinds, dense = [], set(), searcher_mod.dense_topk
