@@ -131,10 +131,18 @@ def test_blockmax_composite_shapes_classified():
          (Occur.SHOULD, SynonymQuery(["c", "d"]))]))) is not None
 
 
-def test_dense_top1_equals_exhaustive():
+def _dense_top1_equals_exhaustive(pdf, q):
+    reader, _, ostats = _build_kernel_side(pdf)
+    q = rewrite(q)
+    [(d, s)] = dense_topk(reader, ostats, [classify_blockmax(q)], 1, len(pdf))
+    ed, esc = ex.top_k(ex.evaluate(reader, ostats, q), 1)
+    assert np.array_equal(d, ed) and np.array_equal(s, esc)
+
+
+def test_blockmax_synonym_prunes():
     """Top-1 of a synonym over skewed frequencies (scores that do not
-    saturate at the idf ceiling) and of a single hot term over 4000 docs:
-    dense_topk returns exhaustive evaluation's doc and float32 score."""
+    saturate at the idf ceiling, the corpus block-max pruning was checked
+    on): dense_topk returns exhaustive evaluation's doc and float32 score."""
     rng = np.random.RandomState(9)
     rows = []
     for i in range(4000):
@@ -142,17 +150,18 @@ def test_dense_top1_equals_exhaustive():
         f1 = 20 if i % 512 == 9 else (2 if i % 7 == 0 else 0)
         pad = rng.randint(5, 40)
         rows.append(" ".join(["x"] * pad + ["s0"] * f0 + ["s1"] * f1))
-    skewed = pd.DataFrame({"id": [f"d{i:06d}" for i in range(4000)],
-                           "content": rows})
-    for pdf, q in ((skewed, SynonymQuery(["s0", "s1"])),
-                   (_random_corpus(np.random.RandomState(77), n_docs=4000),
-                    TermQuery("h0"))):
-        reader, _, ostats = _build_kernel_side(pdf)
-        q = rewrite(q)
-        [(d, s)] = dense_topk(reader, ostats, [classify_blockmax(q)], 1,
-                              len(pdf))
-        ed, esc = ex.top_k(ex.evaluate(reader, ostats, q), 1)
-        assert np.array_equal(d, ed) and np.array_equal(s, esc)
+    pdf = pd.DataFrame({"id": [f"d{i:06d}" for i in range(4000)],
+                        "content": rows})
+    _dense_top1_equals_exhaustive(pdf, SynonymQuery(["s0", "s1"]))
+
+
+def test_blockmax_actually_prunes():
+    """Top-1 of a single hot term over 4000 docs (the ImpactsDISI case
+    block-max pruning was checked on): dense_topk returns exhaustive
+    evaluation's doc and float32 score."""
+    rng = np.random.RandomState(77)
+    _dense_top1_equals_exhaustive(_random_corpus(rng, n_docs=4000),
+                                  TermQuery("h0"))
 
 
 @pytest.fixture(scope="module")
