@@ -12,3 +12,8 @@ Public surface:
 """
 
 __version__ = "0.1.0"
+
+from ._worker import drop_archive_importers
+
+# In a reused pyspark worker, stop re-reading pyspark.zip on every task.
+drop_archive_importers()

@@ -10,13 +10,25 @@ Measures at local[32] on a single materialized synthetic corpus:
 
 Writes BENCH/scale_10m.json; BENCH/BASELINE.md is hand-curated from it.
 
-Usage: python scripts/scale10m.py [n_docs]   (default 10_000_000)
+`--shape N` is the stand-in for hosts that cannot hold the 10M point
+(local[32], 20 GB heap): N docs on local[2] with a 6 GB heap, the same
+generator, queries and 16 MB scan splits, and the corpus written in
+~33k-doc files, two to a split, so input-mode segments keep the 10M
+point's ~67k docs. It writes BENCH/scale_10m_shape.json and does not replace the
+10M point.
+
+Usage: python scripts/scale10m.py [n_docs] [--shape N] [--work DIR]
+  n_docs  default 10_000_000
+  --work  holds the generated corpus (reused when present) and a scratch
+          index, removed at the end; default the system temp dir
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -25,16 +37,28 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+# --shape corpus files: ~7.3 MB of parquet, so two fit one 16 MB scan split
+# (with the 1 MB open cost) and an input-mode segment holds ~67k docs, as
+# the 10M point's ~150 segments do
+FILE_DOCS = 33_334
+
+
 def main():
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
+    ap = argparse.ArgumentParser()
+    ap.add_argument("n_docs", nargs="?", type=int, default=10_000_000)
+    ap.add_argument("--shape", type=int, default=None, metavar="N")
+    ap.add_argument("--work", default=tempfile.gettempdir())
+    args = ap.parse_args()
+    n_docs = args.shape or args.n_docs
+    cores, heap = (2, "6g") if args.shape else (32, "20g")
     from pyspark.sql import functions as F
     from lucene_7_x_9_x_spark.session import local_session
     # NOT bigger = better: an 80g single-JVM heap let garbage accumulate
     # until multi-ten-second full GCs dominated the query tail (130 s
     # outliers on a 4 s query — measured, BENCH/BASELINE.md 10M section);
     # 20g keeps pauses bounded
-    spark = local_session(32, heap="20g", conf={
-        "spark.sql.shuffle.partitions": "64",
+    spark = local_session(cores, heap=heap, conf={
+        "spark.sql.shuffle.partitions": str(2 * cores),
         # ~16MB scan splits over the ~2.1GB/10M-doc corpus -> ~130
         # input-mode segments of ~75k docs: balanced build waves and
         # bounded per-task inversion memory
@@ -49,16 +73,18 @@ def main():
         PhraseQuery, SpanNearQuery, TermQuery)
     from lucene_7_x_9_x_spark.sources.corpus import synth_corpus
 
-    tmp = tempfile.mkdtemp(prefix="scale10m_")
+    tmp = tempfile.mkdtemp(prefix="scale10m_", dir=args.work)
     # the corpus is deterministic — reuse a previously generated copy
-    corpus = f"/tmp/scale10m_corpus_{n_docs}"
-    if n_docs == 10_000_000 and os.path.isdir("/tmp/scale10m_corpus_10m"):
-        corpus = "/tmp/scale10m_corpus_10m"
-    out: dict = {"n_docs": n_docs, "cpus": 32}
+    corpus = os.path.join(args.work, f"scale10m_corpus_{n_docs}")
+    old = os.path.join(args.work, "scale10m_corpus_10m")
+    if n_docs == 10_000_000 and os.path.isdir(old):
+        corpus = old
+    out: dict = {"n_docs": n_docs, "cpus": cores, "heap": heap}
 
     t0 = time.time()
     if not os.path.isdir(corpus):
-        synth_corpus(spark, n_docs, partitions=256).write.mode(
+        files = 256 if not args.shape else -(-n_docs // FILE_DOCS)
+        synth_corpus(spark, n_docs, partitions=files).write.mode(
             "overwrite").parquet(corpus)
     out["gen_secs"] = round(time.time() - t0, 1)
 
@@ -68,6 +94,8 @@ def main():
                       id_cols=["repo", "path", "commit"], text_col="content",
                       segment_by="input")
     out["build_secs"] = round(time.time() - t0, 1)
+    out["segments"] = idx.manifest["num_segments"]
+    out["docs_per_segment"] = round(n_docs / out["segments"])
     out["docs_per_sec"] = round(n_docs / out["build_secs"], 1)
     out["tokens"] = idx.stats["sum_total_term_freq"]
     out["tokens_per_sec"] = round(out["tokens"] / out["build_secs"], 1)
@@ -132,9 +160,11 @@ def main():
     out["batched_qps_hot"] = round(32 / out["batch_32_hot"], 1)
 
     print(json.dumps(out, indent=2))
-    with open(os.path.join(REPO, "BENCH", "scale_10m.json"), "w") as f:
+    name = "scale_10m_shape.json" if args.shape else "scale_10m.json"
+    with open(os.path.join(REPO, "BENCH", name), "w") as f:
         json.dump(out, f, indent=2)
     spark.stop()
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
